@@ -232,7 +232,7 @@ def kmeans_ivf_neighbors(
         # refits when `state` is empty (cells cached by an earlier
         # pass whose centroid memoization never landed), so both
         # artifacts always come from one trainer run.
-        from ..queries.ext_dedup import session_artifact
+        from ..memo import session_artifact
 
         def _cent_from_same_fit() -> DataFrame:
             if "cent" not in state:

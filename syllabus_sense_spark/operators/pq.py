@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..memo import release_checkpoint
+
 M_SUBSPACES = 8
 K_CODES = 16
 N_ITER = 3
@@ -114,20 +116,8 @@ def train_codebook(subs: DataFrame, id_col: str = "vec_id") -> DataFrame:
             )
             .localCheckpoint()
         )
-        _release_checkpoint(prev)
+        release_checkpoint(prev)
     return centroids
-
-
-def _release_checkpoint(df) -> None:
-    """Free a superseded localCheckpoint's blocks (best-effort) — the
-    queries._util.release_checkpoint recipe, duplicated here so the
-    operators package stays import-independent of the query registry."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getName().endswith("LogicalRDD"):
-            plan.rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 — release is advisory
-        pass
 
 
 def assign_codes(

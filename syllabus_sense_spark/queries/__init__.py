@@ -45,77 +45,18 @@ def register(name: str, oracle: str | None = None):
 # last-green round, so the oldest evidence rotates back into the
 # 50-slot window first and stale green rows get re-confirmed.
 _FORCE_RECHECK: list[str] = [
-    # Round-15 state: all 30 r14 force entries landed latest-green r14
-    # rows (CORRECTNESS_r14: 50/50 green) — pruned. Force-listed
-    # below, per the r14 verdict items 8/10:
-    #
-    # (a) the r14 §10 scaled-long conversion tail — registry queries
-    # whose HashAggregate functions changed shape in round 14
-    # (decimal SUM → paired hi/lo long sums) but whose latest driver
-    # green row predates that plan change (outputs were proven
-    # IEEE-bit-identical at two SFs in-round; the driver row is
-    # re-earned here by policy). The nine converted headliners that
-    # sat in r14's window (q1/q2/q5, join_broadcast_lookup,
-    # agg_rollup, window_running_total, events_sessionize_gap30m,
-    # events_rollup_daily_from_hourly, events_session_capped) already
-    # re-earned green and are NOT re-listed.
-    "q3_shipping_priority",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q10_returned_revenue",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q19_disjunctive_filters",
-    "agg_cube_status_priority",
-    "agg_stats_moments",
-    "join_range_bands",
-    "join_range_binned",
-    "join_salted_skew",
-    "join_left_outer_flag",
-    "unpivot_nation_metrics",
-    "stability_width_invariance",
-    "events_sessionize_dynamic_gap",
-    "events_tumbling_hourly",
-    "events_sliding_window_agg",
-    "events_session_window_native",
-    "events_interval_join_views",
-    "events_histogram_bins",
-    "events_gapfill_forward",
-    "customer_rfm_segments",
-    "bucketed_join_roundtrip",
-    "window_moving_average",
-    "orders_revenue_waterfall",
-    "agg_any_value_functional",
-    "customer_revenue_concentration",
-    "part_brand_price_index",
-    "orders_pareto_8020",
-    "supply_concentration_hhi",
-    "orders_mom_growth",
-    "orders_segment_migration",
-    "window_rank_movers",
-    # (b) every query whose plan/output path round 15's optimization
-    # edits actually change (appended as the round lands them):
-    # nearest-direction as-of: two opposite-order sorts over one
-    # exchange -> ONE sort, forward candidate via lead IGNORE NULLS
-    "events_asof_nearest_order",
-    # LPA rounds as driver arithmetic below the edge guard (the
-    # ext_graph union-find pattern); distributed loop above unchanged
-    "graph_label_propagation",
-    # hamming verify moved BEFORE the pair-dedup exchange (filter
-    # drops 96% of candidates; distinct commutes with it)
-    "dedup_simhash",
-    # redundant pair-stream distinct removed (union-find consumers are
-    # multiplicity-insensitive)
-    "dedup_semantic_clusters",
-    # d-way unions of groupBys / top-k sorts collapsed to one explode
-    # + one exchange / one TakeOrdered
-    "sketch_countmin_heavy_hitters",
-    # query-set collect memoized per session (kernel inputs identical;
-    # plans unchanged — listed because the code path changed)
+    # All 43 r15 force entries landed latest-green rows in
+    # CORRECTNESS_r15 — pruned. Force-listed: every query whose
+    # per-session memo code moved into ``memo.session_memo`` (build and
+    # hit decisions unchanged; listed because the code path changed).
+    "training_bpe_merges",
+    "training_bpe_encode",
     "similarity_topk_bruteforce",
     "training_hard_negatives",
+    "graph_label_propagation",
+    "graph_pagerank_trade",
+    "graph_bfs_levels",
+    "training_importance_selection",
 ]
 
 _NEW_THIS_ROUND: list[str] = [
@@ -353,7 +294,6 @@ def load_all_queries() -> None:
         relational11,
         ext_text10,
         events22,
-        relational12,
         dq_queries7,
         stats_queries,
         agg_families5,

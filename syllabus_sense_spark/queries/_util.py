@@ -22,6 +22,8 @@ import threading
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..memo import release_checkpoint, rotate_checkpoint  # noqa: F401 — re-exported
+
 
 def epoch_us(col: str | Column) -> Column:
     """Exact integer microseconds since epoch, NTZ-safe.
@@ -269,41 +271,6 @@ def scratch_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT[0])
 
 
-def release_checkpoint(df) -> None:
-    """Free a localCheckpoint-ed DataFrame's storage blocks
-    (best-effort, never fatal). localCheckpoint persists its RDD at
-    MEMORY_AND_DISK and nothing unpersists it until the JVM-side RDD
-    is garbage-collected, so in a long-lived session every iterative
-    query's superseded per-round checkpoints accumulate until storage
-    exhausts (observed: an 8-heavy-query sf10 probe session died on
-    exactly this). Call on a checkpoint the moment its successor is
-    materialized, and on loop-scoped inputs when the final result no
-    longer reads them. No-op for non-checkpoint plans.
-
-    PRECONDITION — no live readers: a localCheckpoint RDD's lineage is
-    TRUNCATED, so any still-unmaterialized DataFrame over the released
-    checkpoint does not recompute — its next action fails hard with
-    "checkpoint block not found". Release only after every downstream
-    consumer has run its action (the loop call sites materialize the
-    successor checkpoint first; `rotate_checkpoint` defers release to
-    the next invocation for exactly this reason)."""
-    if df is None:
-        return
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getName().endswith("LogicalRDD"):
-            import logging
-
-            logging.getLogger(__name__).debug(
-                "release_checkpoint: unpersisting RDD %s (any live "
-                "reader of this checkpoint now fails on its next action)",
-                plan.rdd().id(),
-            )
-            plan.rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 — release is advisory
-        pass
-
-
 def ser_checkpoint(df):
     """localCheckpoint with SERIALIZED MEMORY_AND_DISK storage — the
     posture for corpus-scale tables (band/kept tables, token tables,
@@ -326,51 +293,3 @@ def ser_checkpoint(df):
     from pyspark.storagelevel import StorageLevel
 
     return df.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
-
-
-# One live checkpoint GENERATION per call site: query functions whose
-# RESULT is backed by a per-invocation localCheckpoint cannot release
-# it before returning (the caller's action still reads it), so they
-# register it here instead — the NEXT invocation of the same site
-# releases the previous generation. Bounds a long session at one live
-# checkpoint per site instead of one per call (the sf10 session-death
-# class: a 19-query probe session accumulated dead band-table
-# checkpoints until storage exhausted).
-_CHECKPOINT_GENERATIONS: dict[tuple[str, str], list] = {}
-
-
-def rotate_checkpoint(key: str, *dfs):
-    """Register ``dfs`` (localCheckpoint-backed DataFrames produced by
-    THIS invocation of call site ``key``) as the site's live
-    generation, releasing the previous generation's blocks.
-
-    PRECONDITION — same as release_checkpoint, shifted one call: by
-    the time a site is invoked again, every consumer of its PREVIOUS
-    result must have materialized (the driver/bench/oracle harnesses
-    collect each query's result before running the next; a caller that
-    holds invocation N's lazy result across invocation N+1 fails hard
-    on its next action). Returns the single df (or the tuple) for
-    inline wrapping.
-
-    Generations are keyed by (applicationId, call site): after a
-    session restart in the same process the first invocation must not
-    "rotate" against a dead session's handles (release on them only
-    swallows a py4j error, and the registry would retain them
-    forever). Entries from OTHER applications are pruned on every
-    rotate — best-effort released if their session is somehow still
-    alive, dropped either way.
-    """
-    try:
-        app = dfs[0].sparkSession.sparkContext.applicationId
-    except Exception:  # noqa: BLE001 — a dying session still rotates
-        app = ""
-    for stale in [k for k in _CHECKPOINT_GENERATIONS if k[0] != app]:
-        for d in _CHECKPOINT_GENERATIONS.pop(stale):
-            release_checkpoint(d)
-    full_key = (app, key)
-    prev = _CHECKPOINT_GENERATIONS.pop(full_key, None)
-    if prev:
-        for d in prev:
-            release_checkpoint(d)
-    _CHECKPOINT_GENERATIONS[full_key] = list(dfs)
-    return dfs[0] if len(dfs) == 1 else dfs

@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..memo import clear as clear_session_artifacts  # noqa: F401 — audit entry point
+from ..memo import session_artifact
 from ..tables import load
 from . import register
 from ._util import rotate_checkpoint, ser_checkpoint
@@ -113,73 +115,16 @@ def _corpus(spark, sf_dir) -> DataFrame:
 # --- session-persistent fingerprint table ----------------------------------
 # The production posture: the corpus's distinct (doc_id, fingerprint)
 # table is a persisted artifact every dedup job probes, not something
-# each query re-derives. Memoized per (Spark application, sf_dir), so
-# dedup_minhash_lsh and dedup_incremental_index share ONE
-# shingle+md5+distinct pass per session — the cold-start cost the
-# per-query .cache() could not amortize across queries.
-
-_FP_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_FP_BUILDS = 0  # cache-miss counter; tests assert sharing via this
-
-
-def _persisted_fingerprints(
-    spark, sf_dir: str, kind: str, builder, persist: bool = True
-) -> DataFrame:
-    """Session-scoped artifact memo — the production posture where
-    dedup/ANN jobs PROBE a persisted index artifact (fingerprint
-    table, cell assignment) instead of re-deriving it per query.
-    ``persist=False`` for builders whose result is already
-    materialized (localCheckpoint)."""
-    global _FP_BUILDS
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    df = _FP_CACHE.get(key)
-    if df is None:
-        _FP_BUILDS += 1
-        df = builder()
-        # Honor the plan-audit mode (tables.py does the same): a
-        # persist() here registers a cache entry whose canonicalized
-        # plan substitutes into OTHER queries' matching subplans
-        # (aliases are stripped in canonicalization), turning their
-        # stats-based broadcast decisions into unknown-size SMJs and
-        # making the audit order-dependent.
-        import os
-
-        if persist and not os.environ.get("SPARK_GRAFT_NO_PERSIST"):
-            df = df.persist()
-        _FP_CACHE[key] = df
-    return df
-
-
-# Public alias: the memo is generic (keyed by (app, sf_dir, kind)),
-# used for every session-scoped corpus artifact — fingerprint tables,
-# IVF cell assignments, prefix postings, graph edge snapshots.
-session_artifact = _persisted_fingerprints
-
-
-def clear_session_artifacts() -> None:
-    """Drop every memoized session artifact (unpersisting cached
-    plans) so the next probe rebuilds from scratch. Audits that must
-    prove a re-execution property use this — e.g. the partition-count
-    invariance audit, where an artifact materialized under the OLD
-    shuffle width would otherwise be silently reused by the second
-    run, weakening PASS to "probe of a stale index matched"."""
-    from ._util import release_checkpoint
-
-    for df in _FP_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:  # noqa: BLE001 — a dead session is fine here
-            pass
-        # persist=False artifacts are localCheckpoint-backed — free
-        # their blocks too (no live readers by contract: callers clear
-        # only between from-scratch audit runs)
-        release_checkpoint(df)
-    _FP_CACHE.clear()
+# each query re-derives. Memoized per (Spark application, sf_dir)
+# (``memo.session_artifact``), so dedup_minhash_lsh and
+# dedup_incremental_index share ONE shingle+md5+distinct pass per
+# session — the cold-start cost the per-query .cache() could not
+# amortize across queries.
 
 
 def base_fingerprints(spark, sf_dir: str) -> DataFrame:
     """(doc_id, h) for the raw documents corpus — the persisted index."""
-    return _persisted_fingerprints(
+    return session_artifact(
         spark,
         sf_dir,
         "base",
@@ -198,7 +143,7 @@ def _planted_dupe_fingerprints(spark, sf_dir: str) -> DataFrame:
         )
         return shingle_hashes(dupes)
 
-    return _persisted_fingerprints(spark, sf_dir, "planted_dupes", build)
+    return session_artifact(spark, sf_dir, "planted_dupes", build)
 
 
 def planted_corpus_fingerprints(spark, sf_dir: str) -> DataFrame:
@@ -219,7 +164,7 @@ def planted_corpus_fingerprints(spark, sf_dir: str) -> DataFrame:
         n = max(both.sparkSession.sparkContext.defaultParallelism, 1)
         return both.coalesce(n)
 
-    return _persisted_fingerprints(spark, sf_dir, "planted_all", build)
+    return session_artifact(spark, sf_dir, "planted_all", build)
 
 
 def planted_corpus_fingerprint_arrays(spark, sf_dir: str) -> DataFrame:
@@ -238,7 +183,7 @@ def planted_corpus_fingerprint_arrays(spark, sf_dir: str) -> DataFrame:
             .agg(F.collect_list("h").alias("hs"))
         )
 
-    return _persisted_fingerprints(
+    return session_artifact(
         spark, sf_dir, "planted_fp_arrays", build, persist=False
     )
 
@@ -257,7 +202,7 @@ def planted_corpus_doc_freq(spark, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("df"))
         )
 
-    return _persisted_fingerprints(spark, sf_dir, "planted_all_df", build)
+    return session_artifact(spark, sf_dir, "planted_all_df", build)
 
 
 def planted_corpus_token_arrays(spark, sf_dir: str) -> DataFrame:
@@ -279,7 +224,7 @@ def planted_corpus_token_arrays(spark, sf_dir: str) -> DataFrame:
             )
         )
 
-    return _persisted_fingerprints(spark, sf_dir, "planted_all_arrays", build)
+    return session_artifact(spark, sf_dir, "planted_all_arrays", build)
 
 
 def shingle_docs_raw(corpus: DataFrame, n: int = 3) -> DataFrame:
@@ -447,13 +392,13 @@ def planted_kept_bands(spark, sf_dir: str) -> DataFrame:
     shared by every consumer of the planted corpus's candidate pairs
     (dedup_minhash_lsh, dedup_components — same fingerprint set by
     construction). Serialized checkpoint storage, released via
-    ``clear_session_artifacts`` like every other artifact."""
+    ``memo.clear`` like every other artifact."""
 
     def build():
         sigs = minhash_signatures(planted_corpus_fingerprints(spark, sf_dir))
         return ser_checkpoint(_kept_bands(lsh_bands(sigs)))
 
-    return _persisted_fingerprints(
+    return session_artifact(
         spark, sf_dir, "planted_kept_bands", build, persist=False
     )
 

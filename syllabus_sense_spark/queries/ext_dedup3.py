@@ -95,7 +95,7 @@ def prefix_index(spark, sf_dir):
     the materialized artifact an All-Pairs system maintains per
     corpus snapshot (the df-ordered prefix postings), probed by each
     dedup run instead of re-ranking the full token table per query."""
-    from .ext_dedup import _persisted_fingerprints
+    from ..memo import session_artifact
 
     def build():
         tok = planted_corpus_fingerprints(spark, sf_dir)
@@ -123,7 +123,7 @@ def prefix_index(spark, sf_dir):
         )
         return ranked.filter(F.col("rk") <= p).select("doc_id", "h", "rk", "s")
 
-    return _persisted_fingerprints(spark, sf_dir, "prefix_index", build)
+    return session_artifact(spark, sf_dir, "prefix_index", build)
 
 
 @register("dedup_prefix_filter", _PREFIX_ORACLE)

@@ -68,7 +68,7 @@ def _containment_groups(spark, sf_dir):
     the full fingerprint table → one): the doc list per hash IS the
     candidate set, and with df ≤ {cap} the C(df,2) pair expansion is
     a bounded JVM array expression, not a join."""
-    from .ext_dedup import _persisted_fingerprints
+    from ..memo import session_artifact
 
     def build():
         fp = planted_corpus_fingerprints(spark, sf_dir)
@@ -79,7 +79,7 @@ def _containment_groups(spark, sf_dir):
             .select("docs")
         )
 
-    return _persisted_fingerprints(spark, sf_dir, "containment_groups", build)
+    return session_artifact(spark, sf_dir, "containment_groups", build)
 
 
 def _containment_sizes(spark, sf_dir):
@@ -90,7 +90,7 @@ def _containment_sizes(spark, sf_dir):
     warm run at sf0.1 in the r14 profile); as an artifact both
     branches broadcast-probe one doc-sized table. Same posture as
     the fingerprint artifacts on the minhash side."""
-    from .ext_dedup import _persisted_fingerprints
+    from ..memo import session_artifact
 
     def build():
         grp = _containment_groups(spark, sf_dir)
@@ -100,7 +100,7 @@ def _containment_sizes(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("n"))
         )
 
-    return _persisted_fingerprints(spark, sf_dir, "containment_sizes", build)
+    return session_artifact(spark, sf_dir, "containment_sizes", build)
 
 
 @register("dedup_containment", _CONTAINMENT_ORACLE)

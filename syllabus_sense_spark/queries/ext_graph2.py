@@ -53,12 +53,6 @@ _ITER = 3
 # plans and timings unchanged at every gate tier.
 _BROADCAST_MAX_NODES = 2_000_000
 
-# One exact node count per (app, sf_dir), memoized: a single
-# countDistinct aggregate over the checkpointed edge artifact (~2 s at
-# sf30, amortized across pagerank + BFS + repeated runs in a session).
-_NODE_COUNT_CACHE: dict[tuple[str, str], int] = {}
-
-
 def trade_edges(spark, sf_dir: str):
     """Session-persisted graph snapshot: the distinct (cust, supp)
     trade pairs feed the degree aggregate, both edge directions, and
@@ -78,10 +72,10 @@ def trade_edges(spark, sf_dir: str):
     halves at once: blocks stored as compact byte buffers that evict
     and re-read without object churn (the sf30 posture), AND an opaque
     LogicalRDD leaf so the unrolled iteration plans stay flat (the
-    sf0.1 posture). Released via ``clear_session_artifacts`` like
+    sf0.1 posture). Released via ``memo.clear`` like
     every persist=False checkpoint-backed artifact."""
     from ._util import ser_checkpoint
-    from .ext_dedup import session_artifact
+    from ..memo import session_artifact
 
     def _build_edges():
         orders = load(spark, sf_dir, "orders")
@@ -101,16 +95,19 @@ def trade_edges(spark, sf_dir: str):
 
 
 def _trade_node_count(spark, sf_dir: str, edges) -> int:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    n = _NODE_COUNT_CACHE.get(key)
-    if n is None:
+    """One exact node count per session (``memo.session_memo``): a
+    single countDistinct aggregate over the checkpointed edge artifact
+    (~2 s at sf30, amortized across pagerank + BFS + repeated runs)."""
+    from ..memo import session_memo
+
+    def build() -> int:
         row = edges.agg(
             F.countDistinct("cust").alias("nc"),
             F.countDistinct("supp").alias("ns"),
         ).first()
-        n = row.nc + row.ns
-        _NODE_COUNT_CACHE[key] = n
-    return n
+        return row.nc + row.ns
+
+    return session_memo(spark, sf_dir, "trade_node_count", build)
 
 
 def trade_node_hint(spark, sf_dir: str, edges):
@@ -146,7 +143,7 @@ def trade_und(spark, sf_dir: str, edges):
     )
     if _trade_node_count(spark, sf_dir, edges) <= _BROADCAST_MAX_NODES:
         return und
-    from .ext_dedup import session_artifact
+    from ..memo import session_artifact
 
     def build():
         # columnar persist here (lineage over the checkpointed edge
@@ -166,7 +163,7 @@ def _trade_deg(spark, sf_dir: str, und):
     """(node, od): out-degree of the doubled trade graph, session-
     persisted (the degree index every pagerank invocation probes)."""
     from ._util import ser_checkpoint
-    from .ext_dedup import session_artifact
+    from ..memo import session_artifact
 
     def build():
         return ser_checkpoint(

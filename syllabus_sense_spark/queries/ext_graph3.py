@@ -80,7 +80,7 @@ def copurchase_pair_counts(spark, sf_dir: str):
     runs once per session, not once per query. localCheckpoint inside
     the build — iterative consumers need flat lineage, and the memo
     stores the already-materialized plan (persist=False)."""
-    from .ext_dedup import session_artifact
+    from ..memo import session_artifact
 
     def build():
         return (

@@ -93,7 +93,7 @@ def _lpa_adj(spark, sf_dir):
     _N_ROUNDS joins AND by the l0 distinct, so it must be a
     materialized leaf; as an artifact it is also shared across
     invocations instead of re-checkpointed per query — r14)."""
-    from .ext_dedup import session_artifact
+    from ..memo import session_artifact
     from ._util import ser_checkpoint
 
     def build():
@@ -107,12 +107,6 @@ def _lpa_adj(spark, sf_dir):
         )
 
     return session_artifact(spark, sf_dir, "lpa_adj", build, persist=False)
-
-
-# adjacency row count per (applicationId, sf_dir) — the driver-guard
-# predicate costs one job on the checkpointed artifact; a session asks
-# it once, not per invocation (the ext_graph2 node-count pattern)
-_ADJ_COUNT_CACHE: dict = {}
 
 
 def _lpa_driver_rounds(adj_rows) -> dict:
@@ -151,13 +145,14 @@ def graph_label_propagation(spark, sf_dir):
     # rounds run as exact driver arithmetic on the collected adjacency
     # and return as an Arrow-backed local DataFrame; above it the
     # distributed loop below is unchanged (the sf1+ graphs stay
-    # distributed, so the budget gates keep exercising it).
+    # distributed, so the budget gates keep exercising it). The guard
+    # predicate costs one job on the checkpointed artifact; a session
+    # asks it once, not per invocation (the ext_graph2 node-count
+    # pattern).
+    from ..memo import session_memo
     from .ext_graph import _DRIVER_MAX_EDGES
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    n_adj = _ADJ_COUNT_CACHE.get(key)
-    if n_adj is None:
-        n_adj = _ADJ_COUNT_CACHE[key] = adj.count()
+    n_adj = session_memo(spark, sf_dir, "lpa_adj_count", adj.count)
     if n_adj <= _DRIVER_MAX_EDGES:
         import pandas as pd
 

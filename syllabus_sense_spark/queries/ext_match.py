@@ -194,7 +194,7 @@ def match_fuzzy_parts_capped(spark, sf_dir):
     # INDEX of the part dimension, corpus-pure, probed by every run —
     # the same class as the LSH band table.
     from ._util import ser_checkpoint
-    from .ext_dedup import session_artifact
+    from ..memo import session_artifact
 
     def _build_ranked():
         return ser_checkpoint(

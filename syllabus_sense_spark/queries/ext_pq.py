@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from ..operators.pq import assign_codes, pq_search, subvectors, train_codebook
 from ..tables import load
 from . import register
-from .ext_dedup import session_artifact
+from ..memo import session_artifact
 
 _N_QUERIES = 5
 _DIM = 64

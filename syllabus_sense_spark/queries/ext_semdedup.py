@@ -137,7 +137,7 @@ def semdedup_cell_table(spark, sf_dir):
     Remaining asymptotic: N×n_cells FLOPs with n_cells ∝ N (the
     oracle-static centroid stride) is N²/251 — the SemDeDup
     coarse-assignment cost, documented in SCALE.md."""
-    from .ext_dedup import _persisted_fingerprints
+    from ..memo import session_artifact
 
     def build():
         import numpy as np
@@ -193,7 +193,7 @@ def semdedup_cell_table(spark, sf_dir):
             )
         )
 
-    return _persisted_fingerprints(spark, sf_dir, "semdedup_cells", build, persist=False)
+    return session_artifact(spark, sf_dir, "semdedup_cells", build, persist=False)
 
 
 @register("dedup_semantic_clusters", _SEMDEDUP_ORACLE)

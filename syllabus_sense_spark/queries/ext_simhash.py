@@ -149,7 +149,7 @@ def simhash_fp_table(spark, sf_dir):
       fingerprint expression into the band-val join keys and the
       hamming join-condition filter (interpreted Predicate path).
     """
-    from .ext_dedup import _persisted_fingerprints
+    from ..memo import session_artifact
 
     def build():
         from ._util import release_checkpoint
@@ -161,7 +161,7 @@ def simhash_fp_table(spark, sf_dir):
         release_checkpoint(shingled)
         return fp
 
-    return _persisted_fingerprints(spark, sf_dir, "simhash_fp", build, persist=False)
+    return session_artifact(spark, sf_dir, "simhash_fp", build, persist=False)
 
 
 @register("dedup_simhash", _SIMHASH_ORACLE)

@@ -76,24 +76,21 @@ _SQL_COSINE = (
     "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
 )
 
-# The exact scorers' query set, collected once per (applicationId,
-# sf_dir) — r15 (guide §2.4, §1.2): both Arrow matrix scorers
-# (similarity_topk_bruteforce, training_hard_negatives) re-ran the
-# filter+collect corpus scan per invocation to rebuild the identical
-# |Q| = N/100 query tier. Corpus-pure input in the doctrine's
-# driver-memo class (BPE vocabulary, importance totals) and the same
-# memory class as the broadcast relation the r14 kernels replaced.
-_QUERY_SET_CACHE: dict = {}
-
-
 def _query_set(spark, sf_dir):
-    """(qids, qlabels, qmat, qn) for the vec_id % 100 == 0 query tier.
-    Norms accumulate per DIMENSION in index order — the bit-exactness
-    device both scorers rely on (each query's norm is the identical
-    left-associated IEEE sum as the unrolled JVM dot / DuckDB fold)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _QUERY_SET_CACHE.get(key)
-    if got is None:
+    """(qids, qlabels, qmat, qn) for the vec_id % 100 == 0 query tier,
+    collected once per session (``memo.session_memo``) — r15 (guide
+    §2.4, §1.2): both Arrow matrix scorers (similarity_topk_bruteforce,
+    training_hard_negatives) re-ran the filter+collect corpus scan per
+    invocation to rebuild the identical |Q| = N/100 query tier.
+    Corpus-pure input in the doctrine's driver-memo class (BPE
+    vocabulary, importance totals) and the same memory class as the
+    broadcast relation the r14 kernels replaced. Norms accumulate per
+    DIMENSION in index order — the bit-exactness device both scorers
+    rely on (each query's norm is the identical left-associated IEEE
+    sum as the unrolled JVM dot / DuckDB fold)."""
+    from ..memo import session_memo
+
+    def build():
         import numpy as np
 
         q_pdf = (
@@ -114,8 +111,9 @@ def _query_set(spark, sf_dir):
             qn = np.sqrt(qacc)
         else:
             qn = np.zeros(0)
-        got = _QUERY_SET_CACHE[key] = (qids, qlabels, qmat, qn)
-    return got
+        return qids, qlabels, qmat, qn
+
+    return session_memo(spark, sf_dir, "sim_query_set", build)
 
 
 _BRUTE_ORACLE = f"""
@@ -396,7 +394,7 @@ def similarity_ann_lsh(spark, sf_dir):
     # the SRP bucket INDEX of the corpus — the LSH hash table an ANN
     # service persists and probes.
     from ._util import ser_checkpoint
-    from .ext_dedup import session_artifact
+    from ..memo import session_artifact
 
     def _build_bucketed():
         return ser_checkpoint(
@@ -584,7 +582,7 @@ def ivf_assignments(spark, sf_dir):
             .select("vec_id", "label", "v", "nrm", "cent_id", "cent_rank")
         )
 
-    from .ext_dedup import session_artifact
+    from ..memo import session_artifact
 
     return session_artifact(spark, sf_dir, "ivf_cell_assign", _build_assigned)
 

@@ -83,9 +83,6 @@ LIMIT {_TOP_K}
 """
 
 
-_VOCAB_TOTALS_CACHE: dict = {}
-
-
 def _importance_vocab(spark, sf_dir):
     """The (tok, c_r, c_t) dictionary as a SESSION ARTIFACT (it
     derives purely from the corpus — the DF-table/BPE-word-types
@@ -97,8 +94,8 @@ def _importance_vocab(spark, sf_dir):
     count); c_t is 0, not NULL, for tokens with no target
     occurrences, which the old left-join+coalesce produced
     identically."""
+    from ..memo import session_artifact, session_memo
     from ._util import ser_checkpoint
-    from .ext_dedup import session_artifact
 
     def build():
         docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "text")
@@ -118,13 +115,14 @@ def _importance_vocab(spark, sf_dir):
     vocab = session_artifact(
         spark, sf_dir, "importance_vocab", build, persist=False
     )
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _VOCAB_TOTALS_CACHE:
+
+    def totals():
         row = vocab.agg(
             F.sum("c_r").alias("t_r"), F.sum("c_t").alias("t_t")
         ).first()
-        _VOCAB_TOTALS_CACHE[key] = (int(row.t_r), int(row.t_t))
-    t_r, t_t = _VOCAB_TOTALS_CACHE[key]
+        return int(row.t_r), int(row.t_t)
+
+    t_r, t_t = session_memo(spark, sf_dir, "importance_totals", totals)
     return vocab, t_r, t_t
 
 

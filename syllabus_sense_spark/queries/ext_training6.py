@@ -153,7 +153,7 @@ def _word_types(spark, sf_dir):
     query reads. Re-deriving it per invocation re-ran the corpus
     explode+groupBy each time (r14); the merge LOOP below stays live
     per invocation (its state is the query's result path)."""
-    from .ext_dedup import session_artifact
+    from ..memo import session_artifact
     from ._util import ser_checkpoint
 
     def build():
@@ -179,22 +179,23 @@ def _word_types(spark, sf_dir):
 # overhead) collapse to zero. Above it (Heap's-law vocab growth at
 # corpus scale) the distributed checkpointed loop below is the path.
 _DRIVER_MAX_TYPES = 65536
-_TYPES_CACHE: dict = {}
 
 
 def _collected_types(spark, sf_dir):
     """The vocabulary as a list[(seq, freq)] when it fits under the
-    driver guard, else None. Memoized per (applicationId, sf_dir) —
-    one count + one collect per session, both over the word-type
-    artifact (a serialized checkpoint, not the corpus)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _TYPES_CACHE:
+    driver guard, else None. Memoized per session
+    (``memo.session_memo``) — one count + one collect per session,
+    both over the word-type artifact (a serialized checkpoint, not the
+    corpus)."""
+    from ..memo import session_memo
+
+    def build():
         w = _word_types(spark, sf_dir)
-        types = None
-        if w.count() <= _DRIVER_MAX_TYPES:
-            types = [(r["seq"], r["freq"]) for r in w.collect()]
-        _TYPES_CACHE[key] = types
-    return _TYPES_CACHE[key]
+        if w.count() > _DRIVER_MAX_TYPES:
+            return None
+        return [(r["seq"], r["freq"]) for r in w.collect()]
+
+    return session_memo(spark, sf_dir, "bpe_collected_types", build)
 
 
 def _driver_merges(types):
@@ -281,7 +282,7 @@ def _run_merges(spark, sf_dir):
             release_checkpoint(prev_words)
     # survivors back the returned DataFrames; the next invocation
     # rotates them out as one generation (NOT `initial` — that is the
-    # session artifact, released only via clear_session_artifacts)
+    # session artifact, released only via memo.clear)
     rotate_checkpoint("ext_training6._run_merges", words, *bests)
     return merge_rows, initial, words
 

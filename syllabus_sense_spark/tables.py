@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .errors import TableNotFoundError
+from .memo import clear as clear_load_cache  # noqa: F401 — audit entry point
+from .memo import session_memo
 from .session import tune
 
 TABLE_NAMES = (
@@ -34,30 +36,12 @@ TABLE_NAMES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Memoized per (applicationId, sf_dir, table): the correctness driver
-# runs ~100 queries against the same session + sf_dir, and re-reading
-# the parquet footer / re-analyzing the schema per query is pure waste.
-_LOAD_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
 # Below this on-disk size we additionally ``persist()`` the table:
 # at verification scale (sf0.01, whole dir < 2 MB) one in-memory copy
 # amortizes the scan across every query; at bench/production scale the
 # table exceeds the threshold and keeps the vectorized parquet scan
 # with predicate pushdown — the plan that matters at 100 TB.
 _PERSIST_MAX_BYTES = 4 * 1024 * 1024
-
-
-def clear_load_cache() -> None:
-    """Drop the per-session table memo (unpersisting the small-table
-    copies). Companion to ``queries.ext_dedup.clear_session_artifacts``
-    for audits that must re-execute everything from the parquet scans
-    up under a changed runtime config."""
-    for df in _LOAD_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:  # noqa: BLE001 — a dead session is fine here
-            pass
-    _LOAD_CACHE.clear()
 
 
 def _disk_size(path: str) -> int:
@@ -74,25 +58,29 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one harness table as a DataFrame."""
     if name not in TABLE_NAMES:
         raise TableNotFoundError(name, TABLE_NAMES)
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
-    hit = _LOAD_CACHE.get(key)
-    if hit is not None:
-        return hit
-    tune(spark)
+    # Memoized per (applicationId, sf_dir, table): the correctness
+    # driver runs ~100 queries against the same session + sf_dir, and
+    # re-reading the parquet footer / re-analyzing the schema per query
+    # is pure waste.
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # TIMESTAMP(NANOS) read as long (see session.RUNTIME_CONF);
-        # truncate to micros with integer division — double division
-        # would lose precision above 2^53 ns.
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    if (
-        _disk_size(path) <= _PERSIST_MAX_BYTES
-        and not os.environ.get("SPARK_GRAFT_NO_PERSIST")
-    ):
-        df = df.persist()
-    _LOAD_CACHE[key] = df
-    return df
+
+    def build() -> DataFrame:
+        tune(spark)
+        df = spark.read.parquet(path)
+        if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+            # TIMESTAMP(NANOS) read as long (see session.RUNTIME_CONF);
+            # truncate to micros with integer division — double division
+            # would lose precision above 2^53 ns.
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+        return df
+
+    return session_memo(
+        spark,
+        sf_dir,
+        f"table_{name}",
+        build,
+        persist=_disk_size(path) <= _PERSIST_MAX_BYTES,
+    )
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -9,7 +9,7 @@ checkpoints. The package discipline under test:
   materializes (``release_checkpoint``);
 - result-backing checkpoints are registered per call site and the NEXT
   invocation releases the previous generation (``rotate_checkpoint``);
-- session artifacts (the ``session_artifact`` memo) are built once per
+- session artifacts (``memo.session_artifact``) are built once per
   (app, sf_dir, kind) — bounded by construction, exempt.
 
 The law: live persisted-RDD count after N invocations equals the count
@@ -19,11 +19,7 @@ site, but must not grow with N).
 
 from pyspark.sql import Row
 
-from syllabus_sense_spark.queries._util import (
-    _CHECKPOINT_GENERATIONS,
-    release_checkpoint,
-    rotate_checkpoint,
-)
+from syllabus_sense_spark.memo import _STORE, release_checkpoint, rotate_checkpoint
 
 
 def _n_persistent(spark) -> int:
@@ -47,31 +43,31 @@ def test_rotate_checkpoint_bounds_generations(spark):
                 "rotation leaked a superseded generation"
             )
     finally:
-        for d in _CHECKPOINT_GENERATIONS.pop((app, key), []):
+        for d in _STORE.pop((app, "", key), []):
             release_checkpoint(d)
 
 
 def test_rotate_checkpoint_prunes_dead_app_generations(spark):
-    """r13 ADVICE: generations are keyed by (applicationId, site), and
-    entries left behind by a DIFFERENT application (a restarted session
-    in the same process) are pruned on the next rotate instead of being
-    retained forever or 'rotated' as if they were this session's
-    state."""
+    """r13 ADVICE: generations are keyed by (applicationId, "", site)
+    in the session memo, and entries left behind by a DIFFERENT
+    application (a restarted session in the same process) are pruned
+    on the next rotate instead of being retained forever or 'rotated'
+    as if they were this session's state."""
     key = "test.rotate.appkey"
     app = spark.sparkContext.applicationId
     try:
-        stale_key = ("dead-app-id", key)
-        _CHECKPOINT_GENERATIONS[stale_key] = [spark.range(10).localCheckpoint()]
+        stale_key = ("dead-app-id", "", key)
+        _STORE[stale_key] = [spark.range(10).localCheckpoint()]
         live = spark.range(20).localCheckpoint()
         rotate_checkpoint(key, live)
-        assert stale_key not in _CHECKPOINT_GENERATIONS, (
+        assert stale_key not in _STORE, (
             "dead-application generation survived a rotate"
         )
-        assert _CHECKPOINT_GENERATIONS[(app, key)] == [live], (
+        assert _STORE[(app, "", key)] == [live], (
             "live generation not keyed by (applicationId, site)"
         )
     finally:
-        for d in _CHECKPOINT_GENERATIONS.pop((app, key), []):
+        for d in _STORE.pop((app, "", key), []):
             release_checkpoint(d)
 
 

@@ -47,21 +47,8 @@ def _multiset(rows, cols):
     return Counter(tuple(_key(r[i]) for i in order) for r in rows)
 
 
-def _clear_session_memos() -> None:
-    """Drop every per-session memo (table loads, artifact indexes) so
-    the second pass re-executes EVERYTHING under the new width. An
-    artifact (fingerprint table, IVF cells, graph edge snapshot)
-    materialized during the first pass would otherwise be silently
-    probed by the second — PASS would then mean "stale-index probe
-    matched", not partition-count invariance of the build itself."""
-    from syllabus_sense_spark import tables
-    from syllabus_sense_spark.queries import ext_dedup
-
-    ext_dedup.clear_session_artifacts()
-    tables.clear_load_cache()
-
-
 def main() -> int:
+    from syllabus_sense_spark import memo
     from syllabus_sense_spark import queries as q
     from syllabus_sense_spark.session import get_spark
 
@@ -89,11 +76,18 @@ def main() -> int:
 
     try:
         pass_a = run_pass(default)
-        _clear_session_memos()
+        # Drop every per-session memo (table loads, artifact indexes,
+        # collected driver values) so the second pass re-executes
+        # EVERYTHING under the new width. An artifact (fingerprint
+        # table, IVF cells, graph edge snapshot) or a vocabulary
+        # collected during the first pass would otherwise be silently
+        # probed by the second — PASS would then mean "stale-index
+        # probe matched", not partition-count invariance of the build.
+        memo.clear()
         pass_b = run_pass("7")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", default)
-        _clear_session_memos()
+        memo.clear()
 
     failed = []
     for name in names:
