@@ -97,6 +97,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = ap.parse_args(argv)
 
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from .operators.sessionize import group_topics, sessionize_elements
@@ -130,9 +131,12 @@ def main(argv: list[str] | None = None) -> int:
     writer = (
         write_questions_parquet if args.format == "parquet" else write_questions_json
     )
-    writer(questions, args.output)
-    n = spark.read.parquet(args.output).count() if args.format == "parquet" else None
-    print(f"wrote questions to {args.output}" + (f" ({n} rows)" if n is not None else ""))
+    # Count the rows this run writes as a side metric of the write
+    # job itself: re-reading the append-mode sink would count every
+    # earlier run's rows too, and costs a partition-discovery job.
+    written = Observation("cli_sink")
+    writer(questions.observe(written, F.count(F.lit(1)).alias("rows")), args.output)
+    print(f"wrote questions to {args.output} ({written.get['rows']} rows)")
     return 0
 
 

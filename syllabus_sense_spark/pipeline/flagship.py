@@ -1,5 +1,7 @@
-"""The flagship pipeline — the reference's whole program as ONE lazy
-DataFrame expression (SURVEY.md §3 "Spark recasting").
+"""The flagship pipeline — the reference's whole program as one
+DataFrame expression (SURVEY.md §3 "Spark recasting"). One step is
+eager: the subtopic dimension is checkpointed when the chain is
+built, so building it runs extraction (the model call) as a job.
 
 Reference control flow (graph + driver loop,
 _base_syllabus_ai_graph_template.py:114-159):
@@ -17,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import rotate_checkpoint
 from ..operators.batching import assign_batches, mark_batch_status
 from ..operators.sessionize import group_topics, sessionize_elements
 from ..sources.synthetic import filtered_elements
@@ -36,16 +39,27 @@ def flagship_from_elements(
     Shared by the batch flagship and the streaming drain
     (``streaming/flagship.py``), which feeds whole documents per
     micro-batch — the chain itself is oblivious to which.
+
+    Building the chain runs one Spark job: extraction, checkpointed
+    as the subtopic dimension. The result reads that per-call
+    checkpoint, which the NEXT call releases
+    (``memo.rotate_checkpoint``): run its action before invoking the
+    chain again.
     """
     sess = sessionize_elements(elements, doc_col=doc_col)
     topics = group_topics(sess, doc_col=doc_col)
     topics = topics.withColumnRenamed(doc_col, "doc_id")
 
     # The subtopic dim feeds two branches (plan generation + the A12
-    # context join); cache it so the extraction UDF chain runs once.
-    # It is a dimension table (one row per subtopic), small at any
-    # corpus scale relative to the question fact stream.
-    subtopics = extract_subtopics(topics, subject=subject).cache()
+    # context join), so it is materialized once and extraction (the
+    # model call) runs once. A localCheckpoint, not a .cache(): AQE
+    # cannot coalesce a shuffle inside a cached plan, and every empty
+    # Python task pays a worker round trip; the checkpoint job is
+    # sized by AQE. rotate_checkpoint frees the previous call's
+    # blocks, so a session holds one generation.
+    subtopics = rotate_checkpoint(
+        "flagship_subtopics", extract_subtopics(topics, subject=subject).localCheckpoint()
+    )
     plan = plan_questions(subtopics)
     batched = mark_batch_status(
         assign_batches(
@@ -68,12 +82,13 @@ def flagship_from_elements(
     # parallelism-first) folds the upstream window exchange to 1-2
     # tasks and the Python model-call stand-in runs near-serial —
     # measured 1.80 → 1.19 s at sf0.1 with the explicit fan-out. An
-    # explicit-N round-robin repartition is exempt from AQE
-    # coalescing; N = defaultParallelism scales with the cluster (the
-    # per-row generation cost is what bounds this stage at any SF, so
-    # one balanced partition per core is the right shape).
+    # explicit-N repartition is exempt from AQE coalescing; N =
+    # defaultParallelism scales with the cluster. Hashing on topic
+    # keeps every core busy while topics outnumber cores, and puts
+    # each topic's rows in one task, so the partitionBy("topic") sink
+    # writes one file per topic, not one per topic per task.
     enriched = enriched.repartition(
-        enriched.sparkSession.sparkContext.defaultParallelism
+        enriched.sparkSession.sparkContext.defaultParallelism, "topic"
     )
 
     return generate_questions(enriched)

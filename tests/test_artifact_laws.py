@@ -8,7 +8,7 @@ any part of a query's own result path. Every per-session memo lives in
 sf_dir, kind), one build counter per kind, one ``clear()``. Every cold
 run pays every build, and ``clear()`` lets audits prove it.
 
-Four law families here:
+Five law families here:
 
 1. ENUMERATION — a source scan extracts every memo kind ever passed
    to `session_memo`/`session_artifact` and asserts the set exactly
@@ -27,6 +27,10 @@ Four law families here:
 4. CLEAR — after ``clear_session_artifacts()`` every collected driver
    value is built again by its consumer, so an audit re-checks a
    rebuilt value, not a stale one.
+5. NO BARE CACHE — ``.cache()``/``.persist(`` appear only at the named
+   sites below. A bare cache is never released and freezes its
+   plan's shuffle width against AQE coalescing; per-call storage goes
+   through ``rotate_checkpoint``, per-session storage through the memo.
 """
 
 from __future__ import annotations
@@ -221,3 +225,56 @@ def test_clear_rebuilds_driver_values(spark, sf_dir, kind, query):
     assert memo.BUILDS[kind] == builds + 1, (
         f"{query} reused {kind!r} across clear_session_artifacts()"
     )
+
+
+# (module, enclosing function) -> why a cache/persist belongs there
+_CACHE_SITES = {
+    ("memo.py", "session_memo"): "the one per-session store; clear() releases it",
+    ("sources/jsonl.py", "split_quarantine"): (
+        "Spark rejects a query over only the corrupt-record column "
+        "unless the parsed frame is cached"
+    ),
+}
+
+
+def _cache_calls(tree: ast.AST):
+    """(enclosing function, line) of every ``.cache()``/``.persist(...)``."""
+    def walk(node, func):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield from walk(child, child.name)
+                continue
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and (
+                    child.func.attr == "persist"
+                    or (child.func.attr == "cache" and not child.args)
+                )
+            ):
+                yield func, child.lineno
+            yield from walk(child, func)
+
+    return walk(tree, None)
+
+
+def test_no_bare_cache_outside_named_sites():
+    found, strays = set(), []
+    for root, _dirs, files in os.walk(_PKG):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(root, fname)
+            rel = os.path.relpath(path, _PKG)
+            for func, line in _cache_calls(ast.parse(open(path).read())):
+                if (rel, func) in _CACHE_SITES:
+                    found.add((rel, func))
+                else:
+                    strays.append(f"{rel}:{line} in {func}")
+    assert strays == [], (
+        f"bare .cache()/.persist( outside the named sites: {strays} — use "
+        "memo.rotate_checkpoint for per-call storage or memo.session_memo "
+        "for per-session storage"
+    )
+    # a scan that finds nothing (a changed call shape) fails loudly
+    assert found == set(_CACHE_SITES)

@@ -3,11 +3,19 @@ document in, topic-partitioned questions out."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from pyspark.sql import functions as F
+from ooxml import make_docx, paragraph
 
 from syllabus_sense_spark.__main__ import main
 
 REFERENCE_DOCX = "/root/reference/chemistry_form_1_2.docx"
+
+# A generated 2-document drop: the CLI runs without the reference file.
+DROP_TOPICS = {"a.docx": ["Atoms", "Bonds"], "b.docx": ["Acids", "Salts", "Metals"]}
 
 
 def test_cli_end_to_end_real_document(spark, tmp_path):
@@ -33,6 +41,105 @@ def test_cli_topics_limit(spark, tmp_path):
     assert q_lim.select("topic").distinct().count() == 1
     assert q_full.select("topic").distinct().count() > 1
     assert q_lim.count() < q_full.count()
+
+
+@pytest.fixture(scope="module")
+def docx_drop(tmp_path_factory) -> str:
+    drop = tmp_path_factory.mktemp("drop")
+    for name, titles in DROP_TOPICS.items():
+        body = "".join(
+            paragraph(f"Core element - {t}") + paragraph(f"{t} are studied here.")
+            for t in titles
+        )
+        make_docx(str(drop / name), body)
+    return str(drop)
+
+
+@pytest.fixture(params=["reference", "generated"])
+def cli_input(request) -> tuple[str, set[str] | None]:
+    """(input path, expected topics); the reference document's topics
+    are not pinned, only that there are several."""
+    if request.param == "reference":
+        if not os.path.exists(REFERENCE_DOCX):
+            pytest.skip(f"{REFERENCE_DOCX} not present")
+        return REFERENCE_DOCX, None
+    markers = {t for titles in DROP_TOPICS.values() for t in titles}
+    return request.getfixturevalue("docx_drop"), markers
+
+
+def _run_in_group(spark, group: str, argv: list[str]) -> dict[int, int]:
+    """Run the CLI under a job group; returns {stage id: tasks run}."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        assert main(argv) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    stages = {
+        s
+        for j in st.getJobIdsForGroup(group)
+        if (job := st.getJobInfo(j)) is not None
+        for s in job.stageIds
+    }
+    return {
+        s: info.numCompletedTasks
+        for s in stages
+        if (info := st.getStageInfo(s)) is not None
+    }
+
+
+def test_cli_layout_and_width(spark, cli_input, tmp_path):
+    """Full run and --topics 1 under job groups: one parquet file per
+    topic partition (the generation exchange clusters by topic), no
+    stage wider than the cluster (the chain's Python stages are sized
+    by the data, not by spark.sql.shuffle.partitions), and the
+    reference tests' choice contract and topic limit."""
+    src, markers = cli_input
+    full = str(tmp_path / "full")
+    limited = str(tmp_path / "limited")
+    tasks = _run_in_group(spark, "cli-width-full", [src, full])
+    tasks.update(_run_in_group(spark, "cli-width-limited", [src, limited, "--topics", "1"]))
+    width = spark.sparkContext.defaultParallelism
+    assert tasks and max(tasks.values()) <= width, (
+        f"stages wider than defaultParallelism={width}: "
+        f"{ {s: n for s, n in tasks.items() if n > width} }"
+    )
+
+    q = spark.read.parquet(full)
+    bad = q.filter(
+        (F.size("choices") != 4)
+        | (F.size(F.filter("choices", lambda c: c["is_correct"])) != 1)
+    ).count()
+    assert q.count() > 0 and bad == 0
+    topics = {r.topic for r in q.select("topic").distinct().collect()}
+    if markers is None:
+        assert len(topics) > 1
+    else:
+        assert topics == markers
+
+    q_lim = spark.read.parquet(limited)
+    assert q_lim.select("topic").distinct().count() == 1
+    assert q_lim.count() < q.count()
+
+    for out in (full, limited):
+        for part in (d for d in os.listdir(out) if d.startswith("topic=")):
+            files = [f for f in os.listdir(os.path.join(out, part)) if f.endswith(".parquet")]
+            assert len(files) == 1, f"{out}/{part} holds {len(files)} files"
+
+
+def test_cli_reports_rows_written_by_this_run(spark, docx_drop, tmp_path, capsys):
+    """The second append into one directory reports its own rows, not
+    the directory's cumulative total."""
+    out = str(tmp_path / "questions")
+    reported = []
+    for _ in range(2):
+        assert main([docx_drop, out]) == 0
+        line = capsys.readouterr().out.strip().splitlines()[-1]
+        reported.append(int(line.rsplit("(", 1)[1].split()[0]))
+    assert reported[0] > 0
+    assert reported[1] == reported[0]
+    assert spark.read.parquet(out).count() == 2 * reported[0]
 
 
 def test_cli_curate_subcommand(spark, sf_dir, tmp_path, capsys):

@@ -3,54 +3,20 @@ run it through the distributed scan → sessionize chain."""
 
 from __future__ import annotations
 
-import zipfile
-
 from syllabus_sense_spark.operators.sessionize import group_topics, sessionize_elements
 from syllabus_sense_spark.sources.docx import docx_topics, read_docx_elements
 
-_W = "http://schemas.openxmlformats.org/wordprocessingml/2006/main"
-
-
-def _p(text: str) -> str:
-    return f'<w:p><w:r><w:t xml:space="preserve">{text}</w:t></w:r></w:p>'
-
-
-def _tbl(rows: list[list[str]]) -> str:
-    trs = "".join(
-        "<w:tr>"
-        + "".join(f"<w:tc>{_p(c)}</w:tc>" for c in row)
-        + "</w:tr>"
-        for row in rows
-    )
-    return f"<w:tbl>{trs}</w:tbl>"
-
-
-def make_docx(path: str, body_xml: str) -> None:
-    document = (
-        f'<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        f'<w:document xmlns:w="{_W}"><w:body>{body_xml}</w:body></w:document>'
-    )
-    content_types = (
-        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        '<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">'
-        '<Default Extension="xml" ContentType="application/xml"/>'
-        '<Override PartName="/word/document.xml" ContentType='
-        '"application/vnd.openxmlformats-officedocument.wordprocessingml.document.main+xml"/>'
-        "</Types>"
-    )
-    with zipfile.ZipFile(path, "w") as zf:
-        zf.writestr("[Content_Types].xml", content_types)
-        zf.writestr("word/document.xml", document)
+from ooxml import make_docx, paragraph, table
 
 
 BODY = (
-    _p("Preamble to be discarded")
-    + _p("Core element - Atoms")
-    + _p("Atoms are small.")
-    + _p("   ")  # whitespace-only: dropped at scan (A3)
-    + _tbl([["H", "He"], ["Li", "Be"]])
-    + _p("Core element: Bonds")
-    + _p("Bonds hold atoms.")
+    paragraph("Preamble to be discarded")
+    + paragraph("Core element - Atoms")
+    + paragraph("Atoms are small.")
+    + paragraph("   ")  # whitespace-only: dropped at scan (A3)
+    + table([["H", "He"], ["Li", "Be"]])
+    + paragraph("Core element: Bonds")
+    + paragraph("Bonds hold atoms.")
 )
 
 
