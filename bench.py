@@ -4,31 +4,13 @@ ONE JSON line with per-query wall seconds.
 
 Each query executes via the `noop` sink — full computation, no
 driver-side collect, so timings reflect engine work (scan + shuffle +
-compute), not result transfer.
+compute), not result transfer. Headliners execute in SORTED-NAME
+order, so a query's position in the long single-JVM session
+(accumulated caches, GC pressure) stays fixed run-over-run.
 
-Noise protocol (round-11 judge item 4 — four of that round's >1.1×
-"movers" were session-position noise a judge had to refute by hand):
-
-- headliners execute in SORTED-NAME order, not list order, so a
-  query's position in the long single-JVM session (accumulated
-  caches, GC pressure) stays fixed round-over-round;
-- after measuring, any query that moved >1.2× in either direction vs
-  the latest BENCH_r*.json is re-timed in an ISOLATED fresh-process
-  session (the sweep tool's triage, now in the bench itself), and the
-  emitted JSON carries a per-mover verdict — `confirmed_slower` /
-  `confirmed_faster` when the isolated run reproduces the move,
-  `noise` when it does not, and `no_anchor_inconclusive` when the
-  previous round carries no calibration anchor (a confirmed_* verdict
-  without an anchor grades the hypervisor, not the code) — so
-  round-over-round deltas no longer need a judge to re-measure;
-- a fixed CALIBRATION workload (pure-JVM hash-sum over a row range,
-  no I/O) is timed in the same session: this VM's effective CPU
-  swings 2-4× with invisible hypervisor neighbors (measured: the same
-  code summed 18 s and 34 s an hour apart while load-average stayed
-  ~0), so the previous round's numbers are scaled by the
-  calibration ratio before any mover is declared. The calibration
-  time is emitted near the END of the JSON so it survives the
-  driver's 2000-char stdout-tail archive for the next round.
+This is a timer, not a judge: it makes no parent-vs-change decision.
+`perfbench/run.py` (declared in BENCHMARK.json) does, from interleaved
+fresh-process runs and host-independent counters.
 """
 
 from __future__ import annotations
@@ -138,194 +120,34 @@ STREAMING_EXTRA = [
 # between rounds at min-of-3; n=5 pins its steady-state minimum.
 EXTRA_ITERS = {"dq_check_orders": 5}
 
-# Movers beyond this ratio (either direction) vs the previous round's
-# bench get an isolated confirmation run; at most this many isolated
-# runs per bench (each pays a fresh JVM), worst movers first. The
-# absolute floor keeps sub-0.2s queries — whose ratios flap on ~70ms
-# of scheduler jitter — from burning isolated slots.
-MOVER_RATIO = 1.2
-MOVER_MIN_DELTA = 0.15
-MAX_ISOLATED = 8
 
-
-def _calibration(spark) -> float:
-    """Fixed CPU-bound reference job (no I/O, no shuffle skew): wall
-    time scales with the host's effective parallel throughput, so the
-    ratio across rounds is the host-speed correction for every other
-    timing. Min of 2 — the first run can pay codegen."""
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.time()
-        # bit_xor, not sum: the session runs ANSI mode and a long sum
-        # of 8B hashes overflows. 8B rows ≈ 1-2 s on a quiet 32-core
-        # host. Residual run-to-run jitter is ~±13% — that IS the
-        # host fluctuating minute-to-minute; the correction targets
-        # the 2-4× hypervisor-neighbor swings, and the ±13% floor is
-        # why movers still need the isolated-run verdict.
-        spark.range(8_000_000_000).selectExpr(
-            "bit_xor(xxhash64(id)) AS h"
-        ).collect()
-        best = min(best, time.time() - t0)
-    return best
-
-
-def _latest_bench_round(here: str | None = None) -> int:
-    """Highest N over the driver-archived BENCH_r{N}.json files beside
-    this script (0 when none exist — round 1)."""
-    import glob
-    import re
-
-    here = here or os.path.dirname(os.path.abspath(__file__))
-    best = 0
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"r(\d+)", os.path.basename(path))
-        if m:
-            best = max(best, int(m.group(1)))
-    return best
-
-
-def _history_path(rnd: int, here: str | None = None) -> str:
-    here = here or os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(here, "tools", "bench_history", f"r{rnd}.json")
-
-
-def _write_history(payload: dict, here: str | None = None) -> str:
-    """Persist the FULL bench JSON to a committed per-round history
-    file (r13 judge item 2: the driver archives only a 2000-char
-    stdout tail, and BENCH_r13 ran with movers_basis='none' because
-    r12's tail was consumed by its movers block — a 5× mover sailed
-    through uncompared). The current round is the latest archived
-    BENCH round + 1 (the driver writes BENCH_r{N}.json AFTER round N's
-    bench runs, so at run time only rounds < N are archived); re-runs
-    within a round overwrite, keeping exactly one file per round."""
-    rnd = _latest_bench_round(here) + 1
-    path = _history_path(rnd, here)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path, "w") as fh:
-        json.dump(payload, fh, indent=1, sort_keys=True)
-    return path
-
-
-def _prev_history(here: str | None = None) -> dict | None:
-    """The previous round's FULL bench payload from the committed
-    history file, matched to the latest driver-archived round (the
-    bench that ran during round N wrote history r{N}; the driver then
-    archived BENCH_r{N}.json — same N)."""
-    rnd = _latest_bench_round(here)
-    if rnd <= 0:
-        return None
-    try:
-        with open(_history_path(rnd, here)) as fh:
-            data = json.load(fh)
-        return data if isinstance(data, dict) else None
-    except Exception:
-        return None
-
-
-def _prev_calibration(here: str | None = None) -> float | None:
-    """The previous round's calibration seconds — from the committed
-    bench-history file when present, else recovered from the
-    BENCH_r*.json stdout tail (None before round 12 / if truncated)."""
-    import glob
-    import re
-
-    hist = _prev_history(here)
-    if hist is not None:
-        try:
-            cal = float(hist.get("calibration_sec") or 0)
-            if cal > 0:
-                return cal
-        except Exception:
-            pass
-    here = here or os.path.dirname(os.path.abspath(__file__))
-    best_round, best_path = -1, None
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"r(\d+)", os.path.basename(path))
-        if m and int(m.group(1)) > best_round:
-            best_round, best_path = int(m.group(1)), path
-    if best_path is None:
-        return None
-    try:
-        data = json.load(open(best_path))
-        blob = json.dumps(data.get("parsed") or {}) + data.get("tail", "")
-        m = re.search(r'"calibration_sec": ([0-9.]+)', blob)
-        return float(m.group(1)) if m else None
-    except Exception:
-        return None
-
-
-def _prev_bench_queries(here: str | None = None) -> tuple[dict[str, float], str]:
-    """Per-query seconds for the previous round, plus which half they
-    are ('queries' = fn+write totals, 'execute' = noop-write half) so
-    the caller compares like with like. Prefers the committed
-    bench-history file (full payload, both halves — 'queries' wins);
-    falls back to the driver's BENCH_r*.json archive, whose 2000-char
-    stdout TAIL truncates the leading 'queries' dict but usually
-    preserves the later 'execute' dict — recover whichever parses.
-    Empty when nothing is recoverable (round 1 / format change)."""
-    import glob
-    import re
-
-    hist = _prev_history(here)
-    if hist is not None:
-        for key in ("queries", "execute"):
-            q = hist.get(key)
-            if isinstance(q, dict) and q:
-                try:
-                    return {k: float(v) for k, v in q.items()}, key
-                except Exception:
-                    pass
-    here = here or os.path.dirname(os.path.abspath(__file__))
-    best_round, best_path = -1, None
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"r(\d+)", os.path.basename(path))
-        if m and int(m.group(1)) > best_round:
-            best_round, best_path = int(m.group(1)), path
-    if best_path is None:
-        return {}, "none"
-    try:
-        data = json.load(open(best_path))
-    except Exception:
-        return {}, "none"
-    for source in (data, data.get("parsed") or {}):
-        q = source.get("queries")
-        if isinstance(q, dict) and q:
-            return {k: float(v) for k, v in q.items()}, "queries"
-    tail = data.get("tail", "")
-    for key in ("queries", "execute"):
-        m = re.search(r'"%s": (\{[^{}]*\})' % key, tail)
-        if m:
-            try:
-                q = json.loads(m.group(1))
-                return {k: float(v) for k, v in q.items()}, key
-            except Exception:
-                continue
-    return {}, "none"
-
-
-def _time_query(spark, fn, sf_dir: str, n_iters: int) -> tuple[float, float]:
-    """(min total fn()+write, min write-only) over n warm iterations."""
-    best = best_e = float("inf")
-    for _ in range(n_iters):
+def time_query(spark, fn, sf_dir: str, n: int) -> list[tuple[float, float]]:
+    """Per-iteration (construct_s, execute_s) over ``n`` runs of
+    ``fn(spark, sf_dir)`` followed by a noop write. fn() is inside the
+    timed region: iterative operators (PageRank, components, triangle
+    census) do real work eagerly via localCheckpoint during
+    construction, and timing only the final write would under-report
+    them to near zero. The construction half is py4j plan building for
+    lazy queries and real eager work for iterative ones. The first
+    exception propagates to the caller."""
+    runs = []
+    for _ in range(n):
         t0 = time.time()
         df = fn(spark, sf_dir)
         t1 = time.time()
         df.write.format("noop").mode("overwrite").save()
-        t2 = time.time()
-        best = min(best, t2 - t0)
-        best_e = min(best_e, t2 - t1)
-    return best, best_e
+        runs.append((t1 - t0, time.time() - t1))
+    return runs
 
 
 def _pin_driver_memory() -> None:
     """r13 ADVICE: ``spark.driver.memory`` defaults to ~60% of
     MemAvailable (session.py), so a loaded box silently hands the
-    bench a smaller heap than the documented 28g posture — variance
-    the calibration job cannot see (it measures CPU, not spill). Pin
-    the 28g posture whenever the box affords it; an explicit
-    SPARK_DRIVER_MEMORY always wins, and the resolved value is logged
-    into the bench JSON either way so a heap change is detectable
-    round-over-round."""
+    bench a smaller heap than the documented 28g posture — spill
+    variance that no per-query timing explains. Pin the 28g posture
+    whenever the box affords it; an explicit SPARK_DRIVER_MEMORY
+    always wins, and the resolved value is logged into the bench JSON
+    either way so a heap change is detectable round-over-round."""
     if os.environ.get("SPARK_DRIVER_MEMORY"):
         return
     try:
@@ -337,269 +159,6 @@ def _pin_driver_memory() -> None:
                     return
     except OSError:
         pass
-
-
-def _isolated_one(name: str) -> None:
-    """Child-process mode: fresh session, same warmup + min-of-N
-    discipline, one query, one JSON line."""
-    _pin_driver_memory()
-    from syllabus_sense_spark.session import get_spark
-    from syllabus_sense_spark import queries as q
-    from syllabus_sense_spark.tables import TABLE_NAMES, load
-
-    q.load_all_queries()
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("syllabus-sense-bench-isolated")
-    for t in TABLE_NAMES:
-        load(spark, sf_dir, t).count()
-    spark.range(256).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-    iters = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3"))
-    sec, sec_e = _time_query(
-        spark, q.QUERIES[name], sf_dir, EXTRA_ITERS.get(name, iters)
-    )
-    # the child's own host-speed probe: without it, a persistently
-    # degraded hypervisor window turns every mover into a false
-    # "confirmed_slower" (observed: 8 of 8 in one degraded run)
-    cal = _calibration(spark)
-    print(
-        json.dumps(
-            {
-                "name": name,
-                "sec": round(sec, 3),
-                "exec": round(sec_e, 3),
-                "cal": round(cal, 3),
-            }
-        )
-    )
-
-
-def _prev_round_commit(here: str | None = None) -> str | None:
-    """The commit holding the PREVIOUS round's code — the driver's
-    "round N: verdict/..." commit lands immediately after round N's
-    bench, so its tree is exactly what that bench measured (plus the
-    verdict artifacts). None when git/the commit is unavailable."""
-    import subprocess
-
-    rnd = _latest_bench_round(here)
-    if rnd <= 0:
-        return None
-    here = here or os.path.dirname(os.path.abspath(__file__))
-    try:
-        out = subprocess.run(
-            [
-                "git", "-C", here, "log", "--format=%H", "-n", "1",
-                "--grep", f"^round {rnd}:",
-            ],
-            capture_output=True,
-            text=True,
-            timeout=60,
-        )
-        sha = out.stdout.strip().splitlines()
-        return sha[0] if sha and out.returncode == 0 else None
-    except Exception:
-        return None
-
-
-def _add_worktree(commit: str, here: str | None = None) -> str | None:
-    """Detached git worktree of ``commit`` in a temp dir — the
-    previous round's code, runnable in-place. None on failure."""
-    import subprocess
-    import tempfile
-
-    here = here or os.path.dirname(os.path.abspath(__file__))
-    path = tempfile.mkdtemp(prefix="bench_prev_")
-    try:
-        out = subprocess.run(
-            ["git", "-C", here, "worktree", "add", "--detach", "--force",
-             path, commit],
-            capture_output=True,
-            text=True,
-            timeout=120,
-        )
-        if out.returncode == 0:
-            return path
-    except Exception:
-        pass
-    return None
-
-
-def _remove_worktree(path: str, here: str | None = None) -> None:
-    import shutil
-    import subprocess
-
-    here = here or os.path.dirname(os.path.abspath(__file__))
-    try:
-        subprocess.run(
-            ["git", "-C", here, "worktree", "remove", "--force", path],
-            capture_output=True,
-            timeout=120,
-        )
-    except Exception:
-        pass
-    shutil.rmtree(path, ignore_errors=True)
-
-
-def _ab_verdict(
-    iso_head: float,
-    head_cal: float,
-    iso_prev: float,
-    prev_leg_cal: float,
-) -> tuple[str, dict]:
-    """Classify one mover from a back-to-back isolated A/B: the
-    PREVIOUS round's code and HEAD, both run cold (fresh JVM, fresh
-    Python workers) on the SAME host minutes apart. This replaces the
-    r14 protocol of comparing cold-HEAD against the previous round's
-    warm-session archive, which is systematically biased (round 14: a
-    query 3.34x faster in-session was flagged `confirmed_slower`
-    because its isolated cold-codegen leg was held against r13's warm
-    number — the calibration scalar corrects CPU speed, not
-    cold-vs-warm state). Both legs sharing the cold posture makes the
-    comparison self-anchoring; the residual per-leg host jitter is
-    corrected by each child's own calibration probe."""
-    extras: dict = {}
-    ref = iso_prev
-    if head_cal > 0 and prev_leg_cal > 0:
-        leg_ratio = min(3.0, max(1 / 3.0, head_cal / prev_leg_cal))
-        extras["ab_host_ratio"] = round(leg_ratio, 3)
-        ref = iso_prev * leg_ratio
-    extras["ab_ratio"] = round(iso_head / ref, 2) if ref > 0 else None
-    if ref <= 0:
-        return "noise", extras
-    if abs(iso_head - ref) < MOVER_MIN_DELTA:
-        return "noise", extras
-    ratio = iso_head / ref
-    if ratio > MOVER_RATIO:
-        return "confirmed_slower", extras
-    if ratio < 1 / MOVER_RATIO:
-        return "confirmed_faster", extras
-    return "noise", extras
-
-
-def _mover_verdict(
-    prev: float,
-    prev_host_scaled: float,
-    iso: float,
-    iso_cal: float,
-    prev_cal: float | None,
-) -> tuple[str, dict]:
-    """Classify one mover from its isolated re-run.
-
-    Without a previous-round calibration anchor (``prev_cal`` None —
-    the archive predates the calibration job or its tail was
-    truncated) there is no way to separate code movement from host
-    movement, so the only honest verdict is
-    ``no_anchor_inconclusive`` — never ``confirmed_*``. Round 12
-    demonstrated the failure: five `confirmed_slower` emitted against
-    the unanchored r11 numbers were all hypervisor drift.
-
-    With an anchor, the verdict host-corrects against the CHILD
-    process's own calibration (a degraded hypervisor window outlives
-    the parent session), falling back to the session-scaled previous
-    number only when the child calibration failed.
-    """
-    extras: dict = {}
-    if not prev_cal:
-        return "no_anchor_inconclusive", extras
-    if iso_cal > 0:
-        child_ratio = min(3.0, max(1 / 3.0, iso_cal / prev_cal))
-        extras["isolated_host_ratio"] = round(child_ratio, 3)
-        prev_ref = prev * child_ratio
-    else:
-        prev_ref = prev_host_scaled
-    iso_ratio = iso / prev_ref
-    extras["isolated_vs_prev_ratio"] = round(iso_ratio, 2)
-    if iso_ratio > MOVER_RATIO:
-        return "confirmed_slower", extras
-    if iso_ratio < 1 / MOVER_RATIO:
-        return "confirmed_faster", extras
-    return "noise", extras
-
-
-# A child leg whose own calibration exceeds the parent session's by
-# this factor ran in a degraded host window (hypervisor-neighbor
-# contention; observed 2x+ on identical code) — retry it once and keep
-# the leg measured on the quieter window.
-_DEGRADED_LEG_RATIO = 1.5
-
-
-def _cleaner_leg(
-    a: tuple[float, float] | None, b: tuple[float, float] | None
-) -> tuple[float, float] | None:
-    """Of two (seconds, calibration) leg results, the one measured on
-    the quieter host window: lower positive calibration wins; a leg
-    with a failed calibration (0) loses to any calibrated leg."""
-    if b is None:
-        return a
-    if a is None:
-        return b
-    if a[1] <= 0:
-        return b if b[1] > 0 else (a if a[0] <= b[0] else b)
-    if b[1] <= 0:
-        return a
-    return a if a[1] <= b[1] else b
-
-
-def _isolated_time_clean(
-    name: str,
-    half: str,
-    session_cal: float,
-    script: str | None = None,
-    cwd: str | None = None,
-) -> tuple[float, float] | None:
-    """_isolated_time, re-run once when the child's calibration says
-    its window was degraded relative to the parent session — the
-    failure mode behind every false confirmed_* this protocol has
-    produced (a bandwidth-contended window inflates CPU-heavy queries
-    ~4x while barely moving warm in-session numbers)."""
-    got = _isolated_time(name, half, script=script, cwd=cwd)
-    if (
-        got is not None
-        and session_cal > 0
-        and got[1] > _DEGRADED_LEG_RATIO * session_cal
-    ):
-        got = _cleaner_leg(
-            got, _isolated_time(name, half, script=script, cwd=cwd)
-        )
-    return got
-
-
-def _isolated_time(
-    name: str,
-    half: str,
-    script: str | None = None,
-    cwd: str | None = None,
-) -> tuple[float, float] | None:
-    """Re-time one query in a fresh process (fresh JVM, fresh Python
-    workers, no session history); ``half`` picks the total ('queries')
-    or write-only ('execute') number so the verdict compares the same
-    quantity the previous round recorded. ``script``/``cwd`` point at
-    an alternate checkout's bench.py (the previous round's worktree)
-    for the A/B protocol. Returns (seconds, child calibration
-    seconds) — the caller host-corrects the verdict with the child's
-    own calibration, since a degraded hypervisor window outlives the
-    parent session. None on any failure — the caller reports the
-    mover as unconfirmed rather than crashing the bench."""
-    import subprocess
-
-    try:
-        out = subprocess.run(
-            [sys.executable, script or os.path.abspath(__file__),
-             "--isolated-one", name],
-            capture_output=True,
-            text=True,
-            timeout=1200,
-            cwd=cwd,
-        )
-        for line in reversed(out.stdout.strip().splitlines()):
-            if line.startswith("{"):
-                rec = json.loads(line)
-                sec = float(rec["exec"] if half == "execute" else rec["sec"])
-                return sec, float(rec.get("cal", 0) or 0)
-    except Exception:
-        pass
-    return None
 
 
 def main() -> None:
@@ -635,214 +194,37 @@ def main() -> None:
     # min-of-N warm iterations per query: iteration 1 still pays
     # one-off costs (codegen compile, broadcast build, shuffle-file
     # creation); the min is the steady-state number a resident cluster
-    # would see, and it keeps round-over-round deltas out of the noise.
-    # 3 warm iterations: single-warm-repeat minima still showed 2-5x
-    # run-to-run swings on shared hardware; min-of-3 pins the
-    # steady-state number.
+    # would see. 3 warm iterations: single-warm-repeat minima still
+    # showed 2-5x run-to-run swings on shared hardware.
     iters = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3"))
     timings: dict[str, float] = {}
     construct: dict[str, float] = {}
     execute: dict[str, float] = {}
+    streaming: dict[str, float] = {}
     errors: dict[str, str] = {}
-    # sorted-name order: position in the session is part of a query's
-    # measured environment; pinning it keeps rounds comparable (see
-    # module docstring / tools/full_scale_sweep.py)
-    for name in sorted(HEADLINE):
+    plan = [(name, EXTRA_ITERS.get(name, iters)) for name in sorted(HEADLINE)]
+    plan += [(name, 1) for name in STREAMING_EXTRA]
+    for name, n in plan:
         fn = q.QUERIES.get(name)
         if fn is None:
             errors[name] = "not registered"
             continue
-        best = best_c = best_e = float("inf")
         try:
-            for _ in range(EXTRA_ITERS.get(name, iters)):
-                # fn() is inside the timed region: iterative operators
-                # (PageRank, components, triangle census) do real work
-                # eagerly via localCheckpoint during construction, and
-                # timing only the final noop write would under-report
-                # them to near zero. The construction half is reported
-                # separately (py4j plan building for lazy queries, real
-                # eager work for iterative ones) so round-over-round
-                # comparisons against the r04 execution-only numbers
-                # don't conflate methodology with regression.
-                t0 = time.time()
-                df = fn(spark, sf_dir)
-                t1 = time.time()
-                df.write.format("noop").mode("overwrite").save()
-                t2 = time.time()
-                best = min(best, t2 - t0)
-                best_c = min(best_c, t1 - t0)
-                best_e = min(best_e, t2 - t1)
+            runs = time_query(spark, fn, sf_dir, n)
         except Exception as exc:  # noqa: BLE001 — one bad query must not zero the bench
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
             print(f"BENCH ERROR {name}: {errors[name]}", file=sys.stderr)
             continue
-        timings[name] = round(best, 3)
-        construct[name] = round(best_c, 3)
-        execute[name] = round(best_e, 3)
-
-    streaming: dict[str, float] = {}
-    for name in STREAMING_EXTRA:
-        fn = q.QUERIES.get(name)
-        if fn is None:
-            errors[name] = "not registered"
+        if name in STREAMING_EXTRA:
+            streaming[name] = round(sum(runs[0]), 3)
             continue
-        try:
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            streaming[name] = round(time.time() - t0, 3)
-        except Exception as exc:  # noqa: BLE001
-            errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-            print(f"BENCH ERROR {name}: {errors[name]}", file=sys.stderr)
+        timings[name] = round(min(c + e for c, e in runs), 3)
+        construct[name] = round(min(c for c, _ in runs), 3)
+        execute[name] = round(min(e for _, e in runs), 3)
 
-    # Mover triage: compare against the previous round, confirm real
-    # movers in isolated sessions (parent session stopped first so the
-    # child JVM gets the machine to itself).
-    # Host-speed correction: scale the previous round's numbers by the
-    # calibration ratio so movers reflect CODE changes, not hypervisor
-    # neighbors. Clamped to [1/3, 3] — a ratio outside that says the
-    # calibration itself glitched, trust it only partially.
-    cal = _calibration(spark)
-    prev_cal = _prev_calibration()
-    host_ratio = 1.0
-    if prev_cal and prev_cal > 0:
-        host_ratio = min(3.0, max(1 / 3.0, cal / prev_cal))
-
-    prev, prev_kind = _prev_bench_queries()
-    # compare like with like: the archived tail usually only preserves
-    # the execute half, so measure movers on whichever half survived
-    mine = execute if prev_kind == "execute" else timings
-    movers: dict[str, dict] = {}
-    for name, sec in mine.items():
-        p = prev.get(name)
-        if not p or p <= 0:
-            continue
-        p_scaled = p * host_ratio
-        ratio = sec / p_scaled
-        if abs(sec - p_scaled) < MOVER_MIN_DELTA:
-            continue
-        if ratio > MOVER_RATIO or ratio < 1 / MOVER_RATIO:
-            movers[name] = {
-                "prev": p,
-                "prev_host_scaled": round(p_scaled, 3),
-                "session": sec,
-                "ratio": round(ratio, 2),
-            }
-    prev_commit = _prev_round_commit() if movers else None
-    if movers and not prev_cal and not prev_commit:
-        # No calibration anchor for the previous round (missing OR a
-        # parsed zero — same predicate `_mover_verdict` uses, r13
-        # ADVICE) AND no previous-round commit for the self-anchoring
-        # A/B: there is no way to separate code movement from host
-        # movement, so every verdict is inconclusive — round 12
-        # emitted five `confirmed_slower` against the unanchored r11
-        # tail and all five were judge-adjudicated hypervisor drift.
-        # Skip the isolated re-runs too (their verdict would be
-        # foregone).
-        for name in movers:
-            movers[name]["verdict"] = "no_anchor_inconclusive"
-    elif movers:
-        spark.stop()
-        # r15 protocol (r14 judge item 2): isolated confirmation runs
-        # BOTH commits cold — the previous round's code from a
-        # detached worktree and HEAD — back-to-back per mover, and the
-        # verdict compares those two legs. The r14 shape (cold-HEAD vs
-        # the previous round's warm-session archive, scalar
-        # host-corrected) produced a provably false `confirmed_slower`
-        # for a query that was 3.34x faster in-session: a fresh JVM's
-        # cold codegen/JIT state is not a host-speed effect. The
-        # archive-based verdict remains only as the fallback when the
-        # worktree leg is unavailable.
-        wt = _add_worktree(prev_commit) if prev_commit else None
-        by_severity = sorted(
-            movers, key=lambda n: abs(1 - movers[n]["ratio"]), reverse=True
-        )
-        try:
-            for name in by_severity[:MAX_ISOLATED]:
-                got = _isolated_time_clean(name, prev_kind, cal)
-                m = movers[name]
-                if got is None:
-                    m["verdict"] = "isolated_run_failed"
-                    continue
-                iso, iso_cal = got
-                m["isolated"] = round(iso, 3)
-                if iso_cal > 0:
-                    m["isolated_cal"] = round(iso_cal, 3)
-                got_prev = (
-                    _isolated_time_clean(
-                        name,
-                        prev_kind,
-                        cal,
-                        script=os.path.join(wt, "bench.py"),
-                        cwd=wt,
-                    )
-                    if wt
-                    else None
-                )
-                if got_prev is not None:
-                    iso_prev, prev_leg_cal = got_prev
-                    verdict, extras = _ab_verdict(
-                        iso_head=iso,
-                        head_cal=iso_cal,
-                        iso_prev=iso_prev,
-                        prev_leg_cal=prev_leg_cal,
-                    )
-                    if verdict in ("confirmed_slower", "confirmed_faster"):
-                        # One repeat pair before confirming, minima
-                        # per leg: identical-code legs measured ±40%
-                        # on a turbulent host (two false
-                        # confirmed_slower in one round-15 run), and a
-                        # single degraded child window must not
-                        # confirm a mover.
-                        got2 = _isolated_time_clean(name, prev_kind, cal)
-                        if got2 is not None and got2[0] < iso:
-                            iso, iso_cal = got2
-                            m["isolated"] = round(iso, 3)
-                            if iso_cal > 0:
-                                m["isolated_cal"] = round(iso_cal, 3)
-                        got_prev2 = _isolated_time_clean(
-                            name,
-                            prev_kind,
-                            cal,
-                            script=os.path.join(wt, "bench.py"),
-                            cwd=wt,
-                        )
-                        if got_prev2 is not None and got_prev2[0] < iso_prev:
-                            iso_prev, prev_leg_cal = got_prev2
-                        verdict, extras = _ab_verdict(
-                            iso_head=iso,
-                            head_cal=iso_cal,
-                            iso_prev=iso_prev,
-                            prev_leg_cal=prev_leg_cal,
-                        )
-                    m["isolated_prev"] = round(iso_prev, 3)
-                    if prev_leg_cal > 0:
-                        m["isolated_prev_cal"] = round(prev_leg_cal, 3)
-                elif prev_cal:
-                    verdict, extras = _mover_verdict(
-                        prev=m["prev"],
-                        prev_host_scaled=m["prev_host_scaled"],
-                        iso=iso,
-                        iso_cal=iso_cal,
-                        prev_cal=prev_cal,
-                    )
-                    verdict = {
-                        "confirmed_slower": "archive_slower_unconfirmed",
-                        "confirmed_faster": "archive_faster_unconfirmed",
-                    }.get(verdict, verdict)
-                else:
-                    verdict, extras = "no_anchor_inconclusive", {}
-                m.update(extras)
-                m["verdict"] = verdict
-        finally:
-            if wt:
-                _remove_worktree(wt)
-        for name in by_severity[MAX_ISOLATED:]:
-            movers[name]["verdict"] = "isolated_skipped_cap"
-
-    total = round(sum(timings.values()), 3)
     payload = {
         "metric": "headline_queries_total_wall",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         # independent minima of the two halves (construction =
@@ -859,25 +241,10 @@ def main() -> None:
         "order": "sorted-name",
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "driver_memory": driver_memory,
-        "movers_basis": prev_kind,
-        **({"movers_vs_prev_round": movers} if movers else {}),
         **({"errors": errors} if errors else {}),
-        # keep these LAST: the driver archives only the final
-        # 2000 chars of stdout, and next round's host-speed
-        # correction needs calibration_sec recoverable even when
-        # the history file below is somehow lost
-        "host_speed_vs_prev": round(host_ratio, 3),
-        "calibration_sec": round(cal, 3),
     }
     print(json.dumps(payload))
-    try:
-        _write_history(payload)
-    except Exception as exc:  # noqa: BLE001 — history is best-effort
-        print(f"BENCH WARN: history write failed: {exc}", file=sys.stderr)
 
 
 if __name__ == "__main__":
-    if len(sys.argv) >= 3 and sys.argv[1] == "--isolated-one":
-        _isolated_one(sys.argv[2])
-    else:
-        main()
+    main()

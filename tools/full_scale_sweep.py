@@ -46,6 +46,7 @@ def main() -> None:
     ap.add_argument("--only", default="")
     args = ap.parse_args()
 
+    from bench import time_query
     from syllabus_sense_spark import queries as q
     from syllabus_sense_spark.session import get_spark
 
@@ -82,24 +83,13 @@ def main() -> None:
             for i, name in enumerate(names):
                 if name in skip or (name, d) in done:
                     continue
-                fn = q.QUERIES[name]
-                best, err = float("inf"), None
-                for _ in range(args.runs):
-                    t0 = time.time()
-                    try:
-                        fn(spark, d).write.format("noop").mode(
-                            "overwrite"
-                        ).save()
-                    except Exception as exc:  # noqa: BLE001 — record, move on
-                        err = f"{type(exc).__name__}: {exc}"[:200]
-                        break
-                    best = min(best, time.time() - t0)
-                row = {
-                    "name": name,
-                    "dir": d,
-                    "sec": None if err else round(best, 3),
-                    "err": err,
-                }
+                sec, err = None, None
+                try:
+                    runs = time_query(spark, q.QUERIES[name], d, args.runs)
+                    sec = round(min(c + e for c, e in runs), 3)
+                except Exception as exc:  # noqa: BLE001 — record, move on
+                    err = f"{type(exc).__name__}: {exc}"[:200]
+                row = {"name": name, "dir": d, "sec": sec, "err": err}
                 out.write(json.dumps(row) + "\n")
                 out.flush()
                 if i % 25 == 0:

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import json
 import sys
-import time
 
 sys.path.insert(0, "/root/repo")
 
@@ -29,6 +28,7 @@ DEFAULT = [
 def main() -> None:
     import os
 
+    from bench import time_query
     from syllabus_sense_spark.session import get_spark
     from syllabus_sense_spark import queries as q
 
@@ -45,15 +45,8 @@ def main() -> None:
     for d in dirs:
         sf = os.path.basename(d.rstrip("/")).removeprefix("sf")
         for name in names:
-            fn = q.QUERIES[name]
-            best = float("inf")
-            for _ in range(2):
-                # construction inside the timed region, same rationale
-                # as bench.py: eager iterative operators do real work
-                # during DataFrame build (localCheckpoint)
-                t0 = time.time()
-                fn(spark, d).write.format("noop").mode("overwrite").save()
-                best = min(best, time.time() - t0)
+            runs = time_query(spark, q.QUERIES[name], d, 2)
+            best = min(c + e for c, e in runs)
             out.setdefault(name, {})[sf] = round(best, 3)
     print(json.dumps(out))
 

@@ -52,7 +52,6 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, "/root/repo")
 
@@ -117,6 +116,7 @@ def main() -> int:
 
     budgets: dict[str, float] = json.load(open(budgets_path))
 
+    from bench import time_query
     from syllabus_sense_spark import queries as q
     from syllabus_sense_spark.session import get_spark
 
@@ -129,21 +129,13 @@ def main() -> int:
         # min of 2 — the budgets are 3x MIN-OF-2-WARM sweep numbers,
         # and a single cold run pays ~15-20 s of JIT warmup on the
         # scorer-family codegen, which is startup cost, not regression
-        sec = cold = float("inf")
         try:
-            for i in range(2):
-                t0 = time.time()
-                fn(spark, args.dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                dt = time.time() - t0
-                sec = min(sec, dt)
-                if i == 0:
-                    cold = dt
+            runs = [c + e for c, e in time_query(spark, fn, args.dir, 2)]
         except Exception as exc:  # noqa: BLE001 — a smoke reports and moves on
             print(f"ERR  {name}: {type(exc).__name__}: {exc}"[:160])
             failed += 1
             continue
+        cold, sec = runs[0], min(runs)
         measured[name] = (cold, sec)
         if isinstance(budget, dict):
             # {cold, warm} form (the sf30 spot-gate): the cold first
