@@ -19,6 +19,10 @@ this is the production composition):
 
 ingest+quarantine → lang/length filter → exact dedup → sequence
 packing → balanced shard export, with a one-line JSON funnel report.
+The whole chain is one Spark execution, the shard write: the report's
+``quarantined``/``ingested`` counts and its ``deduped`` row count are
+observations (``DataFrame.observe``) collected on that write, so
+nothing is cached, counted separately or read back.
 """
 
 from __future__ import annotations
@@ -38,41 +42,47 @@ def curate(argv: list[str]) -> int:
     ap.add_argument("--shards", type=int, default=8)
     args = ap.parse_args(argv)
 
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    from .functions.text import space_token_count
     from .operators.packing import pack_sequences
     from .session import get_spark
     from .sinks.shards import write_shards
-    from .sources.jsonl import read_documents_jsonl, split_quarantine
+    from .sources.jsonl import observe_quarantine, read_documents_jsonl
 
     spark = get_spark("syllabus-sense-curate")
-    clean, quarantined = split_quarantine(read_documents_jsonl(spark, args.input))
-    n_quarantined = quarantined.count()
-    n_clean = clean.count()
+    funnel, sink = Observation("curate_funnel"), Observation("curate_sink")
+    clean = observe_quarantine(read_documents_jsonl(spark, args.input), funnel)
 
-    toks = F.filter(F.split("text", " "), lambda x: F.length(x) > 0)
+    n_tok = space_token_count(F.col("text"))
     kept = clean.filter(
-        F.col("lang").isin(*args.langs.split(",")) & (F.size(toks) >= args.min_tokens)
+        F.col("lang").isin(*args.langs.split(",")) & (n_tok >= args.min_tokens)
     )
+    # Every surviving field comes from one line, the one with the least
+    # non-NULL doc_id (ties broken by source, lang), whatever order the
+    # shuffle delivers the duplicates in. One struct min rather than a
+    # min_by per field, which would shuffle a copy of doc_id per field.
+    survivor = F.struct(F.col("doc_id").isNull(), "doc_id", "source", "lang")
     deduped = kept.groupBy(F.md5("text").alias("content_hash")).agg(
-        F.min("doc_id").alias("doc_id"),
-        F.first("source").alias("source"),
-        F.first("lang").alias("lang"),
-        F.min(F.size(toks)).alias("n_tok"),
+        F.min(survivor).alias("s"), F.min(n_tok).alias("n_tok")
     )
     packed = pack_sequences(
-        deduped.select("doc_id", "source", "lang", "n_tok"),
+        deduped.select("s.doc_id", "s.source", "s.lang", "n_tok"),
         size_col="n_tok",
         capacity=args.capacity,
     )
-    write_shards(packed, args.output, n_shards=args.shards)
-    n_out = spark.read.parquet(args.output).count()
+    write_shards(
+        packed.observe(sink, F.count(F.lit(1)).alias("rows")),
+        args.output,
+        n_shards=args.shards,
+    )
     print(
         json.dumps(
             {
-                "quarantined": n_quarantined,
-                "ingested": n_clean,
-                "deduped": n_out,
+                "quarantined": funnel.get["quarantined"],
+                "ingested": funnel.get["ingested"],
+                "deduped": sink.get["rows"],
                 "shards": args.shards,
                 "output": args.output,
             }

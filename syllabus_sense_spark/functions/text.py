@@ -28,6 +28,15 @@ def token_count(text: Column) -> Column:
     return F.size(F.filter(F.split(text, r"\s+"), lambda t: F.length(t) > 0))
 
 
+def space_token_count(text: Column) -> Column:
+    """Count of the non-empty tokens of ``text`` split on single
+    spaces; NULL for a NULL ``text``. Equal to
+    ``F.size(F.filter(F.split(text, " "), lambda t: F.length(t) > 0))``
+    but cheaper: ``array_remove`` is one native pass, with no lambda
+    variable bound per element."""
+    return F.size(F.array_remove(F.split(text, " "), ""))
+
+
 def quality_score(text: Column) -> Column:
     """Composite [0,1] quality: penalizes very short docs, low lexical
     diversity, and extreme token lengths. Deterministic arithmetic."""

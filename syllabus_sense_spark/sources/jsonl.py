@@ -15,7 +15,7 @@ produce drifting types across dumps.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -64,6 +64,10 @@ def split_quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     RECORD_COLUMN) — the documented pattern is to cache the parsed
     frame first, which also makes the two outputs share one parse of
     the input instead of re-reading it per branch.
+
+    The cache is never released, so this is only for callers that
+    need both branches as frames. A caller with a single action on
+    the clean rows uses ``observe_quarantine`` instead.
     """
     df = df.cache()
     clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
@@ -71,3 +75,26 @@ def split_quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
         F.col(CORRUPT_COL).alias("raw_line")
     )
     return clean, quarantined
+
+
+def observe_quarantine(df: DataFrame, observation: Observation) -> DataFrame:
+    """The clean rows of ``df`` (a ``read_documents_jsonl`` frame),
+    with the line funnel recorded on ``observation`` — ``quarantined``
+    and ``ingested`` counts — by the one action that consumes them.
+    No cache and no extra job.
+
+    The counts equal ``split_quarantine``'s only if that action reads
+    every schema field: the JSON parser parses just the columns the
+    plan reads, so a line that is corrupt in an unread field would
+    pass as clean.
+    """
+    corrupt = F.col(CORRUPT_COL)
+    return (
+        df.observe(
+            observation,
+            F.count_if(corrupt.isNotNull()).alias("quarantined"),
+            F.count_if(corrupt.isNull()).alias("ingested"),
+        )
+        .filter(corrupt.isNull())
+        .drop(CORRUPT_COL)
+    )

@@ -3,6 +3,7 @@ document in, topic-partitioned questions out."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -170,3 +171,137 @@ def test_cli_curate_subcommand(spark, sf_dir, tmp_path, capsys):
     assert back.count() == report["deduped"]
     assert {r["shard"] for r in back.select("shard").distinct().collect()} <= set(range(4))
     assert {"pack_id", "pack_offset"} <= set(back.columns)
+
+
+def _curate(dump: str, out: str, capsys, *extra: str) -> dict:
+    """Run ``curate`` and return its one-line JSON funnel report."""
+    assert main(["curate", dump, out, "--shards", "4", *extra]) == 0
+    return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+def _write_dump(path, records: list[dict], raw_lines: tuple[str, ...] = ()) -> str:
+    with open(path, "w") as f:
+        for r in records:
+            f.write(json.dumps(r) + "\n")
+        for line in raw_lines:
+            f.write(line + "\n")
+    return str(path)
+
+
+def _documents(spark, sf_dir, n: int) -> list[dict]:
+    from syllabus_sense_spark.tables import load
+
+    return [
+        {"doc_id": r.doc_id, "source": r.source, "lang": r.lang, "text": r.text}
+        for r in load(spark, sf_dir, "documents").orderBy("doc_id").limit(n).collect()
+    ]
+
+
+# Lines a dump can hold besides well-formed documents.
+EDGE_LINES = (
+    '{"doc_id": 900001, "source": "web", "lang": "en", "text": "cut off',
+    '{"doc_id": "abc", "source": "web", "lang": "en", "text": "a b c d e f"}',
+    '{"doc_id": 900002, "source": "web", "lang": "en", "text": 12345}',
+    "[1, 2]",
+    "42",
+    "",
+    "{}",
+    '{"doc_id": 900003, "source": "web", "lang": "en", "text": "g h i j k l"} tail',
+)
+
+
+def test_curate_funnel_matches_split_quarantine(spark, sf_dir, tmp_path, capsys):
+    """The observed funnel equals the cached two-branch split on a dump
+    of edge-case lines, and ``deduped`` is the row count written."""
+    from syllabus_sense_spark.sources.jsonl import read_documents_jsonl, split_quarantine
+
+    docs = _documents(spark, sf_dir, 60)
+    dump = _write_dump(tmp_path / "edges.jsonl", docs + docs[::5], EDGE_LINES)
+    out = str(tmp_path / "shards")
+    report = _curate(dump, out, capsys)
+
+    clean, quarantined = split_quarantine(read_documents_jsonl(spark, dump))
+    assert report["quarantined"] == quarantined.count() > 0
+    assert report["ingested"] == clean.count() > len(docs)
+    assert report["deduped"] == spark.read.parquet(out).count() > 0
+
+
+def test_curate_survivor_is_min_doc_id_line_at_any_shuffle_width(
+    spark, sf_dir, tmp_path, capsys
+):
+    """A text delivered under two sources survives with every field of
+    its min-doc_id line, and the output rows are identical at 32 and 5
+    shuffle partitions."""
+    docs = _documents(spark, sf_dir, 80)
+    # Re-deliveries under a higher id and another source and language,
+    # written first so they reach the dedup aggregate before the originals.
+    redelivered = [
+        {**d, "doc_id": d["doc_id"] + 10_000_000, "source": "mirror", "lang": "fr"}
+        for d in docs[::3]
+    ]
+    # A re-delivery without a doc_id never wins over one with a doc_id.
+    orphan = {"source": "orphan", "lang": docs[0]["lang"], "text": docs[0]["text"]}
+    dump = _write_dump(tmp_path / "dups.jsonl", [orphan] + redelivered + docs)
+    by_id = {d["doc_id"]: d for d in redelivered + docs}
+    langs = ",".join({d["lang"] for d in by_id.values()})
+
+    rows = {}
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for width in ("32", "5"):
+            spark.conf.set("spark.sql.shuffle.partitions", width)
+            out = str(tmp_path / f"shards_{width}")
+            _curate(dump, out, capsys, "--min-tokens", "1", "--langs", langs)
+            rows[width] = sorted(
+                spark.read.parquet(out)
+                .select("doc_id", "source", "lang", "n_tok", "pack_id", "pack_offset", "shard")
+                .collect()
+            )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert rows["32"] == rows["5"]
+    assert all(
+        (r.source, r.lang) == (by_id[r.doc_id]["source"], by_id[r.doc_id]["lang"])
+        for r in rows["32"]
+    )
+    assert len(rows["32"]) == len(docs)
+    assert not any(r.doc_id >= 10_000_000 for r in rows["32"])
+
+
+def test_curate_is_one_execution_and_caches_nothing(spark, sf_dir, tmp_path, capsys):
+    """Each ``curate`` call adds exactly one SQL execution (the shard
+    write), and three calls on distinct dumps pin no cached RDD."""
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = sc._jsc.sc().listenerBus()
+
+    def execution_ids() -> set[int]:
+        bus.waitUntilEmpty()
+        runs = store.executionsList()
+        return {runs.apply(i).executionId() for i in range(runs.size())}
+
+    docs = _documents(spark, sf_dir, 40)
+    persisted = sc._jsc.getPersistentRDDs().size()
+    for i in range(3):
+        shifted = [{**d, "doc_id": d["doc_id"] + 1000 * i} for d in docs]
+        dump = _write_dump(tmp_path / f"dump{i}.jsonl", shifted, ("BROKEN {line",))
+        before = execution_ids()
+        report = _curate(dump, str(tmp_path / f"shards{i}"), capsys)
+        assert report["quarantined"] == 1
+        assert len(execution_ids() - before) == 1
+    assert sc._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_space_token_count_equals_lambda_form(spark):
+    """``space_token_count`` equals the filter-lambda token count,
+    including on empty, all-space, irregularly spaced and NULL text."""
+    from syllabus_sense_spark.functions.text import space_token_count
+
+    texts = ["", "   ", " lead", "trail  ", "a  b   c", " a b ", "one", "a\tb c", None]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    lam = F.size(F.filter(F.split("text", " "), lambda x: F.length(x) > 0))
+    got = df.select(
+        "text", space_token_count(F.col("text")).alias("new"), lam.alias("old")
+    ).collect()
+    assert [r.new for r in got] == [r.old for r in got]
+    assert {r.text: r.new for r in got}["a  b   c"] == 3
