@@ -11,10 +11,18 @@ value hash), so:
   by a final cast/ratio in double precision (bit-identical across
   engines), never by engine-ordered double summation,
 - complex (array/struct) outputs appear only in rows-only queries.
+
+A module joins the registry by being found, not listed: put it in
+``queries/``, give it a name without a leading underscore, and
+decorate its queries with ``@register``. ``load_all_queries()``
+imports every such module; underscore modules (``_util``) are helpers
+and are imported only by the modules that use them.
 """
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,11 +47,10 @@ def register(name: str, oracle: str | None = None):
 # registration order decides what earns CORRECTNESS evidence. The
 # order is self-maintaining: queries are front-loaded when (a) they
 # are force-listed below (code changed after their last green row, so
-# the old evidence is stale), (b) `prioritize()` marked them as new
-# this round, or (c) their *latest* CORRECTNESS row is not green.
-# Everything already green registers afterwards sorted by ascending
-# last-green round, so the oldest evidence rotates back into the
-# 50-slot window first and stale green rows get re-confirmed.
+# the old evidence is stale), or (b) their *latest* CORRECTNESS row is
+# not green. Everything already green registers afterwards sorted by
+# ascending last-green round, so the oldest evidence rotates back into
+# the 50-slot window first and stale green rows get re-confirmed.
 _FORCE_RECHECK: list[str] = [
     # All 43 r15 force entries landed latest-green rows in
     # CORRECTNESS_r15 — pruned. Force-listed: every query whose
@@ -61,19 +68,6 @@ _FORCE_RECHECK: list[str] = [
     # and its generation exchange hashes on topic.
     "pipeline_flagship_questions",
 ]
-
-_NEW_THIS_ROUND: list[str] = [
-    # Round-12 state: pruned to empty — no new queries this round by
-    # design (the window is reserved for the stale-green rotation; the
-    # round's work is scale engineering on already-registered names).
-]
-
-
-def prioritize(*names: str) -> None:
-    """Mark queries added/changed this round for front-of-line checks."""
-    for n in names:
-        if n not in _NEW_THIS_ROUND:
-            _NEW_THIS_ROUND.append(n)
 
 
 def _evidence_from_past_rounds() -> dict[str, int]:
@@ -97,8 +91,9 @@ def _evidence_from_past_rounds() -> dict[str, int]:
 
     for path in sorted(paths, key=_round_of):
         try:
-            data = json.load(open(path))
-        except Exception:
+            with open(path) as fh:
+                data = json.load(fh)
+        except (OSError, ValueError):
             continue
         rnd = _round_of(path)
         for name, row in data.items():
@@ -114,35 +109,36 @@ def _evidence_from_past_rounds() -> dict[str, int]:
 def _ordered(
     registered: list[str],
     last_green: dict[str, int],
-    new_this_round: list[str],
     force_recheck: list[str],
     window: int = 50,
     rows_only: frozenset[str] | set[str] = frozenset(),
 ) -> list[str]:
     """Pure ordering policy (unit-testable without the registry):
 
-    - never-checked queries (no green driver row ever) lead, new-this-
-      round names first, then registration order;
+    - never-checked queries (no green driver row ever) lead, in name
+      order;
     - while the never-checked backlog exceeds the driver window, the
       WHOLE window goes to it; once it fits, force-listed stale greens
       are interleaved one per three never-checked names;
     - any stale names left over follow the never block;
     - the already-green tail sorts by ascending last-green round so the
-      oldest evidence rotates back into the window first (stable for
-      ties: registration order) — EXCEPT that rows-only queries (no
-      oracle) sort behind every hash-checkable green regardless of
-      vintage: a rows-only slot can only ever re-confirm `no_oracle`,
-      so when the driver window is the scarce resource it buys less
-      evidence than the stalest hash-checkable green (round-10 judge
-      item 7).
+      oldest evidence rotates back into the window first (ties: name
+      order) — EXCEPT that rows-only queries (no oracle) sort behind
+      every hash-checkable green regardless of vintage: a rows-only
+      slot can only ever re-confirm `no_oracle`, so when the driver
+      window is the scarce resource it buys less evidence than the
+      stalest hash-checkable green (round-10 judge item 7).
+
+    Ties break by name, never by registration order: that order
+    follows the import graph, so moving a helper import from one query
+    module to another would otherwise reshuffle the driver window.
     """
-    reg_set = set(registered)
-    never = [n for n in new_this_round if n in reg_set and n not in last_green]
-    seen = set(never)
-    never += [n for n in registered if n not in last_green and n not in seen]
+    names = sorted(registered)
+    reg_set = set(names)
+    never = [n for n in names if n not in last_green]
     never_set = set(never)
     stale: list[str] = []
-    for n in force_recheck + new_this_round:
+    for n in force_recheck:
         if n in reg_set and n not in never_set and n not in stale:
             stale.append(n)
     front: list[str] = []
@@ -155,7 +151,7 @@ def _ordered(
     front += stale[si:]
     front_set = set(front)
     tail = sorted(
-        (n for n in registered if n not in front_set),
+        (n for n in names if n not in front_set),
         key=lambda n: (n in rows_only, last_green.get(n, 0)),
     )
     return front + tail
@@ -167,171 +163,13 @@ def load_all_queries() -> None:
     first (the driver verifies the first 50 registered per round —
     module import order alone is too coarse because checked and
     unchecked queries share modules).
+
+    The modules are found on disk: every module under this package
+    whose name has no leading underscore, imported in name order.
     """
-    from . import (  # noqa: F401
-        ext_dedup,
-        ext_graph,
-        ext_simhash,
-        ext_text,
-        ext_text2,
-        ext_text3,
-        ext_similarity,
-        ext_multimodal,
-        ext_multimodal2,
-        ext_training,
-        ext_training2,
-        ext_web,
-        ext_similarity2,
-        spark4_features,
-        spark4_features2,
-        dq_queries,
-        agg_families,
-        agg_families2,
-        ext_sketches,
-        ext_text4,
-        ext_pq,
-        ext_semdedup,
-        ext_training3,
-        ext_dedup2,
-        streaming_queries,
-        sink_queries,
-        ext_text5,
-        ext_graph2,
-        ext_graph3,
-        ext_dedup3,
-        ext_match,
-        ext_text6,
-        ext_training5,
-        ext_training6,
-        ext_graph4,
-        agg_families4,
-        ext_sketches2,
-        ext_sketches3,
-        ext_datacard,
-        ext_dedup4,
-        source_queries,
-        ext_training7,
-        streaming_queries2,
-        dq_queries2,
-        dq_queries3,
-        ext_udaf,
-        incremental_queries,
-        evolution_queries,
-        sink_queries2,
-        scalar_funcs3,
-        events6,
-        events8,
-        events9,
-        events10,
-        events11,
-        events12,
-        ext_training8,
-        analytics,
-        ext_graph5,
-        ext_text7,
-        ext_training9,
-        events13,
-        events14,
-        dq_queries4,
-        relational6,
-        ext_dedup5,
-        streaming_queries3,
-        ext_training10,
-        events15,
-        ext_training11,
-        catalog_queries2,
-        events16,
-        relational7,
-        ext_dedup6,
-        events17,
-        events18,
-        dq_queries5,
-        ext_sketches4,
-        spark4_features3,
-        spark4_features4,
-        spark4_features5,
-        spark4_features6,
-        pandas_api_queries,
-        relational8,
-        ext_training12,
-        ext_dedup7,
-        ml_queries2,
-        windows4,
-        streaming_queries4,
-        streaming_queries5,
-        ml_queries3,
-        events19,
-        dq_queries6,
-        events20,
-        relational9,
-        ext_text8,
-        windows5,
-        ext_text9,
-        relational10,
-        relational12,
-        ext_graph6,
-        ext_graph7,
-        ext_training13,
-        ext_training14,
-        ext_similarity3,
-        ext_training15,
-        ext_training16,
-        ml_queries4,
-        ml_queries5,
-        spark4_features7,
-        dq_queries8,
-        ext_training17,
-        ext_text12,
-        ml_queries6,
-        relational13,
-        ext_datacard2,
-        ext_multimodal3,
-        agg_families6,
-        scalar_funcs5,
-        windows6,
-        scalar_funcs6,
-        events24,
-        source_queries2,
-        source_queries3,
-        events21,
-        relational11,
-        ext_text10,
-        events22,
-        dq_queries7,
-        stats_queries,
-        agg_families5,
-        events23,
-        ext_text11,
-        scalar_funcs4,
-        catalog_queries,
-        sink_queries3,
-        stability_queries,
-        ext_training4,
-        events7,
-        relational5,
-        ext_search,
-        ext_search2,
-        agg_families3,
-        events5,
-        pipeline_queries,
-        events,
-        events2,
-        events3,
-        events4,
-        scd,
-        scalar_funcs,
-        scalar_funcs2,
-        windows2,
-        windows3,
-        pipeline_udf,
-        docx_queries,
-        ml_queries,
-        relational4,
-        windows,
-        relational,
-        relational2,
-        relational3,
-    )
+    for mod in sorted(pkgutil.iter_modules(__path__), key=lambda m: m.name):
+        if not mod.name.startswith("_"):
+            importlib.import_module(f"{__name__}.{mod.name}")
 
     # Never-checked queries outrank stale-green re-checks: a query
     # with NO driver row ever is a bigger evidence hole than one
@@ -346,7 +184,6 @@ def load_all_queries() -> None:
     order = _ordered(
         list(QUERIES),
         _evidence_from_past_rounds(),
-        _NEW_THIS_ROUND,
         _FORCE_RECHECK,
         rows_only=set(QUERIES) - set(ORACLE),
     )

@@ -121,7 +121,6 @@ def test_every_artifact_kind_is_enumerated_with_its_doctrine_row():
 _STRAY_MEMO_EXEMPT = {
     "QUERIES": "query registry, filled once at import",
     "ORACLE": "oracle registry, filled once at import",
-    "_NEW_THIS_ROUND": "registry ordering state",
     "_SCRATCH_ROOT": "process-level scratch path, not session data",
 }
 

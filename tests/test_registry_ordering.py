@@ -21,13 +21,9 @@ def registry():
 
 
 def test_priority_list_names_all_resolve(registry):
-    """Every force/new name must exist in QUERIES: a missing name means
-    a module was silently lost (clobber guard, round-7 incident)."""
-    missing = [
-        n
-        for n in registry._NEW_THIS_ROUND + registry._FORCE_RECHECK
-        if n not in registry.QUERIES
-    ]
+    """Every force-listed name must exist in QUERIES: a missing name
+    means a module was silently lost (clobber guard, round-7 incident)."""
+    missing = [n for n in registry._FORCE_RECHECK if n not in registry.QUERIES]
     assert missing == [], f"silently-lost queries: {missing}"
 
 
@@ -84,7 +80,6 @@ def test_interleave_policy_on_synthetic_registry():
     order = _ordered(
         registered,
         last_green,
-        new_this_round=[f"n{i}" for i in range(6)],
         force_recheck=["g3", "g5", "g7"],
         window=50,
     )
@@ -101,7 +96,6 @@ def test_interleave_policy_on_synthetic_registry():
     order = _ordered(
         many_never + ["g0", "g1"],
         {"g0": 1, "g1": 2},
-        new_this_round=many_never,
         force_recheck=["g1"],
         window=5,
     )
@@ -111,7 +105,6 @@ def test_interleave_policy_on_synthetic_registry():
     order = _ordered(
         ["a", "b", "c", "d", "e", "f", "g0"],
         {"g0": 1},
-        new_this_round=["a", "b", "c", "d", "e", "f"],
         force_recheck=["g0"],
         window=50,
     )
@@ -123,22 +116,30 @@ def test_interleave_policy_on_synthetic_registry():
     order = _ordered(
         ["h_new", "h_old", "r_old", "r_new"],
         {"h_new": 9, "h_old": 1, "r_old": 1, "r_new": 9},
-        new_this_round=[],
         force_recheck=[],
         window=50,
         rows_only={"r_old", "r_new"},
     )
     assert order == ["h_old", "h_new", "r_old", "r_new"]
 
-    # --- names not registered are ignored in both priority lists
+    # --- force-listed names that are not registered are ignored
     order = _ordered(
         ["x", "g0"],
         {"g0": 1},
-        new_this_round=["ghost", "x"],
         force_recheck=["phantom"],
         window=50,
     )
     assert order == ["x", "g0"]
+
+    # --- ties break by name, not by registration order: registration
+    # order follows the import graph, which must not steer the window
+    order = _ordered(
+        ["n_b", "g_z", "g_a", "n_a", "g_old", "g_m"],
+        {"g_z": 2, "g_a": 2, "g_old": 1, "g_m": 2},
+        force_recheck=[],
+        window=50,
+    )
+    assert order == ["n_a", "n_b", "g_old", "g_a", "g_m", "g_z"]
 
 
 def test_oracle_keys_subset_of_queries(registry):
@@ -147,3 +148,45 @@ def test_oracle_keys_subset_of_queries(registry):
     assert set(registry.ORACLE) <= set(registry.QUERIES)
     qorder = [n for n in registry.QUERIES if n in registry.ORACLE]
     assert qorder == list(registry.ORACLE)
+
+
+def test_load_all_queries_discovers_every_module(tmp_path):
+    """A query module joins the registry by existing on the package
+    path — no import list to edit — and every module under queries/
+    without a leading underscore is imported and owns at least one
+    registered query (a module that registers nothing is dead weight
+    or a silently broken decorator)."""
+    import pkgutil
+    import sys
+
+    from syllabus_sense_spark import queries as q
+
+    probe = "zz_discovery_probe"
+    (tmp_path / f"{probe}.py").write_text(
+        "from . import register\n"
+        "\n"
+        "\n"
+        f"@register('{probe}_rows', oracle='SELECT 1 AS one')\n"
+        f"def {probe}_rows(spark, sf_dir):\n"
+        "    return spark.range(1).selectExpr('1 AS one')\n"
+    )
+    modules = [
+        m.name for m in pkgutil.iter_modules(q.__path__) if not m.name.startswith("_")
+    ]
+    saved_path = list(q.__path__)
+    q.__path__.append(str(tmp_path))
+    try:
+        q.load_all_queries()
+        assert f"{probe}_rows" in q.QUERIES
+        assert q.ORACLE[f"{probe}_rows"] == "SELECT 1 AS one"
+
+        owners = {fn.__module__ for fn in q.QUERIES.values()}
+        for name in modules:
+            assert f"{q.__name__}.{name}" in sys.modules, f"not imported: {name}"
+        orphans = [n for n in modules if f"{q.__name__}.{n}" not in owners]
+        assert orphans == [], f"modules registering no query: {orphans}"
+    finally:
+        q.QUERIES.pop(f"{probe}_rows", None)
+        q.ORACLE.pop(f"{probe}_rows", None)
+        sys.modules.pop(f"{q.__name__}.{probe}", None)
+        q.__path__[:] = saved_path
