@@ -22,12 +22,12 @@ partitioning) is identical.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..schemas import PLANNED_QUESTION_SCHEMA, QUESTION_SCHEMA, SUBTOPIC_SCHEMA
 
@@ -81,9 +81,14 @@ def extract_subtopics(topics: DataFrame, subject: str = "chemistry") -> DataFram
     return topics.mapInPandas(gen, SUBTOPIC_SCHEMA)
 
 
-def plan_questions(subtopics: DataFrame, min_per_subtopic: int = 9) -> DataFrame:
+def plan_questions(
+    subtopics: DataFrame, min_per_subtopic: int = 9, carry: Sequence[str] = ()
+) -> DataFrame:
     """A9: plan generation — one plan per topic, >=9 planned questions
     per subtopic (prompt contract syllabus_ai_graph.py:112).
+
+    Output: ``PLANNED_QUESTION_SCHEMA``, then the ``carry`` subtopic
+    columns (types kept), copied onto every plan row of the subtopic.
 
     Implementation note: the reference plans per topic, but each
     planned question is a pure function of its own subtopic row — so
@@ -94,6 +99,10 @@ def plan_questions(subtopics: DataFrame, min_per_subtopic: int = 9) -> DataFrame
     of subtopics; partitions average thousands of rows). The same
     optimization is documented on ``generate_questions``.
     """
+
+    schema = T.StructType(
+        PLANNED_QUESTION_SCHEMA.fields + [subtopics.schema[c] for c in carry]
+    )
 
     def gen(batches):
         md5 = hashlib.md5
@@ -109,10 +118,12 @@ def plan_questions(subtopics: DataFrame, min_per_subtopic: int = 9) -> DataFrame
             c_sub: list[str] = []
             c_diff: list[str] = []
             c_concept: list[str] = []
-            for name, topic_title, key_concepts in zip(
+            c_carry: dict[str, list] = {c: [] for c in carry}
+            for name, topic_title, key_concepts, *context in zip(
                 pdf["subtopic_name"].tolist(),
                 pdf["topic_title"].tolist(),
                 pdf["key_concepts"].tolist(),
+                *(pdf[c].tolist() for c in carry),
             ):
                 n_q = min_per_subtopic + _h(f"nq:{name}", 3)
                 concepts = list(key_concepts) if key_concepts is not None else []
@@ -127,6 +138,8 @@ def plan_questions(subtopics: DataFrame, min_per_subtopic: int = 9) -> DataFrame
                     c_sub.append(name)
                     c_diff.append(DIFFICULTIES[_h(qid, 3)])
                     c_concept.append(concepts[i % n_c])
+                for col, value in zip(c_carry.values(), context):
+                    col.extend([value] * n_q)
             yield pd.DataFrame(
                 {
                     "question_id": c_qid,
@@ -135,11 +148,12 @@ def plan_questions(subtopics: DataFrame, min_per_subtopic: int = 9) -> DataFrame
                     "difficulty": c_diff,
                     "concept_area": c_concept,
                     "status": "planned",
+                    **c_carry,
                 },
-                columns=[f.name for f in PLANNED_QUESTION_SCHEMA.fields],
+                columns=schema.fieldNames(),
             )
 
-    return subtopics.mapInPandas(gen, PLANNED_QUESTION_SCHEMA)
+    return subtopics.mapInPandas(gen, schema)
 
 
 def generate_questions(batches: DataFrame) -> DataFrame:
@@ -149,8 +163,8 @@ def generate_questions(batches: DataFrame) -> DataFrame:
     exactly 1 correct, non-empty explanation/hint, id + difficulty
     preserved (syllabus_ai_graph.py:220-231).
 
-    Input must carry plan columns + the joined subtopic context
-    (academic_class) — the miss-drop join (A12) happens upstream.
+    Input: plan rows carrying their subtopic's academic_class
+    (``plan_questions(carry=...)``), so A12 has no row to drop.
 
     Implementation note: this is ``mapInPandas`` with a per-(topic,
     batch_id) loop inside the worker rather than ``applyInPandas``
@@ -159,7 +173,7 @@ def generate_questions(batches: DataFrame) -> DataFrame:
     Arrow conversion per *partition* replaces one per *batch*, which
     at 5-row batches is the difference between 32 and n_questions/5
     nested-schema conversions. The grouped shuffle is unnecessary
-    because generation is row-local given the joined context.
+    because generation is row-local given the carried context.
     """
 
     # Row-invariant nested values, shared across rows (the Arrow

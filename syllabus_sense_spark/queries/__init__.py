@@ -64,9 +64,10 @@ _FORCE_RECHECK: list[str] = [
     "graph_pagerank_trade",
     "graph_bfs_levels",
     "training_importance_selection",
-    # The flagship chain's subtopic dimension is a rotated checkpoint
-    # and its generation exchange hashes on topic.
+    # plan_questions gained ``carry``; the flagship carries academic_class
+    # on plan rows (no subtopic checkpoint, no A12 join).
     "pipeline_flagship_questions",
+    "pipeline_plan_questions",
 ]
 
 

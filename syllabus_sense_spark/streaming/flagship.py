@@ -12,6 +12,8 @@ documents and Spark assigns whole files to micro-batches
 runs the identical batch chain (``flagship_from_elements``) and
 appends to a partitioned parquet sink (A14) — so streaming output ==
 batch output, which ``tests/test_streaming_flagship.py`` asserts.
+Each micro-batch is one Spark execution (the sink write) and stores
+nothing, so a long drain holds no per-batch state between triggers.
 
 At 100 TB this is the production ingest shape: new document dumps land
 as files; ``availableNow`` drains the backlog with bounded state (no

@@ -157,24 +157,26 @@ def test_bpe_loop_releases_superseded_words(spark, sf_dir):
 
 
 def test_flagship_repeated_invocations_do_not_accumulate(spark, sf_dir):
-    """The flagship chain's subtopic dimension backs both the plan
-    branch and the A12 context join. Each CLI call or streaming
-    micro-batch invokes the chain once on new documents, so the
-    dimension's storage must be rotated out by the next invocation,
-    not pinned for the life of the session. Three document slices
-    stand in for three drops (identical inputs would share one cache
-    entry and hide a per-call leak)."""
+    """The flagship chain stores nothing: plan rows carry their
+    subtopic context, so no subtopic dimension is materialized. Each
+    CLI call or streaming micro-batch invokes the chain once on new
+    documents, and each invocation must leave the session's
+    persisted-RDD count unchanged. Three document slices stand in for
+    three drops (identical inputs would share one cache entry and hide
+    a per-call leak)."""
     from pyspark.sql import functions as F
 
     from syllabus_sense_spark.pipeline.flagship import flagship_from_elements
     from syllabus_sense_spark.sources.synthetic import filtered_elements
 
     elements = filtered_elements(spark, sf_dir)
+    base = _n_persistent(spark)
     counts = []
     for i in range(3):
         drop = elements.filter(F.col("sdoc_id") % 3 == i)
         assert flagship_from_elements(drop).count() > 0
         counts.append(_n_persistent(spark))
-    assert counts[2] <= counts[0], (
-        f"live persisted RDDs grew across flagship invocations: {counts}"
+    assert counts == [base] * 3, (
+        f"flagship invocations changed the live persisted-RDD count "
+        f"from {base}: {counts}"
     )

@@ -268,9 +268,69 @@ def test_curate_survivor_is_min_doc_id_line_at_any_shuffle_width(
     assert not any(r.doc_id >= 10_000_000 for r in rows["32"])
 
 
-def test_curate_is_one_execution_and_caches_nothing(spark, sf_dir, tmp_path, capsys):
-    """Each ``curate`` call adds exactly one SQL execution (the shard
-    write), and three calls on distinct dumps pin no cached RDD."""
+def _one_topic_drop(path, title: str, note: str) -> str:
+    """A drop of one generated document holding one topic."""
+    path.mkdir()
+    body = paragraph(f"Core element - {title}") + paragraph(note)
+    make_docx(str(path / "doc.docx"), body)
+    return str(path)
+
+
+def test_cli_same_title_documents_write_the_sum_of_their_runs(spark, tmp_path):
+    """Two one-topic documents sharing a title: one drop holding both
+    writes as many rows as the two single-document runs together. The
+    A12 subtopic context is looked up by subtopic name, which repeats
+    across such documents, so a name-keyed join pairs each plan row
+    with both documents' subtopics. Rows only: question ids still
+    collide until they are derived from the document as well."""
+    singles = [
+        _one_topic_drop(tmp_path / f"single{i}", "Atoms", f"Atoms, take {i}.")
+        for i in range(2)
+    ]
+    both = tmp_path / "both"
+    both.mkdir()
+    for i, single in enumerate(singles):
+        os.link(os.path.join(single, "doc.docx"), both / f"doc{i}.docx")
+
+    def rows(src: str) -> int:
+        out = str(tmp_path / f"{os.path.basename(src)}-questions")
+        assert main([src, out]) == 0
+        return spark.read.parquet(out).count()
+
+    per_document = [rows(s) for s in singles]
+    assert per_document[0] > 0
+    assert rows(str(both)) == sum(per_document)
+
+
+def _curate_calls(spark, sf_dir, tmp_path, capsys):
+    docs = _documents(spark, sf_dir, 40)
+
+    def call(i: int) -> None:
+        shifted = [{**d, "doc_id": d["doc_id"] + 1000 * i} for d in docs]
+        dump = _write_dump(tmp_path / f"dump{i}.jsonl", shifted, ("BROKEN {line",))
+        report = _curate(dump, str(tmp_path / f"shards{i}"), capsys)
+        assert report["quarantined"] == 1
+
+    return call
+
+
+def _docx_calls(spark, sf_dir, tmp_path, capsys):
+    def call(i: int) -> None:
+        drop = _one_topic_drop(tmp_path / f"drop{i}", f"Topic {i}", f"Topic {i} notes.")
+        assert main([drop, str(tmp_path / f"questions{i}")]) == 0
+
+    return call
+
+
+@pytest.mark.parametrize(
+    "calls", [_curate_calls, _docx_calls], ids=["curate", "docx"]
+)
+def test_cli_call_is_one_execution_and_caches_nothing(
+    spark, sf_dir, tmp_path, capsys, calls
+):
+    """Each CLI call — ``curate`` or the DOCX chain — adds exactly one
+    SQL execution (its sink write), and three calls on distinct inputs
+    leave the persisted-RDD count where it was."""
     sc = spark.sparkContext
     store = spark._jsparkSession.sharedState().statusStore()
     bus = sc._jsc.sc().listenerBus()
@@ -280,14 +340,11 @@ def test_curate_is_one_execution_and_caches_nothing(spark, sf_dir, tmp_path, cap
         runs = store.executionsList()
         return {runs.apply(i).executionId() for i in range(runs.size())}
 
-    docs = _documents(spark, sf_dir, 40)
+    call = calls(spark, sf_dir, tmp_path, capsys)
     persisted = sc._jsc.getPersistentRDDs().size()
     for i in range(3):
-        shifted = [{**d, "doc_id": d["doc_id"] + 1000 * i} for d in docs]
-        dump = _write_dump(tmp_path / f"dump{i}.jsonl", shifted, ("BROKEN {line",))
         before = execution_ids()
-        report = _curate(dump, str(tmp_path / f"shards{i}"), capsys)
-        assert report["quarantined"] == 1
+        call(i)
         assert len(execution_ids() - before) == 1
     assert sc._jsc.getPersistentRDDs().size() == persisted
 
