@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..schemas import PLANNED_QUESTION_SCHEMA, QUESTION_SCHEMA, SUBTOPIC_SCHEMA
+from ..session import drop_zip_importers
 
 DIFFICULTIES = ("Easy", "Medium", "Hard")
 
@@ -78,7 +79,7 @@ def extract_subtopics(topics: DataFrame, subject: str = "chemistry") -> DataFram
                 out, columns=[f.name for f in SUBTOPIC_SCHEMA.fields]
             )
 
-    return topics.mapInPandas(gen, SUBTOPIC_SCHEMA)
+    return topics.mapInPandas(drop_zip_importers(gen), SUBTOPIC_SCHEMA)
 
 
 def plan_questions(
@@ -153,7 +154,7 @@ def plan_questions(
                 columns=schema.fieldNames(),
             )
 
-    return subtopics.mapInPandas(gen, schema)
+    return subtopics.mapInPandas(drop_zip_importers(gen), schema)
 
 
 def generate_questions(batches: DataFrame) -> DataFrame:
@@ -253,4 +254,4 @@ def generate_questions(batches: DataFrame) -> DataFrame:
             # stand-in, not the generation arithmetic).
             yield _frame_for(pdf)
 
-    return batches.mapInPandas(gen, QUESTION_SCHEMA)
+    return batches.mapInPandas(drop_zip_importers(gen), QUESTION_SCHEMA)

@@ -68,6 +68,12 @@ _FORCE_RECHECK: list[str] = [
     # on plan rows (no subtopic checkpoint, no A12 join).
     "pipeline_flagship_questions",
     "pipeline_plan_questions",
+    # The DOCX chain's Arrow seams run through
+    # ``session.drop_zip_importers``; a corrupt DOCX is decided once, in
+    # ``parse_docx_bytes`` (both DOCX scans lost their broad catch).
+    "docx_parse_topics",
+    "pipeline_extract_subtopics",
+    "source_docx_pushdown",
 ]
 
 

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..errors import InvalidDocumentSourceError
+from ..session import drop_zip_importers
 
 W_NS = "{http://schemas.openxmlformats.org/wordprocessingml/2006/main}"
 
@@ -60,10 +61,22 @@ def parse_docx_bytes(content: bytes) -> list[tuple[int, str, str | None, list | 
     w:p → paragraph (skipped if stripped text is empty, :61), w:tbl →
     table of cell texts, anything else dropped (returns None there;
     here simply not emitted).
+
+    A corrupt container — not a zip, no ``word/document.xml``, or
+    malformed XML — yields ``[]``: the document is skipped and the
+    scan goes on (the reference's failure→empty discipline, SURVEY.md
+    §4 fault isolation; syllabus_ai_graph.py:88-90). Any other error
+    is a fault of the engine and propagates.
     """
-    with zipfile.ZipFile(io.BytesIO(content)) as zf:
-        xml = zf.read("word/document.xml")
-    root = ET.fromstring(xml)
+    try:
+        with zipfile.ZipFile(io.BytesIO(content)) as zf:
+            try:
+                xml = zf.read("word/document.xml")
+            except KeyError:
+                return []
+        root = ET.fromstring(xml)
+    except (zipfile.BadZipFile, ET.ParseError):
+        return []
     body = root.find(f"{W_NS}body")
     out = []
     idx = 0
@@ -89,8 +102,8 @@ def read_docx_elements(spark: SparkSession, path: str) -> DataFrame:
     document order, with the source path as document identity.
 
     Path-level misuse raises :class:`InvalidDocumentSourceError` at
-    the driver (A20); per-document corruption stays task-level
-    failure→empty (see ``parse`` below).
+    the driver (A20); a corrupt document yields no rows
+    (``parse_docx_bytes``).
     """
     if "://" not in path and not os.path.exists(path):
         raise InvalidDocumentSourceError(path)
@@ -105,15 +118,7 @@ def read_docx_elements(spark: SparkSession, path: str) -> DataFrame:
         for pdf in batches:
             recs = []
             for _, row in pdf.iterrows():
-                try:
-                    parsed = parse_docx_bytes(row["content"])
-                except Exception:
-                    # Unparseable container → skip the document, keep
-                    # the pipeline alive — the reference's
-                    # failure→empty discipline (SURVEY.md §4 fault
-                    # isolation; syllabus_ai_graph.py:88-90).
-                    continue
-                for idx, etype, text, rows in parsed:
+                for idx, etype, text, rows in parse_docx_bytes(row["content"]):
                     recs.append(
                         {
                             "path": row["path"],
@@ -127,7 +132,7 @@ def read_docx_elements(spark: SparkSession, path: str) -> DataFrame:
                 recs, columns=[f.name for f in DOCX_ELEMENT_SCHEMA.fields]
             )
 
-    return binary.mapInPandas(parse, DOCX_ELEMENT_SCHEMA)
+    return binary.mapInPandas(drop_zip_importers(parse), DOCX_ELEMENT_SCHEMA)
 
 
 def docx_topics(

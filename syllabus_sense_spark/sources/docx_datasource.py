@@ -88,15 +88,11 @@ class DocxDataSourceReader(DataSourceReader):
         return [DocxFilePartition(p) for p in files]
 
     def read(self, partition: DocxFilePartition) -> Iterator[tuple]:
-        try:
-            with open(partition.path, "rb") as f:
-                content = f.read()
-            parsed = parse_docx_bytes(content)
-        except Exception:
-            # Unparseable container → no rows for this file; the scan
-            # of every other document is unaffected.
-            return
-        for idx, etype, text, rows in parsed:
+        # A corrupt container parses to no rows (``parse_docx_bytes``);
+        # the scan of every other document is unaffected.
+        with open(partition.path, "rb") as f:
+            content = f.read()
+        for idx, etype, text, rows in parse_docx_bytes(content):
             if self.type_eq is not None and etype != self.type_eq:
                 continue
             yield (partition.path, idx, etype, text, rows)

@@ -6,19 +6,26 @@ syllabus_parser drop-unknown)."""
 
 from __future__ import annotations
 
+import os
 import zipfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from syllabus_sense_spark.sinks import read_questions_json
+from syllabus_sense_spark.sources import docx
 from syllabus_sense_spark.sources.docx import read_docx_elements
+from syllabus_sense_spark.sources.docx_datasource import (
+    DocxDataSourceReader,
+    DocxFilePartition,
+)
 
 
-def test_corrupt_docx_skipped_others_survive(spark, tmp_path):
-    """An unparseable container is dropped; valid documents in the
-    same scan still parse (task-level fault isolation)."""
-    good = tmp_path / "good.docx"
-    with zipfile.ZipFile(good, "w") as zf:
+def _write_drop_with_corrupt_containers(d) -> None:
+    """One good document plus the three corrupt shapes
+    ``parse_docx_bytes`` skips: not a zip, a zip without
+    ``word/document.xml``, and malformed document XML."""
+    with zipfile.ZipFile(d / "good.docx", "w") as zf:
         zf.writestr(
             "word/document.xml",
             '<w:document xmlns:w="http://schemas.openxmlformats.org/'
@@ -26,12 +33,45 @@ def test_corrupt_docx_skipped_others_survive(spark, tmp_path):
             "<w:p><w:r><w:t>hello world</w:t></w:r></w:p>"
             "</w:body></w:document>",
         )
-    (tmp_path / "broken.docx").write_bytes(b"this is not a zip container")
+    (d / "broken.docx").write_bytes(b"this is not a zip container")
+    with zipfile.ZipFile(d / "no_document.docx", "w") as zf:
+        zf.writestr("word/styles.xml", "<styles/>")
+    with zipfile.ZipFile(d / "bad_xml.docx", "w") as zf:
+        zf.writestr("word/document.xml", "<w:document><w:body><w:p>")
+
+
+def test_corrupt_docx_skipped_others_survive(spark, tmp_path):
+    """Unparseable containers are dropped; valid documents in the
+    same scan still parse (task-level fault isolation)."""
+    _write_drop_with_corrupt_containers(tmp_path)
 
     out = read_docx_elements(spark, str(tmp_path)).collect()
     assert len(out) == 1
     assert out[0].text == "hello world"
     assert out[0].path.endswith("good.docx")
+
+
+def test_datasource_skips_corrupt_docx_and_propagates_other_errors(
+    tmp_path, monkeypatch
+):
+    """In-process: the ``docx`` data source reads no rows from a corrupt
+    container, but an error that is not a corrupt container (here a
+    ``RuntimeError`` from the XML parser) propagates instead of being
+    swallowed as an empty document."""
+    _write_drop_with_corrupt_containers(tmp_path)
+    reader = DocxDataSourceReader({"path": str(tmp_path)})
+    rows = {
+        os.path.basename(p.path): list(reader.read(p)) for p in reader.partitions()
+    }
+    assert [n for n, r in rows.items() if r] == ["good.docx"]
+    assert set(rows) == {"good.docx", "broken.docx", "no_document.docx", "bad_xml.docx"}
+
+    def boom(_xml):
+        raise RuntimeError("parser fault")
+
+    monkeypatch.setattr(docx.ET, "fromstring", boom)
+    with pytest.raises(RuntimeError, match="parser fault"):
+        list(reader.read(DocxFilePartition(str(tmp_path / "good.docx"))))
 
 
 def test_corrupt_json_sink_rows_quarantine_as_nulls(spark, tmp_path):
