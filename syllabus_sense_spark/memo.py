@@ -44,9 +44,9 @@ def release_checkpoint(df) -> None:
     TRUNCATED, so any still-unmaterialized DataFrame over the released
     checkpoint does not recompute — its next action fails hard with
     "checkpoint block not found". Release only after every downstream
-    consumer has run its action (the loop call sites materialize the
-    successor checkpoint first; `rotate_checkpoint` defers release to
-    the next invocation for exactly this reason)."""
+    consumer has run its action (`iterate` materializes the successor
+    round first; `rotate_checkpoint` defers release to the next
+    invocation for exactly this reason)."""
     if df is None:
         return
     try:
@@ -62,6 +62,24 @@ def release_checkpoint(df) -> None:
             plan.rdd().unpersist(False)
     except Exception:  # noqa: BLE001 — release is advisory
         pass
+
+
+def iterate(state, step, rounds, until=None):
+    """The one checkpointed round loop: ``state =
+    step(state).localCheckpoint()`` up to ``rounds`` times, stopping
+    after the first round where ``until(state)`` holds. Each round is
+    materialized before the round it replaces is released; the
+    caller's input is never released (a session artifact, or the
+    caller's to free). Returns the last round, which the caller
+    rotates when it backs the result (``rotate_checkpoint``)."""
+    first = state
+    for _ in range(rounds):
+        prev, state = state, step(state).localCheckpoint()
+        if prev is not first:
+            release_checkpoint(prev)
+        if until is not None and until(state):
+            break
+    return state
 
 
 def _release(value) -> None:

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..memo import release_checkpoint
+from ..memo import iterate, release_checkpoint
 
 M_SUBSPACES = 8
 K_CODES = 16
@@ -61,17 +61,15 @@ def train_codebook(subs: DataFrame, id_col: str = "vec_id") -> DataFrame:
     iterations seeded with the K lowest-id vectors' subvectors.
 
     Each round is one broadcast join (assign) + one aggregate
-    (re-estimate); ``localCheckpoint`` truncates the growing lineage
-    exactly like the connected-components operator. Codes that lose
-    all members keep their previous centroid (left join + coalesce),
-    so the codebook never shrinks.
+    (re-estimate); ``memo.iterate`` checkpoints every round, so the
+    lineage stays flat. Codes that lose all members keep their
+    previous centroid (left join + coalesce), so the codebook never
+    shrinks.
 
-    Checkpoint lifecycle: superseded per-round centroid checkpoints
-    are released as soon as their successor is materialized; the FINAL
-    centroids stay live for the whole session by design — training
-    runs once per session behind the ``session_artifact`` memo
-    (ext_pq._pq_index), so the leak-law exposure is one K_CODES-row
-    table per session, not per query.
+    Checkpoint lifecycle: the FINAL centroids stay live for the whole
+    session by design — training runs once per session behind the
+    ``session_artifact`` memo (ext_pq._pq_index), so the leak-law
+    exposure is one K_CODES-row table per session, not per query.
     """
     w = Window.orderBy(F.col(id_col))
     seed_ids = (
@@ -83,15 +81,14 @@ def train_codebook(subs: DataFrame, id_col: str = "vec_id") -> DataFrame:
     # Seeding is a one-off driver-side selection of K tiny rows; the
     # global row_number window runs on the distinct-id table, not the
     # corpus. (At production scale: sample + take(K).)
-    centroids = (
+    seed = (
         subs.join(F.broadcast(seed_ids), id_col)
         .select("j", (F.col("rn") - 1).alias("code"), F.col("sub").alias("centroid"))
         .localCheckpoint()
     )
-    subdim = None
-    for _ in range(N_ITER):
-        if subdim is None:
-            subdim = len(centroids.select("centroid").first()[0])
+    subdim = len(seed.select("centroid").first()[0])
+
+    def lloyd(centroids):
         assigned = assign_codes(subs, centroids, id_col)
         joined = assigned.join(subs, [id_col, "j"]).select("j", "code", "sub")
         dims = [
@@ -106,17 +103,14 @@ def train_codebook(subs: DataFrame, id_col: str = "vec_id") -> DataFrame:
                 F.array(*[F.col(f"d{i}") for i in range(subdim)]).alias("new_centroid"),
             )
         )
-        prev = centroids
-        centroids = (
-            centroids.join(new, ["j", "code"], "left")
-            .select(
-                "j",
-                "code",
-                F.coalesce("new_centroid", "centroid").alias("centroid"),
-            )
-            .localCheckpoint()
+        return centroids.join(new, ["j", "code"], "left").select(
+            "j",
+            "code",
+            F.coalesce("new_centroid", "centroid").alias("centroid"),
         )
-        release_checkpoint(prev)
+
+    centroids = iterate(seed, lloyd, N_ITER)
+    release_checkpoint(seed)
     return centroids
 
 

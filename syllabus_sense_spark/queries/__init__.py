@@ -74,6 +74,15 @@ _FORCE_RECHECK: list[str] = [
     "docx_parse_topics",
     "pipeline_extract_subtopics",
     "source_docx_pushdown",
+    # Round loops moved onto ``memo.iterate``; k-core probes ``copurchase_adj``.
+    "graph_kcore_peel",
+    "cluster_kmeans_1d_prices",
+    "dedup_components",
+    "dedup_canonical_keep",
+    "match_entity_canonical",
+    "dedup_semantic_clusters",
+    "similarity_pq_adc",
+    "search_semantic_docs_pq",
 ]
 
 

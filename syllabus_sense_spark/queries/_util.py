@@ -22,7 +22,7 @@ import threading
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..memo import release_checkpoint, rotate_checkpoint  # noqa: F401 — re-exported
+from ..memo import iterate, release_checkpoint, rotate_checkpoint  # noqa: F401 — re-exported
 
 
 def epoch_us(col: str | Column) -> Column:

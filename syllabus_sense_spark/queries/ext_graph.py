@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from . import register
-from ._util import release_checkpoint, rotate_checkpoint, ser_checkpoint
+from ._util import iterate, release_checkpoint, rotate_checkpoint, ser_checkpoint
 from .ext_dedup import (
     _MINHASH_ORACLE,
     _corpus,
@@ -65,13 +65,6 @@ _CONTRACT_FANIN = 32
 # sub-partitions (component-preserving; quality, not correctness,
 # degrades at the boundary).
 _UF_MAX_NODES = 10_000_000
-
-
-# Superseded per-round checkpoints are released eagerly (the loop
-# replaces its checkpoint every round; in a long-lived session the
-# dead blocks otherwise accumulate until storage exhausts — an
-# 8-heavy-query sf10 probe session died on exactly this).
-_release_checkpoint = release_checkpoint
 
 
 def connected_components(
@@ -150,7 +143,7 @@ def connected_components(
         import pandas as pd
 
         rows = edges.collect()
-        _release_checkpoint(edges)
+        release_checkpoint(edges)
         parent: dict = {}
 
         def find(x):
@@ -182,12 +175,12 @@ def connected_components(
         return edges.sparkSession.createDataFrame(
             pdf, "doc_id long, component_id long"
         )
-    retired = edges  # superseded checkpoint, released once replaced
+    # the live pair-stream checkpoint: the input, then each level's stars
+    stars = edges
     for _ in range(contract_levels):
         nparts = max(1, edges.rdd.getNumPartitions())
-        stars = ser_checkpoint(partition_local_contract(edges))
-        _release_checkpoint(retired)
-        retired = stars
+        prev, stars = stars, ser_checkpoint(partition_local_contract(edges))
+        release_checkpoint(prev)
         if nparts == 1 and (
             stars.count()
             == stars.select("doc_id").distinct().count()
@@ -214,24 +207,25 @@ def connected_components(
     if dedup_edges:
         und = und.distinct()
     und = ser_checkpoint(und)
-    _release_checkpoint(retired)  # und now holds the (contracted) edges
-    labels = (
+    release_checkpoint(stars)  # und now holds the (contracted) edges
+    seed = (
         und.select(F.col("src").alias("doc_id"))
         .distinct()
         .withColumn("component_id", F.col("doc_id"))
         .localCheckpoint()
     )
-    retired = labels  # each round's checkpoint supersedes this one
     # Node count is loop-invariant (labels never gain or lose rows),
     # so one count up front both sizes the broadcast decision and
     # costs nothing against the per-round convergence action.
-    n_labels = labels.count()
+    n_labels = seed.count()
     if n_labels <= _BROADCAST_MAX_LABELS:
         hint = F.broadcast
     else:  # degrade to shuffle joins rather than fail the broadcast
         def hint(df: DataFrame) -> DataFrame:
             return df
-    for _ in range(max_iter):
+
+    def step(labels: DataFrame) -> DataFrame:
+        labels = labels.select("doc_id", "component_id")
         # Broadcast the LABEL side: labels are one compact row per
         # node-with-an-edge (checkpointed RDDs carry no stats, so the
         # auto-broadcast threshold never fires), while the edge table
@@ -259,7 +253,7 @@ def connected_components(
             F.col("component_id").alias("mid_label"),
         )
         # Carry the old label through the update so convergence is a
-        # cheap filter-count over the checkpointed result — folding
+        # cheap filter-count over the checkpointed round — folding
         # what used to be a separate labels⨝new_labels shuffle join
         # into the iteration's one materialization. Both lookup sides
         # (neighbor_min, hop) are label-table-sized — at most one row
@@ -283,20 +277,20 @@ def connected_components(
             plan_probe.append(
                 upd._jdf.queryExecution().executedPlan().toString()
             )
-        upd = upd.localCheckpoint()
-        _release_checkpoint(retired)  # previous round's blocks are dead
-        retired = upd
-        changed = upd.filter(F.col("component_id") != F.col("prev_id")).count()
-        labels = upd.select("doc_id", "component_id")
-        if changed == 0:
-            break
-    # the edge table is dead once the labels converge; the final
-    # checkpoint (retired == the returned labels' backing RDD) stays
-    # live until the NEXT invocation rotates it out — the caller's
-    # action still reads it
-    _release_checkpoint(und)
-    rotate_checkpoint("ext_graph.connected_components", retired)
-    return labels
+        return upd
+
+    def converged(upd: DataFrame) -> bool:
+        return upd.filter(F.col("component_id") != F.col("prev_id")).count() == 0
+
+    labels = iterate(seed, step, max_iter, converged)
+    # the edge table and the seed are dead once the labels converge;
+    # the final round stays live until the NEXT invocation rotates it
+    # out — the caller's action still reads it
+    release_checkpoint(und)
+    if labels is not seed:
+        release_checkpoint(seed)
+    rotate_checkpoint("ext_graph.connected_components", labels)
+    return labels.select("doc_id", "component_id")
 
 
 def partition_local_contract(edges: DataFrame) -> DataFrame:

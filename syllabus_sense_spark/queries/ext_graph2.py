@@ -233,11 +233,10 @@ def graph_pagerank_trade(spark, sf_dir):
     # the share side enters each join as a broadcast while the node
     # guard holds. Past the guard, und is the src-partitioned artifact
     # (trade_und) and each iteration shuffles only the node-sized rpd
-    # plus the groupBy — the textbook distributed-PageRank cost. For
-    # convergence-style loops of unknown depth, per-iteration
-    # localCheckpoint + a changed-count action is the posture (see
-    # ext_graph.connected_components); a fixed 3-step unroll doesn't
-    # need it.
+    # plus the groupBy — the textbook distributed-PageRank cost. A loop
+    # whose rounds are read more than once, or that stops on a
+    # convergence action, checkpoints each round through memo.iterate;
+    # a fixed 3-step unroll that reads each round once doesn't need it.
     for _ in range(_ITER):
         rpd = ranks.join(hint(deg), "node").select(
             F.col("node").alias("src"),

@@ -100,6 +100,27 @@ def copurchase_edges(spark, sf_dir: str):
     """Key-only view of the co-purchase snapshot (pa < pb)."""
     return copurchase_pair_counts(spark, sf_dir).select("pa", "pb")
 
+
+def copurchase_adj(spark, sf_dir: str):
+    """Symmetrized co-purchase adjacency (node, nbr): the undirected
+    graph INDEX every LPA round and k-core peel probes, materialized
+    once per session instead of re-checkpointed per call."""
+    from ..memo import session_artifact
+    from ._util import ser_checkpoint
+
+    def build():
+        edges = copurchase_edges(spark, sf_dir)
+        return ser_checkpoint(
+            edges.select(
+                F.col("pa").alias("node"), F.col("pb").alias("nbr")
+            ).unionByName(
+                edges.select(F.col("pb").alias("node"), F.col("pa").alias("nbr"))
+            )
+        )
+
+    return session_artifact(spark, sf_dir, "copurchase_adj", build, persist=False)
+
+
 _TRIANGLE_ORACLE = f"""
 WITH items AS (
   SELECT DISTINCT l_orderkey, l_partkey FROM lineitem

@@ -23,7 +23,7 @@ bucketing / recommendation candidate pools.
 Scale posture: each round is ONE shuffle of (edge ⋈ label) on the
 node key — the same join+argmax shape as distributed LPA in
 GraphX/Pregel, with the label table ≪ edges. The adjacency snapshot
-is a materialized session artifact (it feeds every round's join);
+is the session artifact copurchase_adj (it feeds every round's join);
 the _N_ROUNDS rounds themselves stay LAZY — each round's labels have
 exactly one consumer, so the bounded unrolled plan runs as one job
 into the final rotated checkpoint (r14; previously one job + one
@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from . import register
 from ._util import rotate_checkpoint
-from .ext_graph3 import _MIN_SUPPORT, copurchase_edges
+from .ext_graph3 import _MIN_SUPPORT, copurchase_adj
 
 _N_ROUNDS = 3
 
@@ -87,28 +87,6 @@ FROM l{_N_ROUNDS}
 )
 
 
-def _lpa_adj(spark, sf_dir):
-    """Symmetrized adjacency snapshot as a session artifact — the
-    graph INDEX every LPA round probes (it is referenced by all
-    _N_ROUNDS joins AND by the l0 distinct, so it must be a
-    materialized leaf; as an artifact it is also shared across
-    invocations instead of re-checkpointed per query — r14)."""
-    from ..memo import session_artifact
-    from ._util import ser_checkpoint
-
-    def build():
-        edges = copurchase_edges(spark, sf_dir)
-        return ser_checkpoint(
-            edges.select(
-                F.col("pa").alias("node"), F.col("pb").alias("nbr")
-            ).unionByName(
-                edges.select(F.col("pb").alias("node"), F.col("pa").alias("nbr"))
-            )
-        )
-
-    return session_artifact(spark, sf_dir, "lpa_adj", build, persist=False)
-
-
 def _lpa_driver_rounds(adj_rows) -> dict:
     """The _N_ROUNDS synchronous majority rounds as exact driver
     arithmetic over the collected adjacency — integer counts, argmax
@@ -133,7 +111,7 @@ def _lpa_driver_rounds(adj_rows) -> dict:
 
 @register("graph_label_propagation", _LPA_ORACLE)
 def graph_label_propagation(spark, sf_dir):
-    adj = _lpa_adj(spark, sf_dir)
+    adj = copurchase_adj(spark, sf_dir)
 
     # Driver guard (r15; the ext_graph union-find / BPE-vocab
     # pattern): the co-purchase projection is support-thresholded, so

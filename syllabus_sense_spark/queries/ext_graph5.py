@@ -8,7 +8,7 @@ LPA/PageRank, the loop is unrolled a fixed number of rounds so the
 result is hash-checkable; each round is ONE degree groupBy plus two
 semi-joins of the edge list against the surviving-node set — the
 standard distributed peel (every step an equi-join on a node key,
-never a cross product), with `localCheckpoint` keeping lineage flat.
+never a cross product), with ``memo.iterate`` keeping lineage flat.
 The DuckDB oracle replays the identical rounds as CTEs.
 
 Cosine: for canonically-oriented co-purchase pairs, cos²(a,b) =
@@ -30,8 +30,8 @@ from pyspark.sql import functions as F
 
 from ..tables import load
 from . import register
-from ._util import release_checkpoint, rotate_checkpoint
-from .ext_graph3 import _MIN_SUPPORT, copurchase_edges, copurchase_pair_counts
+from ._util import iterate, rotate_checkpoint
+from .ext_graph3 import _MIN_SUPPORT, copurchase_adj, copurchase_pair_counts
 
 _K = 2  # peel threshold (k=3 empties the sf0.1 projection entirely)
 _N_ROUNDS = 3
@@ -74,33 +74,23 @@ FROM a{_N_ROUNDS} GROUP BY node
 
 @register("graph_kcore_peel", _KCORE_ORACLE)
 def graph_kcore_peel(spark, sf_dir):
-    edges = copurchase_edges(spark, sf_dir)
-    adj = (
-        edges.select(F.col("pa").alias("node"), F.col("pb").alias("nbr"))
-        .unionByName(
-            edges.select(F.col("pb").alias("node"), F.col("pa").alias("nbr"))
-        )
-        .localCheckpoint()
-    )
-    for _ in range(_N_ROUNDS):
+    def peel(adj):
         alive = (
             adj.groupBy("node")
             .agg(F.count(F.lit(1)).alias("deg"))
             .filter(F.col("deg") >= _K)
             .select("node")
         )
-        prev = adj
-        adj = (
-            adj.join(alive, "node", "left_semi")
-            .join(
-                alive.select(F.col("node").alias("nbr")), "nbr", "left_semi"
-            )
-            .localCheckpoint()
+        return adj.join(alive, "node", "left_semi").join(
+            alive.select(F.col("node").alias("nbr")), "nbr", "left_semi"
         )
-        release_checkpoint(prev)  # superseded peel round's blocks
+
     # the surviving adjacency backs the returned result — rotated,
     # released by the next invocation
-    rotate_checkpoint("ext_graph5.kcore.adj", adj)
+    adj = rotate_checkpoint(
+        "ext_graph5.kcore.adj",
+        iterate(copurchase_adj(spark, sf_dir), peel, _N_ROUNDS),
+    )
     return adj.groupBy("node").agg(
         F.count(F.lit(1)).cast("bigint").alias("degree")
     ).select(F.col("node").alias("part_key"), "degree")

@@ -248,16 +248,11 @@ def _run_merges(spark, sf_dir):
     """Shared DISTRIBUTED loop (the above-guard path). Returns
     (per-iteration best rows, initial word table w1, final word table
     w{N+1})."""
-    from ._util import release_checkpoint, rotate_checkpoint
+    from ._util import iterate, rotate_checkpoint
 
-    # The type table is the loop state: materialized (artifact) so
-    # iteration k's plan doesn't re-tokenize the corpus or re-run
-    # merges 1..k-1.
-    initial = _word_types(spark, sf_dir)
-    words = initial
-    merge_rows = []
     bests = []
-    for k in range(1, _N_MERGES + 1):
+
+    def merge(words):
         best = (
             _pair_counts(words)
             .orderBy(F.desc("cnt"), "a", "b")
@@ -265,25 +260,25 @@ def _run_merges(spark, sf_dir):
             .localCheckpoint()
         )
         bests.append(best)
-        merge_rows.append(
-            best.select(
-                F.lit(k).cast("bigint").alias("iter"),
-                F.col("a").alias("pair_left"),
-                F.col("b").alias("pair_right"),
-                F.concat("a", "b").alias("merged"),
-                F.col("cnt").alias("pair_count"),
-            )
-        )
-        prev_words = words
-        words = _merge_best(words, best).localCheckpoint()
-        # superseded loop state — released the moment its successor is
-        # materialized (initial survives: the encode query reads w1)
-        if prev_words is not initial:
-            release_checkpoint(prev_words)
+        return _merge_best(words, best)
+
+    # w1 is the session artifact: iterate never releases it (the
+    # encode query reads it; memo.clear does)
+    initial = _word_types(spark, sf_dir)
+    words = iterate(initial, merge, _N_MERGES)
     # survivors back the returned DataFrames; the next invocation
-    # rotates them out as one generation (NOT `initial` — that is the
-    # session artifact, released only via memo.clear)
+    # rotates them out as one generation
     rotate_checkpoint("ext_training6._run_merges", words, *bests)
+    merge_rows = [
+        best.select(
+            F.lit(k).cast("bigint").alias("iter"),
+            F.col("a").alias("pair_left"),
+            F.col("b").alias("pair_right"),
+            F.concat("a", "b").alias("merged"),
+            F.col("cnt").alias("pair_count"),
+        )
+        for k, best in enumerate(bests, 1)
+    ]
     return merge_rows, initial, words
 
 

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..tables import load
 from . import register
-from ._util import cents, dec2, release_checkpoint, rotate_checkpoint
+from ._util import cents, iterate, rotate_checkpoint
 
 _K = 4
 _ROUNDS = 3
@@ -99,11 +99,12 @@ def cluster_kmeans_1d_prices(spark, sf_dir):
         f"WHEN {' AND '.join(f'ABS(c - c{i}) <= ABS(c - c{j})' for j in range(_K) if j != i)} THEN {i}"
         for i in range(_K)
     ) + " END"
-    for _ in range(_ROUNDS):
+
+    def lloyd(m):
         a = v.join(F.broadcast(m)).select(
             "c", F.expr(assign_case).alias("cl")
         )
-        new_m = a.join(F.broadcast(m)).agg(
+        return a.join(F.broadcast(m)).agg(
             *[
                 F.expr(
                     f"CAST(COALESCE(FLOOR(AVG(c) FILTER (WHERE cl = {i})),"
@@ -112,14 +113,10 @@ def cluster_kmeans_1d_prices(spark, sf_dir):
                 for i in range(_K)
             ]
         )
-        prev_m = m
-        m = new_m.localCheckpoint()
-        # superseded round's 1-row centroid checkpoint (round 1's
-        # prev is the lazy init aggregate — release is a no-op there)
-        release_checkpoint(prev_m)
+
     # final centroids back the returned result — rotated, released by
     # the next invocation
-    rotate_checkpoint("ml_queries3.kmeans.m", m)
+    m = rotate_checkpoint("ml_queries3.kmeans.m", iterate(m, lloyd, _ROUNDS))
     final = v.join(F.broadcast(m)).select("c", F.expr(assign_case).alias("cl"))
     centroid_case = (
         "CASE cl "

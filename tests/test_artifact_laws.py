@@ -20,7 +20,7 @@ Five law families here:
    memo took), except the named registry/process state below.
 3. BUILD-COUNT — for the artifacts the r14 verdict called out as
    lawless (trade_deg, match_ranked_blocks, srp_lsh_buckets,
-   importance_vocab, bpe_word_types, lpa_adj): a second invocation of
+   importance_vocab, bpe_word_types, copurchase_adj): a second invocation of
    the consumer query performs ZERO memo builds (the first
    invocation's builds are reused), and the artifact is present in the
    session memo under its kind key.
@@ -59,7 +59,7 @@ ARTIFACT_KINDS: dict[str, tuple[str, str]] = {
     "trade_edges_ser": ("ext_graph2", "trade-graph edge snapshot"),
     "trade_und_part": ("ext_graph2", "symmetrized trade edges, key-partitioned"),
     "trade_deg": ("ext_graph2", "trade-graph out-degree table"),
-    "lpa_adj": ("ext_graph4", "symmetrized co-purchase adjacency for LPA"),
+    "copurchase_adj": ("ext_graph3", "symmetrized co-purchase adjacency (LPA, k-core)"),
     "match_ranked_blocks": ("ext_match", "sorted-neighborhood blocking index"),
     "importance_vocab": ("ext_training17", "DSIR importance vocabulary counts"),
     "bpe_word_types": ("ext_training6", "BPE word-type frequency table"),
@@ -172,7 +172,8 @@ _BUILD_LAW_CONSUMERS = [
     ("srp_lsh_buckets", "similarity_ann_lsh"),
     ("importance_vocab", "training_importance_selection"),
     ("bpe_word_types", "training_bpe_merges"),
-    ("lpa_adj", "graph_label_propagation"),
+    ("copurchase_adj", "graph_label_propagation"),
+    ("copurchase_adj", "graph_kcore_peel"),
 ]
 
 

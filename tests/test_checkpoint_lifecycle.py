@@ -6,7 +6,7 @@ so a query invoked N times in one session must not accumulate N live
 checkpoints. The package discipline under test:
 
 - loop-superseded checkpoints are released the moment their successor
-  materializes (``release_checkpoint``);
+  materializes (``iterate``, the one checkpointed round loop);
 - result-backing checkpoints are registered per call site and the NEXT
   invocation releases the previous generation (``rotate_checkpoint``);
 - session artifacts (``memo.session_artifact``) are built once per
@@ -17,9 +17,17 @@ after 1 invocation (the steady state may hold one live generation per
 site, but must not grow with N).
 """
 
+import ast
+import os
+
 from pyspark.sql import Row
 
-from syllabus_sense_spark.memo import _STORE, release_checkpoint, rotate_checkpoint
+from syllabus_sense_spark.memo import (
+    _STORE,
+    iterate,
+    release_checkpoint,
+    rotate_checkpoint,
+)
 
 
 def _n_persistent(spark) -> int:
@@ -71,6 +79,108 @@ def test_rotate_checkpoint_prunes_dead_app_generations(spark):
             release_checkpoint(d)
 
 
+def _live_rdd_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_iterate_keeps_only_input_and_last_round(spark):
+    """Direct law for ``memo.iterate``: after N rounds only the caller's
+    input checkpoint and the last round are live, the input still
+    collects, and ``until`` stops the loop after the first round where
+    it holds."""
+    seed = spark.range(10).localCheckpoint()
+    before = _live_rdd_ids(spark)
+
+    def step(df):
+        return df.select((df.id + 1).alias("id"))
+
+    out = iterate(seed, step, 4)
+    try:
+        assert sorted(r.id for r in out.collect()) == list(range(4, 14))
+        live = _live_rdd_ids(spark)
+        assert before <= live, "iterate released the caller's input"
+        assert len(live - before) == 1, "iterate left a superseded round live"
+        assert sorted(r.id for r in seed.collect()) == list(range(10))
+    finally:
+        release_checkpoint(out)
+
+    seen = []
+
+    def until(df):
+        seen.append(df.agg({"id": "min"}).first()[0])
+        return seen[-1] >= 2
+
+    out = iterate(seed, step, 10, until=until)
+    try:
+        assert seen == [1, 2], f"loop did not stop where until held: {seen}"
+        assert out.agg({"id": "min"}).first()[0] == 2
+    finally:
+        release_checkpoint(out)
+        release_checkpoint(seed)
+
+
+_PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "syllabus_sense_spark",
+)
+
+# (module, enclosing function) -> why a release inside a loop body is
+# not a round of ``iterate``
+_LOOP_RELEASE_SITES = {
+    ("queries/ext_graph.py", "connected_components"): (
+        "the contraction loop stores its pair streams with "
+        "ser_checkpoint and returns early with a different frame"
+    ),
+}
+
+
+def _releases_in_loops(tree: ast.AST):
+    """(enclosing function, line) of every ``release_checkpoint`` call
+    (or alias of it) inside a ``for``/``while`` body."""
+
+    def walk(node, func, in_loop):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield from walk(child, child.name, False)
+                continue
+            if (
+                in_loop
+                and isinstance(child, ast.Call)
+                and (
+                    getattr(child.func, "id", None)
+                    or getattr(child.func, "attr", "")
+                ).endswith("release_checkpoint")  # aliases too
+            ):
+                yield func, child.lineno
+            yield from walk(
+                child, func, in_loop or isinstance(child, (ast.For, ast.While))
+            )
+
+    return walk(tree, None, False)
+
+
+def test_round_loops_release_through_iterate():
+    """Outside memo.py, no ``release_checkpoint`` sits in a loop body:
+    a checkpointed round loop runs through ``memo.iterate``, which owns
+    the materialize-then-release order."""
+    found = {}
+    for root, _, files in os.walk(_PKG):
+        for fname in files:
+            path = os.path.join(root, fname)
+            rel = os.path.relpath(path, _PKG)
+            if not fname.endswith(".py") or rel == "memo.py":
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for func, line in _releases_in_loops(tree):
+                found.setdefault((rel, func), []).append(line)
+    assert set(found) == set(_LOOP_RELEASE_SITES), (
+        f"release_checkpoint inside a loop body: {found} — run the "
+        "rounds through memo.iterate"
+    )
+    assert all(len(lines) == 1 for lines in found.values()), found
+
+
 def test_components_repeated_invocations_do_not_accumulate(spark):
     """connected_components invoked N times (collect each — the
     driver/bench/oracle consumption pattern) holds a flat persisted-RDD
@@ -119,8 +229,9 @@ def test_dedup_query_repeated_invocations_do_not_accumulate(spark, sf_dir):
 
 
 def test_graph_loop_queries_do_not_accumulate(spark, sf_dir):
-    """LPA and k-core: per-round checkpoints released in-loop, the
-    final result-backing checkpoint rotated by the next invocation."""
+    """LPA, k-core and 1-D k-means: per-round checkpoints released
+    in-loop, the final result-backing checkpoint rotated by the next
+    invocation."""
     from syllabus_sense_spark.queries import load_all_queries, QUERIES
 
     load_all_queries()
@@ -128,6 +239,7 @@ def test_graph_loop_queries_do_not_accumulate(spark, sf_dir):
         "graph_label_propagation",
         "graph_kcore_peel",
         "graph_pagerank_trade",  # rotated deg checkpoint (r13)
+        "cluster_kmeans_1d_prices",
     ):
         q = QUERIES[qname]
         counts = []
