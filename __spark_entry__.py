@@ -25,7 +25,8 @@ _q.load_all_queries()
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the full syllabus pipeline (sessionize → extract →
-    plan → batch → join → generate) at sf0.001."""
+    plan, carrying the subtopic context → batch → generate) at
+    sf0.001."""
     from syllabus_sense_spark.pipeline import run_flagship
 
     return run_flagship(spark, "/root/testdata/sf0.001")

@@ -76,6 +76,7 @@ _FORCE_RECHECK: list[str] = [
     "source_docx_pushdown",
     # Round loops moved onto ``memo.iterate``; k-core probes ``copurchase_adj``.
     "graph_kcore_peel",
+    # 1-D k-means keeps its 4 centroids as driver integers (no round loop).
     "cluster_kmeans_1d_prices",
     "dedup_components",
     "dedup_canonical_keep",

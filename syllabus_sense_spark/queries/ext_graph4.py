@@ -130,7 +130,7 @@ def graph_label_propagation(spark, sf_dir):
     from ..memo import session_memo
     from .ext_graph import _DRIVER_MAX_EDGES
 
-    n_adj = session_memo(spark, sf_dir, "lpa_adj_count", adj.count)
+    n_adj = session_memo(spark, sf_dir, "copurchase_adj_count", adj.count)
     if n_adj <= _DRIVER_MAX_EDGES:
         import pandas as pd
 

@@ -293,9 +293,8 @@ def curation_pipeline_summary(spark, sf_dir):
     # sorts of the corpus around the dedup exchange); the lang domain
     # is pinned to {en, es, fr} by the filter above, so encode it in
     # lexicographic order, take the min of an int, and decode — the
-    # dedup becomes a partial+final HashAggregate (r14; before-plan
-    # plans/r14/curation_pipeline_summary_before.txt shows the
-    # SortAggregate pair).
+    # dedup becomes a partial+final HashAggregate (r14; law:
+    # tests/test_plan_shape_laws.py, no SortAggregate in this plan).
     lang_code = (
         F.when(F.col("lang") == "en", 0)
         .when(F.col("lang") == "es", 1)

@@ -139,15 +139,16 @@ def training_importance_selection(spark, sf_dir):
     # ONE vocab table from ONE occurrence pass (r14): raw and target
     # counts were separate groupBys, each re-running the full
     # scan+explode (no cross-consumer CSE), and `totals` re-expanded
-    # both AGAIN — five token passes per run in the before-plan
-    # (plans/r14/training_importance_selection_before.txt). A
+    # both AGAIN — five token passes per run (law:
+    # tests/test_plan_shape_laws.py, at most 2 Generate nodes). A
     # conditional count folds both dictionaries in one aggregation;
     # c_t is 0 (not NULL) for tokens with no target occurrences, which
     # the old left-join+coalesce produced identically. The dictionary
-    # is materialized (rotated serialized checkpoint — vocabulary-
-    # sized) so the totals aggregate and the broadcast probe read it
-    # instead of re-deriving it; two token passes remain — the floor,
-    # since the score needs corpus-wide counts before the per-doc sum.
+    # is materialized (a serialized-checkpoint session artifact —
+    # vocabulary-sized) so the totals aggregate and the broadcast
+    # probe read it instead of re-deriving it; two token passes
+    # remain — the floor, since the score needs corpus-wide counts
+    # before the per-doc sum.
     vocab, t_r, t_t = _importance_vocab(spark, sf_dir)
     # Dictionary join: vocabulary-sized side, broadcast (the 100 TB
     # fallback is AQE skew-join on the Zipf-heavy token key).

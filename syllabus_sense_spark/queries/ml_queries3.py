@@ -8,9 +8,10 @@ integer average — so three unrolled rounds replay identically in
 DuckDB CTEs (the same unroll discipline as PageRank / LPA / BPE /
 k-core).
 
-Scale: per round ONE broadcast of k centroids into the assignment
-scan and ONE map-side-combined groupBy(k); the data is never
-shuffled on anything wider than the centroid id.
+Scale: the k centroids are driver integers. Per round ONE scan
+assigns each value against the centroids inlined as literals, and ONE
+map-side-combined global aggregate returns the next k to the driver;
+the data is never shuffled on anything wider than the centroid id.
 """
 
 from __future__ import annotations
@@ -19,31 +20,50 @@ from pyspark.sql import functions as F
 
 from ..tables import load
 from . import register
-from ._util import cents, iterate, rotate_checkpoint
+from ._util import cents
 
 _K = 4
 _ROUNDS = 3
 
-_INIT_SQL = ", ".join(
+# init: interior quartiles, exact integers (percentile_disc returns a
+# DOUBLE whose value is an exact integer here)
+_INIT = [
     f"CAST(percentile_disc({(i + 1) / (_K + 1)}) WITHIN GROUP (ORDER BY c)"
-    f" * 1 AS BIGINT) AS c{i}"
+    f" * 1 AS BIGINT)"
     for i in range(_K)
-)
+]
+_INIT_SQL = ", ".join(f"{e} AS c{i}" for i, e in enumerate(_INIT))
 
-_ASSIGN_CASE = "CASE " + " ".join(
+
+def _assign_case(m) -> str:
     # nearest centroid, ties to the LOWER centroid index: c_i wins iff
     # |x-c_i| is strictly less than every earlier |x-c_j| and <= later
-    f"WHEN {' AND '.join(f'ABS(c - m.c{i}) <= ABS(c - m.c{j})' for j in range(_K) if j != i)} THEN {i}"
-    for i in range(_K)
-) + " END"
+    return "CASE " + " ".join(
+        f"WHEN {' AND '.join(f'ABS(c - {m[i]}) <= ABS(c - {m[j]})' for j in range(_K) if j != i)} THEN {i}"
+        for i in range(_K)
+    ) + " END"
+
+
+def _update(m) -> list[str]:
+    # FLOOR integer mean of each cluster; an empty cluster keeps m[i]
+    return [
+        f"CAST(COALESCE(FLOOR(AVG(c) FILTER (WHERE cl = {i})), {m[i]}) AS BIGINT)"
+        for i in range(_K)
+    ]
+
+
+def _centroid_case(m) -> str:
+    return f"CASE cl {' '.join(f'WHEN {i} THEN {m[i]}' for i in range(_K))} END"
+
+
+_M = [f"m.c{i}" for i in range(_K)]  # the oracle's centroids: CTE m's columns
+_ASSIGN_CASE = _assign_case(_M)
 
 
 def _round_cte(r: int) -> str:
     prev = f"m{r - 1}"
     aggs = ", ".join(
-        f"CAST(COALESCE(FLOOR(AVG(c) FILTER (WHERE cl = {i})),"
-        f" MAX(m.c{i})) AS BIGINT) AS c{i}"
-        for i in range(_K)
+        f"{e} AS c{i}" for i, e in enumerate(_update([f"MAX({c})" for c in _M]))
     )
     return f"""
 a{r} AS (
@@ -72,7 +92,7 @@ SELECT CAST(cl AS INT) AS cluster,
        CAST(COUNT(*) AS BIGINT) AS n,
        CAST(MIN(c) AS BIGINT) AS lo_cents,
        CAST(MAX(c) AS BIGINT) AS hi_cents,
-       CAST(MAX(CASE cl {' '.join(f'WHEN {i} THEN m.c{i}' for i in range(_K))} END) AS BIGINT) AS centroid_cents
+       CAST(MAX({_centroid_case(_M)}) AS BIGINT) AS centroid_cents
 FROM afinal CROSS JOIN m{_ROUNDS} m
 GROUP BY cl
 """
@@ -84,53 +104,28 @@ def cluster_kmeans_1d_prices(spark, sf_dir):
     v = load(spark, sf_dir, "events").select(
         cents("value").alias("c")
     )
-    # init: interior quartiles, exact integers (percentile_disc
-    # returns a DOUBLE whose value is an exact integer here)
-    m = v.agg(
-        *[
-            F.expr(
-                f"CAST(percentile_disc({(i + 1) / (_K + 1)})"
-                f" WITHIN GROUP (ORDER BY c) AS BIGINT)"
-            ).alias(f"c{i}")
-            for i in range(_K)
-        ]
-    )
-    assign_case = "CASE " + " ".join(
-        f"WHEN {' AND '.join(f'ABS(c - c{i}) <= ABS(c - c{j})' for j in range(_K) if j != i)} THEN {i}"
-        for i in range(_K)
-    ) + " END"
+    # The K centroids are exact integers held on the driver: each Lloyd
+    # round is one global aggregate collected with .first(), and the
+    # next round inlines its centroids as literals (NULL when events is
+    # empty), so a round stores nothing.
+    def driver_ints(df, exprs):
+        row = df.agg(*map(F.expr, exprs)).first()
+        return ["NULL" if x is None else x for x in row]
 
-    def lloyd(m):
-        a = v.join(F.broadcast(m)).select(
-            "c", F.expr(assign_case).alias("cl")
-        )
-        return a.join(F.broadcast(m)).agg(
-            *[
-                F.expr(
-                    f"CAST(COALESCE(FLOOR(AVG(c) FILTER (WHERE cl = {i})),"
-                    f" MAX(c{i})) AS BIGINT)"
-                ).alias(f"c{i}")
-                for i in range(_K)
-            ]
-        )
+    def assign(m):
+        return v.select("c", F.expr(_assign_case(m)).alias("cl"))
 
-    # final centroids back the returned result — rotated, released by
-    # the next invocation
-    m = rotate_checkpoint("ml_queries3.kmeans.m", iterate(m, lloyd, _ROUNDS))
-    final = v.join(F.broadcast(m)).select("c", F.expr(assign_case).alias("cl"))
-    centroid_case = (
-        "CASE cl "
-        + " ".join(f"WHEN {i} THEN c{i}" for i in range(_K))
-        + " END"
-    )
+    m = driver_ints(v, _INIT)
+    for _ in range(_ROUNDS):
+        m = driver_ints(assign(m), _update(m))
     return (
-        final.join(F.broadcast(m))
+        assign(m)
         .groupBy("cl")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.min("c").cast("bigint").alias("lo_cents"),
             F.max("c").cast("bigint").alias("hi_cents"),
-            F.max(F.expr(centroid_case)).cast("bigint").alias(
+            F.max(F.expr(_centroid_case(m))).cast("bigint").alias(
                 "centroid_cents"
             ),
         )

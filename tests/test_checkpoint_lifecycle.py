@@ -229,9 +229,10 @@ def test_dedup_query_repeated_invocations_do_not_accumulate(spark, sf_dir):
 
 
 def test_graph_loop_queries_do_not_accumulate(spark, sf_dir):
-    """LPA, k-core and 1-D k-means: per-round checkpoints released
-    in-loop, the final result-backing checkpoint rotated by the next
-    invocation."""
+    """LPA and k-core: per-round checkpoints released in-loop, the
+    final result-backing checkpoint rotated by the next invocation;
+    PageRank rotates its degree checkpoint, and 1-D k-means keeps its
+    centroids on the driver and persists nothing."""
     from syllabus_sense_spark.queries import load_all_queries, QUERIES
 
     load_all_queries()

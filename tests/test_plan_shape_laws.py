@@ -1,8 +1,8 @@
-"""Plan-shape laws for the heaviest join families (round-10 judge
-item 6: hard-won plan properties live as pytest laws, not PLANS.md
-snapshots).
+"""Plan-shape laws: hard-won plan properties are checked on the plan
+the code builds today, never kept as snapshot files
+(`tools/explain.py QUERY` prints any query's plan).
 
-Two families, three laws:
+The laws, by family:
 
 1. IVF probe join (`training_hard_negatives_ivf`): candidate
    generation must be an EQUI hash join on the cell id with the query
@@ -19,6 +19,13 @@ Two families, three laws:
    join here means the band/chunk key fell out of the join condition
    — candidate generation silently degraded to all-pairs, the exact
    regression banding exists to prevent.
+
+3. Corpus passes removed in round 14, each cited by the code it
+   guards: `curation_pipeline_summary` dedups `lang` as an encoded
+   int, so no SortAggregate sorts the corpus;
+   `training_importance_selection` derives its raw and target
+   vocabularies in one occurrence pass, so its plan explodes the
+   token stream at most twice.
 """
 
 from __future__ import annotations
@@ -80,6 +87,26 @@ def test_candidate_joins_are_equi_only(spark, sf_dir, name):
         "generation went all-pairs"
     )
     assert "CartesianProduct" not in plan
+
+
+def test_curation_dedup_has_no_sort_aggregate(spark, sf_dir):
+    """min() over a STRING buffer plans as SortAggregate — two full
+    sorts of the corpus around the dedup exchange. The encoded
+    `lang_code` keeps the dedup a hash aggregate."""
+    plan = _executed_plan(spark, sf_dir, "curation_pipeline_summary")
+    assert "SortAggregate" not in plan, (
+        "curation dedup aggregates a string buffer again:\n"
+        + "\n".join(l for l in plan.splitlines() if "Aggregate" in l)
+    )
+
+
+def test_importance_selection_explodes_tokens_at_most_twice(spark, sf_dir):
+    """Separate raw and target groupBys each re-run the scan and
+    explode (no cross-consumer CSE); one conditional-count vocabulary
+    leaves the per-doc probe as the only other token pass."""
+    plan = _executed_plan(spark, sf_dir, "training_importance_selection")
+    n = len(re.findall(r"\bGenerate\b", plan))
+    assert n <= 2, f"{n} Generate nodes — the vocabulary is re-derived:\n{plan}"
 
 
 def test_components_iteration_joins_broadcast_label_side(spark):

@@ -13,8 +13,9 @@ from __future__ import annotations
 import json
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 VARIANTS = ["similarity_ivf_cells", "similarity_ivf_kmeans", "similarity_ann_lsh"]
 

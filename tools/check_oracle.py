@@ -15,8 +15,9 @@ import math
 import sys
 import time
 from collections import Counter
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def normalize(v):

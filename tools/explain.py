@@ -1,6 +1,8 @@
-"""Dump formatted physical plans for registered queries — the
+"""Print formatted physical plans for registered queries — the
 iterate-until-the-plan-is-right loop (scan pushdown, broadcast
-choices, WholeStageCodegen spans).
+choices, WholeStageCodegen spans). This is the one plan printer: no
+plan is kept as a file; a plan property worth keeping becomes a law
+in tests/test_plan_shape_laws.py.
 
 Usage: python tools/explain.py [sf_dir] <query> [query ...]
 """
@@ -8,8 +10,9 @@ Usage: python tools/explain.py [sf_dir] <query> [query ...]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def main() -> None:

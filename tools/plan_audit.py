@@ -26,8 +26,9 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 # Audit the production plan shape: the check-scale in-memory persist of
 # tiny tables would hide the parquet scan (its materialization reads the

@@ -52,8 +52,9 @@ import json
 import os
 import subprocess
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 

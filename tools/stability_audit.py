@@ -26,8 +26,9 @@ from __future__ import annotations
 import struct
 import sys
 from collections import Counter
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def _key(v):

@@ -49,8 +49,9 @@ import json
 import os
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 # (duckdb_type, spark_type) identity pairs — hash-equal by definition
 _OK = {
