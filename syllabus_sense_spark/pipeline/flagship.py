@@ -79,11 +79,3 @@ def run_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns the generated-question DataFrame (QUESTION_SCHEMA).
     """
     return flagship_from_elements(filtered_elements(spark, sf_dir))
-
-
-def save_questions(questions: DataFrame, path: str) -> None:
-    """A14/A15: partitioned append sink — replaces the reference's
-    whole-file JSON read-modify-write (file_output_manager.py:34-69,
-    TODO at :49-50) with an idempotent-per-run, transactional
-    partitioned write."""
-    questions.write.partitionBy("topic").mode("append").parquet(path)

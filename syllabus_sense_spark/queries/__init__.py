@@ -84,6 +84,19 @@ _FORCE_RECHECK: list[str] = [
     "dedup_semantic_clusters",
     "similarity_pq_adc",
     "search_semantic_docs_pq",
+    # Venue guards decide through ``guards``; one union-find in
+    # ``ext_graph``; the events footer read and the media-header catch
+    # narrowed.
+    "match_fuzzy_parts",
+    "match_fuzzy_parts_capped",
+    "sample_weighted_bernoulli",
+    "multimodal_decode_metadata",
+    "multimodal_feature_extract",
+    "multimodal_resize_plan",
+    "streaming_tumbling_hourly_drain",
+    "streaming_static_enrich_drain",
+    "streaming_session_windows_drain",
+    "streaming_dsv2_replay_drain",
 ]
 
 

@@ -2,15 +2,12 @@
 MinHash dup-pair graph — the step a production dedup runs after pair
 finding, so each cluster keeps one canonical document.
 
-This is the engine's one genuinely *iterative* algorithm: min-label
-propagation (the Pregel/GraphX pattern) as a driver-coordinated loop
-of DataFrame joins. Each iteration is one shuffle join on the edge
-list; ``localCheckpoint`` truncates lineage so the plan does not grow
-with iterations. Convergence in O(graph diameter) rounds — the dup
-graph's components are tiny (planted pairs plus incidental chains),
-so 2-3 rounds in practice; at 100 TB the same loop holds because
-every round is a pure equi-join + min-agg, and the label table stays
-one row per *duplicated* doc (a small fraction of the corpus).
+A metadata-sized pair graph resolves as union-find on the driver;
+above the ``driver_edges`` guard (``guards.LIMITS``) partition-local
+union-find contracts it and min-label propagation (the Pregel/GraphX
+pattern) finishes it as a loop of DataFrame joins, each round a pure
+equi-join + min-agg over a label table of one row per *duplicated*
+doc.
 
 Oracle: DuckDB computes the same components by recursive transitive
 closure (WITH RECURSIVE) over the identical pair list — tractable
@@ -21,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..guards import decide
 from . import register
 from ._util import iterate, release_checkpoint, rotate_checkpoint, ser_checkpoint
 from .ext_dedup import (
@@ -30,22 +28,12 @@ from .ext_dedup import (
 )
 
 
-# Broadcast guard for the label side of the iteration joins: two longs
-# per row plus hash-relation overhead keeps 20M rows around ~1 GB —
-# safely inside Spark's 8 GB broadcast ceiling and a sane driver heap.
-# Above it the loop degrades to shuffle joins instead of failing the
-# job (round-11 ADVICE: an unconditional hint on a high-match-density
-# corpus would blow past maxBroadcastTableSize).
-_BROADCAST_MAX_LABELS = 20_000_000
-
-# Driver union-find guard: at or below this many edges the whole dup/
-# match graph is metadata-sized (a few MB collected — the centroid-
-# table class) and connected_components resolves it as driver
-# union-find with zero per-round jobs; above it the distributed
-# contraction + min-label loop runs unchanged. The sf1 match graph
-# (15.7M edges) and every larger tier stay distributed, so the gates
-# keep both paths exercised.
-_DRIVER_MAX_EDGES = 65536
+# Contraction levels before the min-label loop (two resolve the tiny
+# dup/match graphs without, or almost without, the loop's per-round
+# cost), and the loop's round cap (pointer jumping converges in
+# O(log diameter) rounds).
+_CONTRACT_LEVELS = 2
+_MAX_ROUNDS = 20
 
 # Partitions folded together per contraction level (multi-level
 # union-find): each level coalesces the star-edge output of the
@@ -69,115 +57,64 @@ _UF_MAX_NODES = 10_000_000
 
 def connected_components(
     edges: DataFrame,
-    max_iter: int = 20,
     dedup_edges: bool = True,
     plan_probe: list | None = None,
-    contract_levels: int = 0,
 ) -> DataFrame:
     """Min-label propagation over an undirected edge list
     ``(doc_a, doc_b)`` → ``(doc_id, component_id)`` where
     ``component_id`` is the smallest doc_id reachable from ``doc_id``.
 
-    Runs Spark jobs while building (the convergence test is an
-    action); returns the converged label table, localCheckpoint-ed so
-    downstream consumers see a flat plan.
+    Runs Spark jobs while building; returns the converged label table,
+    localCheckpoint-ed so downstream consumers see a flat plan.
 
-    Each round does neighbor-min propagation AND pointer jumping
-    (label := label of my label): plain propagation moves the min one
-    HOP per round, so a path-shaped component of diameter d needs d
-    rounds — the sorted-neighborhood match graph (stride ≤ CAP-1
-    within 1000-row blocks at sf1) measured ~16 rounds / 20+ s before
-    the shortcut. Pointer jumping halves the remaining distance each
-    round (O(log d) total) and runs over the LABEL table only (one
-    row per node — a small self-join next to the edge join), the
-    Shiloach-Vishkin/GraphFrames recipe. The converged fixpoint (min
-    reachable id) is identical either way.
+    Venue (``guards.decide("driver_edges", ...)``): LSH and blocking
+    keep dup and match graphs tiny relative to the corpus, so at or
+    below the guard the edge list is collected and resolved by the
+    union-find ``partition_local_contract`` runs per partition, at
+    zero per-round jobs. Above it:
+
+    - ``_CONTRACT_LEVELS`` rounds of ``partition_local_contract``:
+      level 1 contracts each input partition in place (exchange-free
+      for key-partitioned pair streams), each later level coalesces
+      the star edges by ``_CONTRACT_FANIN`` and contracts again. A
+      level that sees the whole graph in ONE partition (and never
+      flushed) returns its stars as the exact components; the sf1
+      match graph skips the loop this way.
+    - the min-label loop finishes what spans partitions. Each round
+      does neighbor-min propagation AND pointer jumping (label :=
+      label of my label), so a path of diameter d converges in
+      O(log d) rounds, not d (the Shiloach-Vishkin/GraphFrames
+      recipe; the sf1 match graph took ~16 rounds without it).
+
+    The fixpoint is identical on every path.
 
     ``dedup_edges=False`` skips the union-distinct exchange for
     callers whose pair list is unique-by-construction (every match
     query emits ``a < b`` pairs exactly once); duplicates would only
     inflate join input, never change the fixpoint.
 
-    ``plan_probe``: when a list is passed, each round's update plan
-    (the pre-checkpoint executed-plan string) is appended — the seam
-    the plan-shape law tests use to assert every iteration join stays
-    a broadcast hash join of the label side.
-
-    ``contract_levels``: rounds of partition-local union-find
-    contraction (``partition_local_contract``) run BEFORE the global
-    loop. Level 1 contracts each input partition's subgraph to ≤2 star
-    edges per node in place (exchange-free — callers with key-
-    partitioned pair streams get chunk-exact contraction); each later
-    level coalesces the star edges by ``_CONTRACT_FANIN`` and
-    contracts again. When a level sees the whole graph in ONE
-    partition its stars ARE the exact min-id components and the loop
-    is skipped outright; otherwise the loop finishes whatever
-    connectivity spans the remaining partitions. Component-preserving
-    for any partitioning (see partition_local_contract), so the
-    fixpoint is identical at every setting; per-round loop cost is
-    what changes — the sf1 match graph went from joining 15.7M edge
-    rows per round to skipping the loop entirely.
+    ``plan_probe``: when a list is passed, each loop round's update
+    plan is appended — the seam the plan-shape laws use. It only
+    records; a law that needs the loop forces the cluster venue.
     """
-    # Materialize the edge input ONCE before deriving both directions:
-    # the union's two branches each contain the caller's (possibly
-    # expensive — semdedup's pair search) edge subtree, so without the
-    # checkpoint the first action computes it twice.
-    # pair-stream checkpoints store SERIALIZED (corpus-scale rows;
-    # see _util.ser_checkpoint — the deserialized default's re-inflate
-    # storm is the sf30 session-death signature); node-sized loop
-    # state below keeps the default level.
+    # Materialize the edge input ONCE: the caller's (possibly expensive
+    # — semdedup's pair search) edge subtree would otherwise run once
+    # per union branch. Pair streams store SERIALIZED (see
+    # _util.ser_checkpoint); node-sized loop state keeps the default.
     edges = ser_checkpoint(edges)
-    if plan_probe is None and edges.count() <= _DRIVER_MAX_EDGES:
-        # Driver guard (the BPE-vocab / centroid-table pattern): dup
-        # and match graphs are tiny relative to the corpus BY
-        # CONSTRUCTION (LSH/blocking bounds them), so below the guard
-        # the whole edge list is metadata-sized — union-find with
-        # min-root attachment on the driver IS the min-label fixpoint
-        # (attach the larger root under the smaller: every set's root
-        # stays its minimum member), with zero per-round jobs instead
-        # of contraction checkpoints + a convergence action per round.
-        # Above the guard (pathological match density / corpus-scale
-        # dup graphs) the distributed loop below is unchanged, and the
-        # sf1+ gates keep exercising it. plan_probe callers (the
-        # plan-shape laws) always take the distributed path.
-        import pandas as pd
-
-        rows = edges.collect()
+    if decide("driver_edges", edges.count()):
+        pdf = edges.select("doc_a", "doc_b").toPandas()
         release_checkpoint(edges)
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != x:
-                parent[x], x = r, parent[x]
-            return r
-
-        for row in rows:
-            a, b = row[0], row[1]
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra < rb:
-                parent[rb] = ra
-            elif rb < ra:
-                parent[ra] = rb
-        nodes = list(parent)
-        pdf = pd.DataFrame(
-            {
-                "doc_id": pd.Series(nodes, dtype="int64"),
-                "component_id": pd.Series(
-                    [find(x) for x in nodes], dtype="int64"
-                ),
-            }
-        )
+        # at most 2 × LIMITS["driver_edges"] nodes, far below
+        # _UF_MAX_NODES: no flush, so exactly one star frame
+        (stars,) = _union_find([pdf], _UF_MAX_NODES)
         return edges.sparkSession.createDataFrame(
-            pdf, "doc_id long, component_id long"
+            stars.rename(columns={"local_min": "component_id"}),
+            "doc_id long, component_id long",
         )
     # the live pair-stream checkpoint: the input, then each level's stars
     stars = edges
-    for _ in range(contract_levels):
+    for _ in range(_CONTRACT_LEVELS):
         nparts = max(1, edges.rdd.getNumPartitions())
         prev, stars = stars, ser_checkpoint(partition_local_contract(edges))
         release_checkpoint(prev)
@@ -218,27 +155,18 @@ def connected_components(
     # so one count up front both sizes the broadcast decision and
     # costs nothing against the per-round convergence action.
     n_labels = seed.count()
-    if n_labels <= _BROADCAST_MAX_LABELS:
-        hint = F.broadcast
-    else:  # degrade to shuffle joins rather than fail the broadcast
-        def hint(df: DataFrame) -> DataFrame:
-            return df
+    hint = F.broadcast if decide("broadcast_labels", n_labels) else (lambda df: df)
 
     def step(labels: DataFrame) -> DataFrame:
         labels = labels.select("doc_id", "component_id")
         # Broadcast the LABEL side: labels are one compact row per
         # node-with-an-edge (checkpointed RDDs carry no stats, so the
         # auto-broadcast threshold never fires), while the edge table
-        # is the big side — without the hint every iteration re-
-        # shuffles the static 2|E| edge rows for a sort-merge join
-        # (measured: the dominant cost on the sf1 match graph, 15.7M
-        # edges × ~6 rounds). With it, iterations are map-side joins
-        # plus one partial-aggregated min shuffle. Past
-        # _BROADCAST_MAX_LABELS the loop hands the exchange back to
-        # the planner — the dup/match graph label table is a small
-        # fraction of the corpus by construction, so reaching the
-        # guard at all means match density is pathological and a
-        # shuffle is the right degradation.
+        # is the big side — without the hint every round re-shuffles
+        # the static 2|E| edge rows for a sort-merge join (the dominant
+        # cost on the sf1 match graph). Past the broadcast_labels guard
+        # match density is pathological and the loop hands the exchange
+        # back to the planner.
         neighbor_min = (
             und.join(hint(labels), und.dst == labels.doc_id)
             .groupBy(F.col("src").alias("doc_id"))
@@ -253,13 +181,10 @@ def connected_components(
             F.col("component_id").alias("mid_label"),
         )
         # Carry the old label through the update so convergence is a
-        # cheap filter-count over the checkpointed round — folding
-        # what used to be a separate labels⨝new_labels shuffle join
-        # into the iteration's one materialization. Both lookup sides
-        # (neighbor_min, hop) are label-table-sized — at most one row
-        # per node — so they ride the same broadcast guard: under the
-        # threshold ALL three iteration joins are broadcast hash
-        # joins and the only shuffle per round is the min-agg.
+        # cheap filter-count over the checkpointed round. Both lookup
+        # sides (neighbor_min, hop) are label-table-sized, so under the
+        # guard ALL three joins are broadcast hash joins and the only
+        # shuffle per round is the min-agg.
         upd = (
             labels.join(hint(neighbor_min), "doc_id", "left")
             .join(hint(hop), labels.component_id == hop.mid, "left")
@@ -282,7 +207,7 @@ def connected_components(
     def converged(upd: DataFrame) -> bool:
         return upd.filter(F.col("component_id") != F.col("prev_id")).count() == 0
 
-    labels = iterate(seed, step, max_iter, converged)
+    labels = iterate(seed, step, _MAX_ROUNDS, converged)
     # the edge table and the seed are dead once the labels converge;
     # the final round stays live until the NEXT invocation rotates it
     # out — the caller's action still reads it
@@ -295,78 +220,79 @@ def connected_components(
 
 def partition_local_contract(edges: DataFrame) -> DataFrame:
     """Exact connected components within each PARTITION of the edge
-    list, as the contraction step before the global min-label loop —
-    round-11 judge item 2, made correct.
+    list, as the contraction step before the global min-label loop.
 
-    The judge's sketch ("seed each node's label with its chunk-local
-    min") is unsound as stated: chunk co-membership does not imply
-    connectivity, and min-label propagation never recovers from a seed
-    outside the node's true component (labels only descend). What IS
-    sound: union-find over each partition's own *edges*, emitting one
-    star edge ``(node, local_min)`` per node per partition. The star
-    graph has identical components to the input for ANY partitioning
-    of the edge set: every local label is connected to its node by
-    co-partitioned edges, and any original edge (u,v) lives in some
-    partition where u and v share a local label l, giving the path
-    u–l–v. Partitioning only affects contraction QUALITY (how far the
-    diameter drops), never correctness — so callers feed edges
-    key-partitioned by their blocking/chunk columns (the capped match
-    query already repartitions by them for its verify join) and this
-    pass is exchange-free. The sf1 match graph contracts ~15.7M
-    undirected edge rows to ≤2 star rows per node, and the starting
-    diameter drops from block-internal paths to the chunk-overlap
-    chain.
+    Union-find over each partition's own *edges* emits one star edge
+    ``(node, local_min)`` per node. The star graph has the input's
+    components for ANY partitioning of the edge set: every local label
+    is connected to its node by co-partitioned edges, and any original
+    edge (u,v) lives in some partition where u and v share a local
+    label l, giving the path u–l–v. (Seeding labels with a chunk-local
+    min instead would be unsound: chunk co-membership does not imply
+    connectivity, and min-labels never recover from a wrong seed.)
+    Partitioning only affects contraction QUALITY, so callers feed
+    edges key-partitioned by their blocking columns and this pass is
+    exchange-free.
 
-    Executed as ``mapInPandas``: one union-find per partition across
-    its Arrow batches (no per-group Python call overhead, no group-key
-    shuffle), the sanctioned Python seam for logic Spark's operators
-    cannot express. Python memory stays bounded even on a pathological
-    mega-partition: past ``_UF_MAX_NODES`` tracked nodes the state is
-    FLUSHED as stars and a fresh union-find absorbs the remaining
-    edges — a flush merely splits the partition's edge set into two
-    consecutive sub-partitions, and contraction is component-
-    preserving for any edge-set partition, so only contraction
-    QUALITY (not correctness) degrades at the boundary.
+    Executed as ``mapInPandas``, one union-find per partition across
+    its Arrow batches. Past ``_UF_MAX_NODES`` tracked nodes the state
+    is FLUSHED as stars and a fresh union-find absorbs the remaining
+    edges, keeping a mega-partition from OOMing the Python worker: a
+    flush only splits the partition's edge set in two, which the
+    argument above covers. The threshold is read here on the driver
+    and shipped with the task (``_union_find`` is pickled by
+    reference, so workers would otherwise see the imported value).
     """
+    max_nodes = _UF_MAX_NODES
+    return edges.select("doc_a", "doc_b").mapInPandas(
+        lambda batches: _union_find(batches, max_nodes),
+        schema="doc_id long, local_min long",
+    )
+
+
+def _find(parent: dict, x: int) -> int:
+    r = x
+    while parent[r] != r:
+        r = parent[r]
+    while parent[x] != r:  # path compression
+        parent[x], x = r, parent[x]
+    return r
+
+
+def _stars(parent: dict):
     import pandas as pd
 
-    def _find(parent: dict, x: int) -> int:
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:  # path compression
-            parent[x], x = r, parent[x]
-        return r
-
-    def _stars(parent: dict) -> "pd.DataFrame":
-        return pd.DataFrame(
-            {
-                "doc_id": list(parent.keys()),
-                "local_min": [_find(parent, v) for v in parent.keys()],
-            }
-        )
-
-    def _union_find(batches):
-        parent: dict[int, int] = {}
-        for pdf in batches:
-            for a, b in zip(pdf["doc_a"].values, pdf["doc_b"].values):
-                a, b = int(a), int(b)
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = _find(parent, a), _find(parent, b)
-                if ra != rb:
-                    # keep the MIN member as root → _find() is local_min
-                    lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                    parent[hi] = lo
-            if len(parent) > _UF_MAX_NODES:
-                yield _stars(parent)
-                parent = {}
-        if parent:
-            yield _stars(parent)
-
-    return edges.select("doc_a", "doc_b").mapInPandas(
-        _union_find, schema="doc_id long, local_min long"
+    return pd.DataFrame(
+        {
+            "doc_id": pd.Series(list(parent), dtype="int64"),
+            "local_min": pd.Series(
+                [_find(parent, v) for v in parent], dtype="int64"
+            ),
+        }
     )
+
+
+def _union_find(batches, max_nodes: int):
+    """Union-find with min-root attachment over ``(doc_a, doc_b)``
+    pandas batches: yields ``(doc_id, local_min)`` star frames, one
+    per flush past ``max_nodes`` tracked nodes plus the last (possibly
+    empty) one. Without a flush the stars are the exact min-id
+    components of every edge seen."""
+    parent: dict[int, int] = {}
+    for pdf in batches:
+        for a, b in zip(pdf["doc_a"].values, pdf["doc_b"].values):
+            a, b = int(a), int(b)
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            ra, rb = _find(parent, a), _find(parent, b)
+            if ra != rb:
+                # keep the MIN member as root → _find() is local_min
+                lo, hi = (ra, rb) if ra < rb else (rb, ra)
+                parent[hi] = lo
+        if len(parent) > max_nodes:
+            yield _stars(parent)
+            parent = {}
+    yield _stars(parent)
 
 
 _COMPONENTS_ORACLE = f"""
@@ -406,12 +332,7 @@ def dedup_components(spark, sf_dir):
         planted_corpus_fingerprint_arrays(spark, sf_dir),
         threshold=0.5,
     )
-    # dup-pair graphs are tiny relative to the corpus: two contraction
-    # levels resolve them without (or almost without) the per-round
-    # join loop, whose fixed cost dominated this query at sf1
-    return connected_components(
-        dups.select("doc_a", "doc_b"), contract_levels=2
-    )
+    return connected_components(dups.select("doc_a", "doc_b"))
 
 
 _CANONICAL_ORACLE = f"""

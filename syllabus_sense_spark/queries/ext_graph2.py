@@ -33,25 +33,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..guards import decide
 from ..tables import load
 from . import register
 
 _SUPP_OFFSET = 1_000_000
 _ITER = 3
 
-# Broadcast guard for the node-sized tables (degrees, ranks, BFS
-# levels) the trade-graph queries hint into their iteration joins —
-# the ext_graph._BROADCAST_MAX_LABELS pattern, sized for THIS shape:
-# pagerank's lazily-unrolled job holds ~5 node-sized hash relations
-# live at once (cdeg, sdeg, one rank relation per unrolled iteration),
-# so the per-relation bound is lower than the components loop's 20M.
-# 2M rows × ~100 B/entry × 5 live ≈ 1 GB of relations — safe beside
-# the (deserialized, partially disk-resident) edge checkpoint. Found
-# by the sixth-decade probe: at sf30 the trade graph has ~4.8M nodes
-# and ~170M edge pairs, and the unguarded broadcasts OOM'd a 28 GB
-# heap (reproduced isolated); at sf10 (1.6M nodes) broadcasts stay —
-# plans and timings unchanged at every gate tier.
-_BROADCAST_MAX_NODES = 2_000_000
 
 def trade_edges(spark, sf_dir: str):
     """Session-persisted graph snapshot: the distinct (cust, supp)
@@ -59,21 +47,14 @@ def trade_edges(spark, sf_dir: str):
     repeated ranking/BFS runs in one session — cached once per
     (app, sf) like the fingerprint artifacts, probed thereafter.
 
-    SERIALIZED localCheckpoint (``_util.ser_checkpoint``), the r14
-    revision of the sixth-decade fix. The two failure modes it has to
-    dodge pull opposite directions: (a) the DEFAULT (deserialized)
-    checkpoint storage OOM'd sf30 — ~170M pair rows as Java object
-    graphs, disk-evicted blocks re-inflated per scan
-    (`maybeCacheDiskValuesInMemory`); (b) the r13 columnar
-    ``persist()`` fixed (a) but does NOT truncate lineage, so at small
-    SF the 3-hop BFS unroll carried the full join+distinct subtree at
-    every one of its ~14 edge references — a measured ~5× constant at
-    sf0.1 (r13 judge's one `weak`). A SERIALIZED checkpoint gives both
-    halves at once: blocks stored as compact byte buffers that evict
-    and re-read without object churn (the sf30 posture), AND an opaque
-    LogicalRDD leaf so the unrolled iteration plans stay flat (the
-    sf0.1 posture). Released via ``memo.clear`` like
-    every persist=False checkpoint-backed artifact."""
+    A SERIALIZED localCheckpoint (``_util.ser_checkpoint``) dodges two
+    failure modes at once: the deserialized default OOM'd sf30 (~170M
+    pair rows as Java object graphs, disk-evicted blocks re-inflated
+    per scan), and a columnar ``persist()`` keeps the lineage, so the
+    3-hop BFS unroll carried the full join+distinct subtree at each of
+    its ~14 edge references (~5× at sf0.1). Compact byte-buffer blocks
+    evict and re-read without object churn, and the opaque LogicalRDD
+    leaf keeps the unrolled plans flat. Released via ``memo.clear``."""
     from ._util import ser_checkpoint
     from ..memo import session_artifact
 
@@ -110,28 +91,18 @@ def _trade_node_count(spark, sf_dir: str, edges) -> int:
     return session_memo(spark, sf_dir, "trade_node_count", build)
 
 
-def trade_node_hint(spark, sf_dir: str, edges):
-    """F.broadcast while the trade graph's node tables fit the guard,
-    identity past it (shuffle joins on the same keys — the degradation
-    the docstrings always promised; above the guard the planner gets
-    the exchange back)."""
-    if _trade_node_count(spark, sf_dir, edges) <= _BROADCAST_MAX_NODES:
-        return F.broadcast
-    return lambda df: df
-
-
 def trade_und(spark, sf_dir: str, edges):
-    """Doubled (src, dst) view of the trade graph, one row per edge
-    direction. Below the node guard it stays LAZY — a map-side
+    """``(und, hint)``: the doubled (src, dst) view of the trade graph,
+    one row per edge direction, and the join hint for the node-sized
+    side, both set by the ``broadcast_nodes`` guard.
+
+    Below the guard: ``F.broadcast``, and und stays LAZY — a map-side
     projection of the checkpointed edge artifact, re-derived per
-    iteration for free next to the broadcast joins. ABOVE the guard
-    the iteration joins are shuffles, and a lazy und would re-shuffle
-    all 2|E| rows every iteration — so it is materialized ONCE as a
-    src-partitioned session artifact (defaultParallelism×8 partitions:
-    wide enough that a partition's deserialized form stays ~100 MB and
-    the disk-block re-cache storm that OOM'd the unguarded sf30 run
-    cannot recur), and each iteration shuffles only the node-sized
-    rank/level side against it."""
+    iteration for free next to the broadcast joins. Above it: identity
+    (shuffle joins on the same keys), and und is materialized ONCE as a
+    src-partitioned session artifact (defaultParallelism×8 partitions,
+    each ~100 MB deserialized at sf30), so each iteration shuffles only
+    the node-sized rank/level side instead of all 2|E| rows."""
     und = edges.select(
         F.col("cust").alias("src"),
         (F.col("supp") + _SUPP_OFFSET).alias("dst"),
@@ -141,8 +112,8 @@ def trade_und(spark, sf_dir: str, edges):
             F.col("cust").alias("dst"),
         )
     )
-    if _trade_node_count(spark, sf_dir, edges) <= _BROADCAST_MAX_NODES:
-        return und
+    if decide("broadcast_nodes", _trade_node_count(spark, sf_dir, edges)):
+        return und, F.broadcast
     from ..memo import session_artifact
 
     def build():
@@ -156,7 +127,8 @@ def trade_und(spark, sf_dir: str, edges):
         p = spark.sparkContext.defaultParallelism * 8
         return und.repartition(p, "src")
 
-    return session_artifact(spark, sf_dir, "trade_und_part", build, persist=True)
+    part = session_artifact(spark, sf_dir, "trade_und_part", build, persist=True)
+    return part, lambda df: df
 
 
 def _trade_deg(spark, sf_dir: str, und):
@@ -206,37 +178,25 @@ r{k} AS (
 @register("graph_pagerank_trade", _oracle())
 def graph_pagerank_trade(spark, sf_dir):
     edges = trade_edges(spark, sf_dir)
-    # Degrees come from ONE groupBy over the doubled edge view (und
-    # out-degree = edge count on either side). The per-edge share is
-    # precombined NODE-side each iteration — rpd = ranks ⋈ deg →
-    # (src, share) — so the big join ships exactly one node-sized
-    # relation per iteration (the r12-vintage shape broadcast ranks
-    # AND two static degree tables: three node-sized relations per
-    # unrolled plan, which is what OOM'd sf30). deg's aggregation
-    # subtree appears once per iteration but Spark's ReuseExchange
-    # dedups it within the one pipelined job.
-    hint = trade_node_hint(spark, sf_dir, edges)
-    und = trade_und(spark, sf_dir, edges)
-    # deg is node-sized, corpus-pure (degree index of the trade-graph
-    # snapshot — graph systems store degrees beside the edges) and
-    # consumed by every iteration plus the rank init — a SESSION
-    # artifact (r14; previously a rotated per-invocation checkpoint:
-    # one 2|E|-row aggregation job per run, ~0.45 s of pagerank's
-    # construct at sf0.1). Left lazy, the aggregation re-ran inside
-    # every iteration's broadcast subtree (measured 1.9× on the whole
-    # query at sf10).
+    # Degrees come from ONE groupBy over the doubled edge view. The
+    # per-edge share is precombined NODE-side each iteration — rpd =
+    # ranks ⋈ deg → (src, share) — so the big join ships exactly one
+    # node-sized relation per iteration (broadcasting ranks AND two
+    # degree tables, three relations per unrolled plan, OOM'd sf30).
+    und, hint = trade_und(spark, sf_dir, edges)
+    # deg is node-sized, corpus-pure and read by every iteration plus
+    # the rank init — a SESSION artifact. Left lazy, the aggregation
+    # re-ran inside every iteration's broadcast subtree (1.9× on the
+    # whole query at sf10).
     deg = _trade_deg(spark, sf_dir, und)
     ranks = deg.select("node").withColumn("r", F.lit(1_000_000).cast("long"))
     # The iteration chain stays LAZY: rank(k) feeds rank(k+1) as a
-    # linear plan (no recomputation), so the whole fixed-point runs as
-    # one pipelined job — one shuffle per iteration (the groupBy), and
-    # the share side enters each join as a broadcast while the node
-    # guard holds. Past the guard, und is the src-partitioned artifact
-    # (trade_und) and each iteration shuffles only the node-sized rpd
-    # plus the groupBy — the textbook distributed-PageRank cost. A loop
-    # whose rounds are read more than once, or that stops on a
-    # convergence action, checkpoints each round through memo.iterate;
-    # a fixed 3-step unroll that reads each round once doesn't need it.
+    # linear plan, so the fixed point runs as one pipelined job with
+    # one shuffle per iteration (the groupBy); the share side is
+    # broadcast while the node guard holds, and past it each iteration
+    # shuffles only the node-sized rpd against the src-partitioned und.
+    # Each round is read once, so no per-round checkpoint
+    # (memo.iterate) is needed.
     for _ in range(_ITER):
         rpd = ranks.join(hint(deg), "node").select(
             F.col("node").alias("src"),

@@ -113,25 +113,18 @@ def _lpa_driver_rounds(adj_rows) -> dict:
 def graph_label_propagation(spark, sf_dir):
     adj = copurchase_adj(spark, sf_dir)
 
-    # Driver guard (r15; the ext_graph union-find / BPE-vocab
-    # pattern): the co-purchase projection is support-thresholded, so
-    # at gate scales the symmetrized adjacency is metadata-sized
-    # (~7k rows at sf0.1) — yet the distributed 3-round unroll paid
-    # ~1.4 s of construct per invocation (6 exchanges + the final
-    # checkpoint materialization: pure stage overhead, r14 measured
-    # every cheaper distributed variant worse). Below the guard the
-    # rounds run as exact driver arithmetic on the collected adjacency
-    # and return as an Arrow-backed local DataFrame; above it the
-    # distributed loop below is unchanged (the sf1+ graphs stay
-    # distributed, so the budget gates keep exercising it). The guard
-    # predicate costs one job on the checkpointed artifact; a session
-    # asks it once, not per invocation (the ext_graph2 node-count
-    # pattern).
+    # Driver guard, on connected_components' driver_edges threshold:
+    # the support-thresholded co-purchase adjacency is metadata-sized
+    # at gate scales (~7k rows at sf0.1), where the distributed 3-round
+    # unroll paid ~1.4 s of pure stage overhead per invocation. Below
+    # the guard the rounds run as exact driver arithmetic on the
+    # collected adjacency; above it the distributed loop below runs.
+    # The adjacency count is asked once per session.
+    from ..guards import decide
     from ..memo import session_memo
-    from .ext_graph import _DRIVER_MAX_EDGES
 
     n_adj = session_memo(spark, sf_dir, "copurchase_adj_count", adj.count)
-    if n_adj <= _DRIVER_MAX_EDGES:
+    if decide("driver_edges", n_adj):
         import pandas as pd
 
         labels = _lpa_driver_rounds(adj.collect())

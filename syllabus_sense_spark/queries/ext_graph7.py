@@ -71,16 +71,13 @@ l{k} AS (
 
 @register("graph_bfs_levels", _oracle())
 def graph_bfs_levels(spark, sf_dir):
-    # shared serialized-checkpoint trade-graph snapshot + doubled edge
-    # view (lazy map-side below the node guard, the src-partitioned
-    # cached artifact above it) — see ext_graph2 for the sixth-decade
-    # story and the r14 lineage-truncation fix (the 3-hop unroll below
-    # references the edge table ~14× and needs it to be an opaque leaf)
-    from .ext_graph2 import trade_edges, trade_node_hint, trade_und
+    # the shared trade-graph snapshot, its doubled edge view and the
+    # node-side join hint (ext_graph2.trade_und); the 3-hop unroll
+    # references the edge table ~14×, hence its opaque checkpoint leaf
+    from .ext_graph2 import trade_edges, trade_und
 
     edges = trade_edges(spark, sf_dir)
-
-    und = trade_und(spark, sf_dir, edges)
+    und, hint = trade_und(spark, sf_dir, edges)
     levels = (
         edges.filter(F.col("cust") % 100 == 1)
         .select(F.col("cust").alias("node"))
@@ -88,12 +85,8 @@ def graph_bfs_levels(spark, sf_dir):
         .withColumn("level", F.lit(0).cast("long"))
     )
     # Fixed 3-hop unroll stays lazy (linear plan, one shuffle per
-    # round — the groupBy MIN); the level table enters each join as a
-    # broadcast while the trade graph's node count fits the guard,
-    # exactly as graph_pagerank_trade (the level table is bounded by
-    # the node count — past the guard the joins shuffle instead, with
-    # und pre-partitioned by the join key).
-    hint = trade_node_hint(spark, sf_dir, edges)
+    # round — the groupBy MIN); the level table, bounded by the node
+    # count, takes the same hint as graph_pagerank_trade.
     for _ in range(_HOPS):
         expanded = (
             und.join(hint(levels), und.src == levels.node)

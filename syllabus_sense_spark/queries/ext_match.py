@@ -334,7 +334,7 @@ def match_entity_canonical(spark, sf_dir):
     # key-partitioned pair stream to exact components at gate scales
     # (level 2 sees the whole star graph in one partition) and to a
     # ~40× smaller loop input beyond
-    comp = connected_components(edges, dedup_edges=False, contract_levels=2)
+    comp = connected_components(edges, dedup_edges=False)
     from pyspark.sql import Window
 
     w = Window.partitionBy("canon_partkey")

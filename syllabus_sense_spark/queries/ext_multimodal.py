@@ -294,8 +294,8 @@ def parse_media_header(payload: bytes) -> dict:
                         else None
                     ),
                 )
-    except Exception:
-        pass  # malformed container → stays 'unknown'
+    except struct.error:
+        pass  # truncated header → stays 'unknown'
     return out
 
 

@@ -237,7 +237,7 @@ def dedup_semantic_clusters(spark, sf_dir):
     )
     # semantic dup graphs are tiny: two contraction levels resolve
     # them without the per-round join loop's fixed cost (ext_graph)
-    comp = connected_components(pairs, contract_levels=2).select(
+    comp = connected_components(pairs).select(
         F.col("doc_id").alias("vec_id"), "component_id"
     )
     return comp.groupBy("component_id").agg(

@@ -172,26 +172,19 @@ def _word_types(spark, sf_dir):
     return session_artifact(spark, sf_dir, "bpe_word_types", build, persist=False)
 
 
-# Driver-loop guard: below this many word TYPES the whole vocabulary
-# is metadata-sized (the centroid-table class) and the merge loop runs
-# as exact driver arithmetic — 2·N_MERGES distributed jobs per
-# invocation (pair-count + merge over a tens-of-rows table, pure stage
-# overhead) collapse to zero. Above it (Heap's-law vocab growth at
-# corpus scale) the distributed checkpointed loop below is the path.
-_DRIVER_MAX_TYPES = 65536
-
-
 def _collected_types(spark, sf_dir):
     """The vocabulary as a list[(seq, freq)] when it fits under the
-    driver guard, else None. Memoized per session
+    ``driver_types`` guard (the merge loop then runs as driver
+    arithmetic), else None. Memoized per session
     (``memo.session_memo``) — one count + one collect per session,
     both over the word-type artifact (a serialized checkpoint, not the
     corpus)."""
+    from ..guards import decide
     from ..memo import session_memo
 
     def build():
         w = _word_types(spark, sf_dir)
-        if w.count() > _DRIVER_MAX_TYPES:
+        if not decide("driver_types", w.count()):
             return None
         return [(r["seq"], r["freq"]) for r in w.collect()]
 

@@ -148,6 +148,7 @@ def streaming_dsv2_replay_drain(spark, sf_dir):
     """
 
     from ..sources.events_stream_datasource import register_events_replay
+    from ..streaming.events import event_rows
 
     register_events_replay(spark)
     # Batch size scales with the table (parquet footer count, driver-
@@ -161,12 +162,7 @@ def streaming_dsv2_replay_drain(spark, sf_dir):
     # exactness across — and the total//2 cap keeps ≥2 batches even
     # at sf0.001's 1000-row table, so every verification SF exercises
     # at least one boundary.
-    import pyarrow.parquet as pq
-
-    try:
-        total = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-    except Exception:
-        total = 0
+    total = event_rows(sf_dir)
     batch_rows = max(min(5000, max(1, total // 2)), total // 4)
     events = (
         spark.readStream.format("events_replay")

@@ -17,6 +17,7 @@ import sys
 import zipimport
 from collections.abc import Callable, Iterator
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 # Runtime-settable SQL confs we also apply defensively to sessions we
@@ -93,9 +94,10 @@ def tune(spark: SparkSession) -> SparkSession:
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            # Some confs may be fixed by the owner of the session; the
-            # engine still works, just potentially less optimally.
+        except AnalysisException:
+            # A static conf is fixed by the owner of the session
+            # (CANNOT_MODIFY_STATIC_CONFIG); the engine still works,
+            # just potentially less optimally.
             pass
     return spark
 

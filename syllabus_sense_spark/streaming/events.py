@@ -15,6 +15,8 @@ partitioned parquet/Delta ``writeStream``.
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -63,6 +65,19 @@ def _event_stream(spark: SparkSession, sf_dir: str):
     return raw
 
 
+def event_rows(sf_dir: str) -> int:
+    """Row count of ``events.parquet`` from its footer (driver-side, no
+    scan); 0 when the file is missing or is not Parquet."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        return pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
+    except (OSError, pa.ArrowInvalid):
+        return 0
+
+
+@contextlib.contextmanager
 def state_partitions(spark: SparkSession, sf_dir: str):
     """Context manager sizing ``spark.sql.shuffle.partitions`` — which
     pins a NEW stream's state-store partition count at checkpoint
@@ -81,28 +96,15 @@ def state_partitions(spark: SparkSession, sf_dir: str):
     ``with`` block is affected — batch queries read the conf at their
     own execution time, and the session value is restored on exit.
     """
-    import contextlib
-
-    import pyarrow.parquet as pq
-
-    @contextlib.contextmanager
-    def _cm():
-        key = "spark.sql.shuffle.partitions"
-        old = spark.conf.get(key)
-        try:
-            total = pq.ParquetFile(
-                f"{sf_dir}/events.parquet"
-            ).metadata.num_rows
-        except Exception:  # noqa: BLE001 — unknown size: keep session value
-            total = 0
-        if total:
-            spark.conf.set(key, str(max(8, min(256, total // 250_000))))
-        try:
-            yield
-        finally:
-            spark.conf.set(key, old)
-
-    return _cm()
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    total = event_rows(sf_dir)  # 0, unknown size: keep session value
+    if total:
+        spark.conf.set(key, str(max(8, min(256, total // 250_000))))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 def _with_event_time(df, col: str = "ts"):

@@ -181,29 +181,35 @@ def test_round_loops_release_through_iterate():
     assert all(len(lines) == 1 for lines in found.values()), found
 
 
-def test_components_repeated_invocations_do_not_accumulate(spark):
-    """connected_components invoked N times (collect each — the
-    driver/bench/oracle consumption pattern) holds a flat persisted-RDD
-    count: loop checkpoints released in-loop, the returned labels'
-    backing checkpoint rotated out by the next invocation."""
-    from syllabus_sense_spark.queries.ext_graph import connected_components
+def test_components_repeated_invocations_do_not_accumulate(
+    spark, cluster, monkeypatch
+):
+    """connected_components invoked N times on the cluster venue
+    (collect each — the driver/bench/oracle consumption pattern) holds
+    a flat persisted-RDD count: loop checkpoints released in-loop, the
+    returned labels' backing checkpoint rotated out by the next
+    invocation. Levels 0 release through the min-label loop, levels 2
+    through the contraction's one-partition exit."""
+    from syllabus_sense_spark.queries import ext_graph
 
     edges = spark.createDataFrame(
         [Row(doc_a=i, doc_b=i + 1) for i in range(30)]
     ).repartition(4)
     want = {(i, 0) for i in range(31)}
 
-    counts = []
-    for _ in range(3):
-        got = {
-            (r.doc_id, r.component_id)
-            for r in connected_components(edges, contract_levels=2).collect()
-        }
-        assert got == want
-        counts.append(_n_persistent(spark))
-    assert counts[2] <= counts[0], (
-        f"live persisted RDDs grew across invocations: {counts}"
-    )
+    for levels in (0, 2):
+        monkeypatch.setattr(ext_graph, "_CONTRACT_LEVELS", levels)
+        counts = []
+        for _ in range(3):
+            got = {
+                (r.doc_id, r.component_id)
+                for r in ext_graph.connected_components(edges).collect()
+            }
+            assert got == want
+            counts.append(_n_persistent(spark))
+        assert counts[2] <= counts[0], (
+            f"levels={levels}: live persisted RDDs grew across invocations: {counts}"
+        )
 
 
 def test_dedup_query_repeated_invocations_do_not_accumulate(spark, sf_dir):

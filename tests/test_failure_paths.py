@@ -131,3 +131,32 @@ def test_multimodal_feature_extract_shapes(spark, sf_dir):
         assert abs(sum(r.features) - 1.0) < 1e-9
     again = {r.doc_id: tuple(r.features) for r in out.collect()}
     assert again == {r.doc_id: tuple(r.features) for r in rows}
+
+
+def test_events_footer_read_degrades_to_zero(sf_dir, tmp_path):
+    """The events footer read sizes the replay batches and the state
+    partitions: a missing file (``FileNotFoundError``) or one that is
+    not Parquet (``ArrowInvalid``) reads as 0 rows, the unknown-size
+    fallback."""
+    from syllabus_sense_spark.streaming.events import event_rows
+
+    assert event_rows(sf_dir) > 0
+    assert event_rows(str(tmp_path)) == 0
+    (tmp_path / "events.parquet").write_bytes(b"not parquet at all")
+    assert event_rows(str(tmp_path)) == 0
+
+
+def test_tune_skips_static_confs_only(spark, monkeypatch):
+    """``tune`` skips a conf the session owner fixed (a static conf
+    raises ``AnalysisException``) and still applies the ones after it."""
+    from syllabus_sense_spark import session
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    conf = {"spark.sql.warehouse.dir": "/elsewhere", key: "7"}
+    monkeypatch.setattr(session, "RUNTIME_CONF", conf)
+    try:
+        assert session.tune(spark) is spark
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, old)

@@ -1,16 +1,34 @@
-"""Forced-path laws for size guards whose cluster side no gate scale
-reaches: at sf0.001–sf0.1 the BPE vocabulary and the trade graph sit
-below their driver/broadcast guards, so only these laws run the other
-side. Each lowers the guard below any real size, clears the session
-memo (the guard decision and the artifacts built under it are
-memoized), and asserts the output equals the below-guard output.
+"""The forced-path law for the venue table (``guards.LIMITS``): at
+sf0.001 every guarded size sits on the small side, so only this law
+runs the other. Each case runs its target as shipped, then lowers the
+guard below any real size, clears the session memo (guarded sizes and
+the artifacts built under a decision are memoized) and runs it again:
+the rows must be equal, and ``guards.TAKEN`` must show the small side
+for the first run and the large side for the forced one.
 """
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import Row
 
-from syllabus_sense_spark import memo
+from syllabus_sense_spark import guards, memo
+
+# (guard, target): a registry query, or a small connected_components graph
+_CASES = [
+    ("driver_edges", "dedup_components"),
+    ("driver_edges", "graph_label_propagation"),
+    ("driver_types", "training_bpe_merges"),
+    ("broadcast_nodes", "graph_pagerank_trade"),
+    ("broadcast_nodes", "graph_bfs_levels"),
+    ("broadcast_labels", "connected_components"),
+]
+_LARGE = {"driver": "cluster", "broadcast": "shuffle"}
+
+
+def test_cases_cover_every_guard():
+    """A guard cannot land in the table without a forced case."""
+    assert {name for name, _ in _CASES} == set(guards.LIMITS)
 
 
 @pytest.fixture
@@ -25,35 +43,49 @@ def _n_persistent(spark) -> int:
     return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
 
-def test_bpe_distributed_merges_match_driver(spark, sf_dir, monkeypatch, fresh_memo):
-    """Above ``_DRIVER_MAX_TYPES`` the merges run as the checkpointed
-    distributed loop: same merge table as the driver arithmetic, and
-    repeated calls hold a flat persisted-RDD count."""
-    from syllabus_sense_spark.queries import ext_training6
+def _run(spark, sf_dir, name, target, probe=None):
+    """The target's sorted rows and the sides ``name`` took meanwhile."""
+    before = guards.TAKEN.copy()
+    if target == "connected_components":
+        from syllabus_sense_spark.queries.ext_graph import connected_components
 
-    want = ext_training6.training_bpe_merges(spark, sf_dir).collect()
-    assert want
-    monkeypatch.setattr(ext_training6, "_DRIVER_MAX_TYPES", -1)
+        edges = spark.createDataFrame(
+            [Row(doc_a=1, doc_b=2), Row(doc_a=2, doc_b=3), Row(doc_a=8, doc_b=9)]
+        )
+        rows = connected_components(edges, plan_probe=probe).collect()
+    else:
+        from syllabus_sense_spark.queries import QUERIES, load_all_queries
+
+        load_all_queries()
+        rows = QUERIES[target](spark, sf_dir).collect()
+    return sorted(rows), {s for n, s in guards.TAKEN - before if n == name}
+
+
+@pytest.mark.parametrize(("name", "target"), _CASES)
+def test_forced_side_matches(spark, sf_dir, monkeypatch, fresh_memo, name, target):
+    small = name.partition("_")[0]
+    if name == "broadcast_labels":
+        # the label broadcast is decided inside the min-label loop
+        from syllabus_sense_spark.queries import ext_graph
+
+        monkeypatch.setitem(guards.LIMITS, "driver_edges", -1)
+        monkeypatch.setattr(ext_graph, "_CONTRACT_LEVELS", 0)
+    want, sides = _run(spark, sf_dir, name, target)
+    assert want and sides == {small}, f"shipped run took {sides}"
+
+    monkeypatch.setitem(guards.LIMITS, name, -1)
     memo.clear()
-    counts = []
-    for _ in range(2):
-        assert ext_training6.training_bpe_merges(spark, sf_dir).collect() == want
-        counts.append(_n_persistent(spark))
-    assert counts[1] == counts[0], f"distributed BPE leaked checkpoints: {counts}"
+    probe: list[str] = []
+    got, sides = _run(spark, sf_dir, name, target, probe)
+    assert sides == {_LARGE[small]}, f"forced run took {sides}"
+    assert got == want
 
-
-@pytest.mark.parametrize("query", ["graph_pagerank_trade", "graph_bfs_levels"])
-def test_trade_graph_shuffle_path_matches_broadcast(
-    spark, sf_dir, monkeypatch, fresh_memo, query
-):
-    """Above ``_BROADCAST_MAX_NODES`` the trade-graph rounds shuffle a
-    key-partitioned edge artifact instead of broadcasting the node
-    side: same rows either way."""
-    from syllabus_sense_spark.queries import ext_graph2, load_all_queries, QUERIES
-
-    load_all_queries()
-    want = sorted(QUERIES[query](spark, sf_dir).collect())
-    assert want
-    monkeypatch.setattr(ext_graph2, "_BROADCAST_MAX_NODES", -1)
-    memo.clear()
-    assert sorted(QUERIES[query](spark, sf_dir).collect()) == want
+    if name == "driver_types":
+        # the distributed merge loop holds a flat persisted-RDD count
+        before = _n_persistent(spark)
+        assert _run(spark, sf_dir, name, target)[0] == want
+        assert _n_persistent(spark) == before, "distributed BPE leaked checkpoints"
+    if name == "broadcast_labels":
+        assert probe and all("BroadcastHashJoin" not in p for p in probe), (
+            "guard ignored: a broadcast join survived above the threshold"
+        )

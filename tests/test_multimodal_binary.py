@@ -75,6 +75,15 @@ def test_parse_media_header_pure():
     assert parse_media_header(b"")["codec"] == "unknown"
 
 
+def test_truncated_media_header_stays_unknown():
+    """A container cut inside its header (PNG IHDR, WAV fmt chunk)
+    raises ``struct.error`` inside the parser, the one error its catch
+    takes: the record stays 'unknown' instead of failing the task."""
+    for cut in (make_png(8, 8)[:20], make_wav(10)[:30]):
+        rec = parse_media_header(cut)
+        assert (rec["codec"], rec["width"], rec["sample_rate"]) == ("unknown", None, None)
+
+
 def test_media_header_decode_distributed(spark):
     rows = [
         (1, bytearray(make_png(64, 48))),

@@ -13,7 +13,8 @@ from syllabus_sense_spark.pipeline.extract import (
     extract_subtopics,
     plan_questions,
 )
-from syllabus_sense_spark.pipeline.flagship import run_flagship, save_questions
+from syllabus_sense_spark.pipeline.flagship import run_flagship
+from syllabus_sense_spark.sinks import write_questions_parquet
 from syllabus_sense_spark.sources.synthetic import filtered_elements
 
 
@@ -83,8 +84,8 @@ def test_extraction_failure_yields_empty(spark):
 
 def test_partitioned_append_sink(questions, tmp_path):
     path = str(tmp_path / "questions")
-    save_questions(questions.limit(50), path)
-    save_questions(questions.limit(50), path)  # append, not overwrite
+    write_questions_parquet(questions.limit(50), path)
+    write_questions_parquet(questions.limit(50), path)  # append, not overwrite
     back = questions.sparkSession.read.parquet(path)
     assert back.count() == 100
     assert "topic" in back.columns

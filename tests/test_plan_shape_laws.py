@@ -109,7 +109,7 @@ def test_importance_selection_explodes_tokens_at_most_twice(spark, sf_dir):
     assert n <= 2, f"{n} Generate nodes — the vocabulary is re-derived:\n{plan}"
 
 
-def test_components_iteration_joins_broadcast_label_side(spark):
+def test_components_iteration_joins_broadcast_label_side(spark, cluster, monkeypatch):
     """Round-11 judge item 3: the 2× components win came from
     broadcasting the label side inside the iteration (checkpointed
     lineage has no stats, so nothing else stops a refactor from
@@ -122,13 +122,14 @@ def test_components_iteration_joins_broadcast_label_side(spark):
     and fails the law."""
     from pyspark.sql import Row
 
-    from syllabus_sense_spark.queries.ext_graph import connected_components
+    from syllabus_sense_spark.queries import ext_graph
 
+    monkeypatch.setattr(ext_graph, "_CONTRACT_LEVELS", 0)  # the loop only
     edges = spark.createDataFrame(
         [Row(doc_a=i, doc_b=i + 1) for i in range(15)]
     )
     probe: list[str] = []
-    labels = connected_components(edges, plan_probe=probe).collect()
+    labels = ext_graph.connected_components(edges, plan_probe=probe).collect()
     assert {r.component_id for r in labels} == {0}
     assert probe, "plan probe captured no rounds"
     for i, plan in enumerate(probe):

@@ -363,22 +363,3 @@ def test_concurrent_sessions_sweep_laws(spark, sf_dir):
     # every opened session eventually closes → the sweep returns to 0
     assert rows[-1].active_end == 0
     assert sum(r.n_starts for r in rows) == sum(r.n_ends for r in rows)
-
-
-def test_lpa_driver_and_distributed_paths_agree(spark, sf_dir, monkeypatch):
-    """r15 driver guard: below _DRIVER_MAX_EDGES the 3 LPA rounds run
-    as driver arithmetic. Forcing the distributed path (by lowering the
-    guard below any adjacency count) must produce the identical label
-    fixpoint."""
-    from syllabus_sense_spark.queries import ext_graph, ext_graph4
-
-    got_driver = {
-        r.part_key: r.community
-        for r in ext_graph4.graph_label_propagation(spark, sf_dir).collect()
-    }
-    monkeypatch.setattr(ext_graph, "_DRIVER_MAX_EDGES", -1)
-    got_dist = {
-        r.part_key: r.community
-        for r in ext_graph4.graph_label_propagation(spark, sf_dir).collect()
-    }
-    assert got_driver == got_dist and len(got_driver) > 0
