@@ -5,9 +5,14 @@ threshold here and records the side it took.
 ``decide(name, size)`` is True on the small side (``size <=
 LIMITS[name]``: driver arithmetic, or a broadcast hint) and counts
 ``(name, side)`` in ``TAKEN``, the way ``memo.BUILDS`` counts builds.
-To force the large side, lower the threshold and drop the session memo
-(some guarded sizes, and artifacts built under a decision, are
-memoized)::
+The ``broadcast_*`` guards decide on a size. The ``driver_*`` guards go
+through ``fetch(name, df)``, which collects at most ``LIMITS[name] + 1``
+rows in one Spark job and returns the frame, or None when it is over
+the limit, so a driver venue never counts and then collects. A fetch
+kept in a session memo counts ``TAKEN`` once per session, on the memo
+miss. To force the large side, lower the threshold and drop the session
+memo (some guarded sizes and fetched rows, and artifacts built under a
+decision, are memoized); a limit of -1 fetches no rows::
 
     monkeypatch.setitem(guards.LIMITS, "driver_edges", -1)
     memo.clear()
@@ -23,6 +28,11 @@ drops mega-buckets by design.
 from __future__ import annotations
 
 from collections import Counter
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    import pandas as pd
+    from pyspark.sql import DataFrame
 
 LIMITS: dict[str, int] = {
     # connected_components and LPA: at or below this many edges the
@@ -59,3 +69,12 @@ def decide(name: str, size: int) -> bool:
     kind = name.partition("_")[0]
     TAKEN[name, kind if small else _LARGE[kind]] += 1
     return small
+
+
+def fetch(name: str, df: DataFrame) -> pd.DataFrame | None:
+    """``df`` as a pandas frame when it fits guard ``name``, else None;
+    counts the side taken. ``toPandas`` keeps the bounded collect one
+    job: ``collect()`` on a limit scans 1, then 4, then the rest of the
+    partitions, one job each."""
+    pdf = df.limit(LIMITS[name] + 1).toPandas()
+    return pdf if decide(name, len(pdf)) else None

@@ -6,8 +6,9 @@ Entries are keyed ``(applicationId, abspath(sf_dir), kind)``:
 - table loads (``tables.load``, kind ``table_<name>``);
 - session artifacts — corpus-pure index DataFrames (README
   "Session-artifact doctrine");
-- collected driver values over those indexes (BPE vocabulary, scorer
-  query set, guard counts, corpus totals);
+- collected driver values over those indexes (BPE vocabulary, LPA
+  adjacency rows, scorer query set, the trade node count, corpus
+  totals);
 - rotated checkpoint generations, keyed ``(applicationId, "", site)``
   — one live generation per call site (``rotate_checkpoint``).
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..guards import decide
+from ..guards import decide, fetch
 from . import register
 from ._util import iterate, release_checkpoint, rotate_checkpoint, ser_checkpoint
 from .ext_dedup import (
@@ -67,11 +67,12 @@ def connected_components(
     Runs Spark jobs while building; returns the converged label table,
     localCheckpoint-ed so downstream consumers see a flat plan.
 
-    Venue (``guards.decide("driver_edges", ...)``): LSH and blocking
+    Venue (``guards.fetch("driver_edges", ...)``): LSH and blocking
     keep dup and match graphs tiny relative to the corpus, so at or
-    below the guard the edge list is collected and resolved by the
-    union-find ``partition_local_contract`` runs per partition, at
-    zero per-round jobs. Above it:
+    below the guard the edge list comes back from the one bounded
+    fetch and is resolved by the union-find ``partition_local_contract``
+    runs per partition, at zero per-round jobs. The fetch reads the
+    edge checkpoint, so the large side recomputes nothing. Above it:
 
     - ``_CONTRACT_LEVELS`` rounds of ``partition_local_contract``:
       level 1 contracts each input partition in place (exchange-free
@@ -102,8 +103,8 @@ def connected_components(
     # per union branch. Pair streams store SERIALIZED (see
     # _util.ser_checkpoint); node-sized loop state keeps the default.
     edges = ser_checkpoint(edges)
-    if decide("driver_edges", edges.count()):
-        pdf = edges.select("doc_a", "doc_b").toPandas()
+    pdf = fetch("driver_edges", edges.select("doc_a", "doc_b"))
+    if pdf is not None:
         release_checkpoint(edges)
         # at most 2 × LIMITS["driver_edges"] nodes, far below
         # _UF_MAX_NODES: no flush, so exactly one star frame

@@ -118,16 +118,22 @@ def graph_label_propagation(spark, sf_dir):
     # at gate scales (~7k rows at sf0.1), where the distributed 3-round
     # unroll paid ~1.4 s of pure stage overhead per invocation. Below
     # the guard the rounds run as exact driver arithmetic on the
-    # collected adjacency; above it the distributed loop below runs.
-    # The adjacency count is asked once per session.
-    from ..guards import decide
+    # fetched adjacency rows (memoized per session, None above the
+    # guard); above it the distributed loop below runs.
+    from ..guards import fetch
     from ..memo import session_memo
 
-    n_adj = session_memo(spark, sf_dir, "copurchase_adj_count", adj.count)
-    if decide("driver_edges", n_adj):
+    def fetch_rows():
+        pdf = fetch("driver_edges", adj)
+        if pdf is None:
+            return None
+        return list(zip(pdf["node"].tolist(), pdf["nbr"].tolist()))
+
+    rows = session_memo(spark, sf_dir, "copurchase_adj_rows", fetch_rows)
+    if rows is not None:
         import pandas as pd
 
-        labels = _lpa_driver_rounds(adj.collect())
+        labels = _lpa_driver_rounds(rows)
         nodes = list(labels)
         pdf = pd.DataFrame(
             {

@@ -176,17 +176,16 @@ def _collected_types(spark, sf_dir):
     """The vocabulary as a list[(seq, freq)] when it fits under the
     ``driver_types`` guard (the merge loop then runs as driver
     arithmetic), else None. Memoized per session
-    (``memo.session_memo``) — one count + one collect per session,
-    both over the word-type artifact (a serialized checkpoint, not the
-    corpus)."""
-    from ..guards import decide
+    (``memo.session_memo``): one bounded fetch per session, over the
+    word-type artifact (a serialized checkpoint, not the corpus)."""
+    from ..guards import fetch
     from ..memo import session_memo
 
     def build():
-        w = _word_types(spark, sf_dir)
-        if not decide("driver_types", w.count()):
+        pdf = fetch("driver_types", _word_types(spark, sf_dir))
+        if pdf is None:
             return None
-        return [(r["seq"], r["freq"]) for r in w.collect()]
+        return list(zip(pdf["seq"].tolist(), pdf["freq"].tolist()))
 
     return session_memo(spark, sf_dir, "bpe_collected_types", build)
 

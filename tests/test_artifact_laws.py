@@ -73,7 +73,7 @@ ARTIFACT_KINDS: dict[str, tuple[str, str]] = {
     "sim_query_set": ("ext_similarity", "exact scorers' query tier + norms"),
     "trade_node_count": ("ext_graph2", "trade-graph node count (broadcast guard)"),
     "bpe_collected_types": ("ext_training6", "BPE vocabulary under the driver guard"),
-    "copurchase_adj_count": ("ext_graph4", "co-purchase adjacency row count (LPA driver guard)"),
+    "copurchase_adj_rows": ("ext_graph4", "co-purchase adjacency rows under the LPA driver guard"),
     "importance_totals": ("ext_training17", "DSIR corpus token totals"),
     # the harness tables themselves
     "table_{name}": ("tables", "parquet scan, persisted when small"),
@@ -203,7 +203,7 @@ def test_second_invocation_builds_nothing(spark, sf_dir, kind, query):
 _CLEAR_LAW_CONSUMERS = [
     ("bpe_collected_types", "training_bpe_merges"),
     ("sim_query_set", "similarity_topk_bruteforce"),
-    ("copurchase_adj_count", "graph_label_propagation"),
+    ("copurchase_adj_rows", "graph_label_propagation"),
     ("importance_totals", "training_importance_selection"),
     ("trade_node_count", "graph_pagerank_trade"),
 ]
