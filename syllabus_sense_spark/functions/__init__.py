@@ -1,4 +1,3 @@
-"""Column-function library (JVM-side expressions only)."""
-
-from .text import lang_id_heuristic, quality_score, token_count  # noqa: F401
-from .vectors import cosine_sim, dot_product  # noqa: F401
+"""Column-function library (JVM-side expressions only): the tokenizer,
+language ID and quality scoring (``text``) and the Morton
+bit-interleave (``zorder``). Callers import from the submodules."""

@@ -1,8 +1,11 @@
 """Text-analysis column functions — pure built-in expressions, usable
 inside any query without leaving whole-stage codegen.
 
-[EXT] capabilities from BASELINE.json: language-ID (n-gram heuristic),
-quality scoring, token counting. All return Columns.
+``tokens`` is the one tokenizer: every query that splits text into
+words calls it, except ``array_higher_order_fns``, whose job is to show
+a filter lambda. The rest are [EXT] capabilities from BASELINE.json:
+language-ID (n-gram heuristic), quality scoring and token counting.
+All return Columns.
 """
 
 from __future__ import annotations
@@ -22,25 +25,33 @@ _LANG_CUES = {
 }
 
 
-def token_count(text: Column) -> Column:
+def tokens(text: Column | str, sep: str = " ") -> Column:
+    """The non-empty pieces of ``text`` split on the regex ``sep``, in
+    order; NULL for a NULL ``text``. Equal to
+    ``F.filter(F.split(text, sep), lambda t: F.length(t) > 0)`` —
+    ``split`` never yields a NULL element, so dropping ``""`` keeps
+    exactly the pieces of positive length — but cheaper:
+    ``array_remove`` is one native pass, with no lambda variable bound
+    per element."""
+    return F.array_remove(F.split(text, sep), "")
+
+
+def token_count(text: Column | str) -> Column:
     """Whitespace token count (BPE-ish subword estimate = chars/4 is
     ``F.length(text) / 4`` — callers pick)."""
-    return F.size(F.filter(F.split(text, r"\s+"), lambda t: F.length(t) > 0))
+    return F.size(tokens(text, r"\s+"))
 
 
 def space_token_count(text: Column) -> Column:
     """Count of the non-empty tokens of ``text`` split on single
-    spaces; NULL for a NULL ``text``. Equal to
-    ``F.size(F.filter(F.split(text, " "), lambda t: F.length(t) > 0))``
-    but cheaper: ``array_remove`` is one native pass, with no lambda
-    variable bound per element."""
-    return F.size(F.array_remove(F.split(text, " "), ""))
+    spaces; NULL for a NULL ``text``."""
+    return F.size(tokens(text))
 
 
 def quality_score(text: Column) -> Column:
     """Composite [0,1] quality: penalizes very short docs, low lexical
     diversity, and extreme token lengths. Deterministic arithmetic."""
-    toks = F.filter(F.split(text, r"\s+"), lambda t: F.length(t) > 0)
+    toks = tokens(text, r"\s+")
     n = F.size(toks).cast("double")
     diversity = F.size(F.array_distinct(toks)).cast("double") / F.greatest(n, F.lit(1.0))
     length_ok = F.least(n / F.lit(50.0), F.lit(1.0))

@@ -90,10 +90,3 @@ def run_expectations(df: DataFrame, rules: list[Expectation]) -> DataFrame:
         (F.col("n_violations") == 0).alias("passed"),
     )
 
-
-def violation_examples(
-    df: DataFrame, predicate: Column, limit: int = 10
-) -> DataFrame:
-    """Debug helper: sample rows violating a predicate (separate pass,
-    deliberately outside the gate)."""
-    return df.filter(predicate).limit(limit)

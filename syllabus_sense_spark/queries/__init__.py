@@ -97,6 +97,44 @@ _FORCE_RECHECK: list[str] = [
     "streaming_static_enrich_drain",
     "streaming_session_windows_drain",
     "streaming_dsv2_replay_drain",
+    # Text is tokenized through ``functions.text.tokens`` (array_remove
+    # of "" in place of a length-filter lambda): every query that split
+    # words by hand, and those behind ``shingle_docs_raw`` and
+    # ``quality_score``.
+    "array_explode_outer_keepempty",
+    "batch_by_length_buckets",
+    "bpe_first_merge_pairs",
+    "contamination_ngram_overlap",
+    "curation_doc_decisions",
+    "curation_pipeline_summary",
+    "dedup_cluster_report",
+    "dedup_containment",
+    "dedup_incremental_index",
+    "dedup_minhash_calibration",
+    "dedup_minhash_lsh",
+    "dedup_ngram_jaccard",
+    "dedup_prefix_filter",
+    "dedup_repeated_passages",
+    "dedup_simhash",
+    "ml_eval_confusion_matrix",
+    "ml_feature_hashing_vectors",
+    "quality_filter_funnel",
+    "quality_unigram_lm_score",
+    "source_overlap_matrix",
+    "text_boilerplate_fraction",
+    "text_inverted_postings",
+    "text_lang_id_heuristic",
+    "text_ngram_novelty",
+    "text_quality_scores",
+    "text_readability_stats",
+    "text_repetition_ratios",
+    "text_stopword_candidates",
+    "text_vocab_growth",
+    "text_zipf_profile",
+    "training_best_of_n",
+    "training_curriculum_stages",
+    "training_preference_pairs",
+    "training_token_budget_epochs",
 ]
 
 

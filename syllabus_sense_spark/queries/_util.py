@@ -56,13 +56,8 @@ def dsum(col: Column) -> Column:
     return F.sum(col).cast("double")
 
 
-def davg(col: Column) -> Column:
-    """Exact-sum / count in double — one IEEE division, bit-stable."""
-    return F.sum(col).cast("double") / F.count(F.lit(1))
-
-
 # --------------------------------------------------------------------------
-# Scaled-long exact aggregation — the fast twin of dsum/davg.
+# Scaled-long exact aggregation — the fast twin of dsum.
 #
 # Spark's SUM over any DecimalType widens the buffer by 10 digits
 # (sum over decimal(18,2) buffers decimal(28,2)), which exceeds the
@@ -155,7 +150,8 @@ def xsum(unscaled: Column, scale: int, prec: int, over=None) -> Column:
 
 
 def xavg(unscaled: Column, scale: int, prec: int) -> Column:
-    """Exact twin of ``davg(expr)`` (same parameters as xsum)."""
+    """Exact sum / count in double — one IEEE division, bit-stable
+    (same parameters as xsum)."""
     return xsum(unscaled, scale, prec) / F.count(F.lit(1))
 
 
@@ -169,12 +165,6 @@ def scaled_to_double(total: Column, scale: int, prec: int) -> Column:
 
     val = total.cast("decimal(36,0)") * F.lit(_d.Decimal(1).scaleb(-scale))
     return val.cast(f"decimal({prec},{scale})").cast("double")
-
-
-# DuckDB-side equivalents (string templates for oracle SQL)
-SQL_DEC2 = "CAST({c} AS DECIMAL(18,2))"
-SQL_ONE_MINUS = "CAST(1 - CAST({c} AS DECIMAL(18,2)) AS DECIMAL(3,2))"
-SQL_ONE_PLUS = "CAST(1 + CAST({c} AS DECIMAL(18,2)) AS DECIMAL(3,2))"
 
 
 _SCRATCH_ROOT: list[str] = []  # memo: this process's swept scratch root

@@ -33,6 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from . import register
 from .ext_dedup import _DUP_SUFFIX, _SQL_SHINGLE_HASHES, _corpus, planted_corpus_fingerprints
 
@@ -95,7 +96,7 @@ def curation_doc_decisions(spark, sf_dir):
     )
     toks = corpus.select(
         "doc_id",
-        F.size(F.filter(F.split("text", " "), lambda x: F.length(x) > 0))
+        F.size(tokens("text"))
         .cast("long")
         .alias("n_tokens"),
     )

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.text import tokens
 from ..memo import clear as clear_session_artifacts  # noqa: F401 — audit entry point
 from ..memo import session_artifact
 from ..tables import load
@@ -233,7 +234,7 @@ def shingle_docs_raw(corpus: DataFrame, n: int = 3) -> DataFrame:
 
     Tokens are materialized as a column before the shingle transform:
     referencing the tokenize expression inside the lambda would
-    re-evaluate split+filter for every element_at call (O(tokens²)
+    re-evaluate the tokenizer for every element_at call (O(tokens²)
     per row).
     """
     # Spread documents over the core count before the explode: splits
@@ -244,7 +245,7 @@ def shingle_docs_raw(corpus: DataFrame, n: int = 3) -> DataFrame:
     spark_parallelism = corpus.sparkSession.sparkContext.defaultParallelism
     tokenized = corpus.repartition(spark_parallelism).select(
         "doc_id",
-        F.filter(F.split("text", " "), lambda x: F.length(x) > 0).alias("toks"),
+        tokens("text").alias("toks"),
     )
     toks = F.col("toks")
     shingles = F.when(

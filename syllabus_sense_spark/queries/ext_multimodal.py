@@ -309,9 +309,3 @@ def decode_media_headers(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
             recs.append(rec)
         yield pd.DataFrame(recs, columns=cols)
 
-
-def media_header_table(media) -> "pd.DataFrame":
-    """media: DataFrame(media_id long, payload binary) → real header
-    metadata via Arrow-batched mapInPandas (one task per input split;
-    at 100 TB each executor decodes only its partitions' blobs)."""
-    return media.mapInPandas(decode_media_headers, MEDIA_HEADER_SCHEMA)

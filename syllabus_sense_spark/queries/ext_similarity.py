@@ -2,8 +2,8 @@
 (vec_id, embedding: array<float>, label).
 
 - ``similarity_topk_bruteforce``: exact cosine top-k — the correctness
-  baseline. Query set broadcasts; the fact side streams; dot products
-  are JVM higher-order functions (zip_with + aggregate), no Python.
+  baseline. The query set ships in the task closure; a mapInArrow
+  matrix kernel scores each candidate partition.
 - ``similarity_cosine_blocked``: embedding-cosine near-dup with label
   blocking — the IVF-ish shape: candidates only within a block, so
   the pairwise cost is n^2/n_blocks instead of n^2.
@@ -27,14 +27,6 @@ from . import register
 DIM = 64  # embeddings.embedding width (TESTDATA.md)
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def _dot_sql(a: str, b: str, dim: int = DIM) -> str:
     return " + ".join(
         f"element_at({a}, {i}) * element_at({b}, {i})" for i in range(1, dim + 1)
@@ -45,7 +37,7 @@ def _dot_unrolled(a, b, dim: int = DIM):
     """Dot product as a statically-unrolled sum of products — stays
     inside whole-stage codegen instead of the interpreted higher-order
     aggregate. Left-associated addition, so the result is bit-identical
-    to the ``F.aggregate`` fold (IEEE: 0.0 + x == x).
+    to a left-to-right fold from 0.0 (IEEE: 0.0 + x == x).
 
     Pass column NAMES (plain or alias-qualified) where possible: the
     whole sum is then ONE ``F.expr`` parse JVM-side instead of ~3·dim
@@ -65,10 +57,6 @@ def _norm(v, dim: int = DIM):
     if isinstance(v, str):
         return F.expr(f"sqrt({_dot_sql(v, v, dim)})")
     return F.sqrt(_dot_unrolled(v, v, dim))
-
-
-def cosine(a, b):
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
 _SQL_COSINE = (

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..tables import load
 from . import register
 
@@ -46,7 +47,7 @@ FROM t
 @register("text_quality_scores", _QUALITY_ORACLE)
 def text_quality_scores(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: F.length(x) > 0)
+    toks = tokens("text")
     n_tokens = F.size(toks)
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x)))
@@ -110,7 +111,7 @@ GROUP BY t.doc_id
 @register("quality_unigram_lm_score", _UNIGRAM_ORACLE)
 def quality_unigram_lm_score(spark, sf_dir):
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.filter(F.split("text", " "), lambda x: F.length(x) > 0)
+    toks = tokens("text")
     # Materialized ONCE: the token table feeds BOTH the frequency
     # model and the per-doc probe below, and Catalyst does not CSE
     # across consumers — left lazy, the scan + explode + md5 ran

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..tables import load
 from . import register
 
@@ -39,12 +40,8 @@ FROM d GROUP BY source
 def text_readability_stats(spark, sf_dir):
     d = load(spark, sf_dir, "documents").select(
         "source",
-        F.size(
-            F.filter(F.split("text", "\\. "), lambda x: F.length(x) > 0)
-        ).alias("n_sents"),
-        F.size(
-            F.filter(F.split("text", " "), lambda x: F.length(x) > 0)
-        ).alias("n_words"),
+        F.size(tokens("text", "\\. ")).alias("n_sents"),
+        F.size(tokens("text")).alias("n_words"),
         F.length("text").alias("n_chars"),
     )
     return d.groupBy("source").agg(

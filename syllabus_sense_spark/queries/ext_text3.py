@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..tables import load
 from . import register
 
@@ -54,7 +55,7 @@ FROM g
 @register("text_repetition_ratios", _REPETITION_ORACLE)
 def text_repetition_ratios(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
-    w = F.filter(F.split("text", " "), lambda x: F.length(x) > 0)
+    w = tokens("text")
     d = d.select("doc_id", w.alias("w")).filter(F.size("w") >= 3)
     big = F.transform(
         F.sequence(F.lit(1), F.size("w") - 1),
@@ -177,7 +178,7 @@ GROUP BY source
 @register("quality_filter_funnel", _FUNNEL_ORACLE)
 def quality_filter_funnel(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: F.length(x) > 0)
+    toks = tokens("text")
     t = d.select(
         "source",
         F.size(toks).alias("n_tokens"),

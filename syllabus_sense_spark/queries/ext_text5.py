@@ -42,6 +42,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..tables import load
 from . import register
 
@@ -74,7 +75,7 @@ HAVING COUNT(r.gram) > 0
 @register("dedup_repeated_passages", _REPEATED_ORACLE)
 def dedup_repeated_passages(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: F.length(x) > 0)
+    toks = tokens("text")
     words = d.select("doc_id", toks.alias("w"))
     grams = (
         words.select(

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..tables import load
 from . import register
 
@@ -61,9 +62,7 @@ LEFT JOIN new_per_bucket n ON n.bucket = m.bucket
 def text_vocab_growth(spark, sf_dir):
     toks = load(spark, sf_dir, "documents").select(
         "doc_id",
-        F.explode(
-            F.filter(F.split("text", " "), lambda x: F.length(x) > 0)
-        ).alias("tok"),
+        F.explode(tokens("text")).alias("tok"),
     )
     maxid = load(spark, sf_dir, "documents").agg(
         (F.max("doc_id") + 1).alias("n_docs")

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..tables import load
 from . import register
 
@@ -42,9 +43,7 @@ FROM ranked WHERE rank <= {_TOP}
 @register("text_zipf_profile", _ZIPF_ORACLE)
 def text_zipf_profile(spark, sf_dir):
     toks = load(spark, sf_dir, "documents").select(
-        F.explode(
-            F.filter(F.split("text", " "), lambda x: F.length(x) > 0)
-        ).alias("tok")
+        F.explode(tokens("text")).alias("tok")
     )
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("freq"))
     top = freq.orderBy(F.desc("freq"), F.asc("tok")).limit(_TOP)
@@ -93,9 +92,7 @@ def text_stopword_candidates(spark, sf_dir):
     n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     tok_docs = docs.select(
         "doc_id",
-        F.explode(
-            F.filter(F.split("text", " "), lambda x: F.length(x) > 0)
-        ).alias("tok"),
+        F.explode(tokens("text")).alias("tok"),
     ).distinct()
     df = tok_docs.groupBy("tok").agg(F.count(F.lit(1)).alias("doc_freq"))
     return (

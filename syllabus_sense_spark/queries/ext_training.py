@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..tables import load
 from . import register
 from .ext_dedup import _fingerprint, shingle_hashes
@@ -163,7 +164,7 @@ JOIN sizes sb ON sb.source = i.src_b
 @register("source_overlap_matrix", _SOURCE_MATRIX_ORACLE)
 def source_overlap_matrix(spark, sf_dir):
     d = load(spark, sf_dir, "documents").select("source", "text")
-    toks = F.filter(F.split("text", " "), lambda x: F.length(x) > 0)
+    toks = tokens("text")
     vocab = (
         d.select("source", F.explode(toks).alias("tok"))
         .select("source", _fingerprint(F.col("tok")).alias("h"))
@@ -267,7 +268,7 @@ def curation_pipeline_summary(spark, sf_dir):
         .select("doc_id", "text", "lang")
         .filter(F.col("lang").isin("en", "fr", "es"))
     )
-    toks = F.filter(F.split("text", " "), lambda x: F.length(x) > 0)
+    toks = tokens("text")
     base = (
         d.withColumn("n_tokens", F.size(toks).cast("long"))
         .filter(F.col("n_tokens") >= 5)
@@ -334,56 +335,6 @@ def curation_pipeline_summary(spark, sf_dir):
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").cast("long").alias("total_tokens"),
     )
-
-
-def curation_pipeline_audited(spark, sf_dir):
-    """The curation chain instrumented with ``Observation`` metrics —
-    per-stage accounting (ingested / post-filter / post-dedup token
-    totals) collected DURING the single pass, no second job per stage.
-    At 100 TB a per-stage ``count()`` would re-run the upstream plan
-    each time; observed metrics ride the one execution for free.
-
-    Returns (result_df, observations: dict[str, Observation]); metric
-    values are available after any action on result_df.
-    """
-    from pyspark.sql import Observation
-
-    obs = {
-        "ingest": Observation("ingest"),
-        "quality": Observation("quality"),
-        "dedup": Observation("dedup"),
-    }
-    d = load(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    corpus = d.unionByName(
-        d.filter(F.col("doc_id") % 5 == 0).select(
-            (F.col("doc_id") + 1000000).alias("doc_id"), "text", "lang"
-        )
-    ).observe(obs["ingest"], F.count(F.lit(1)).alias("n_docs"))
-    toks = F.filter(F.split("text", " "), lambda x: F.length(x) > 0)
-    quality = (
-        corpus.filter(F.col("lang").isin("en", "fr", "es"))
-        .withColumn("n_tokens", F.size(toks).cast("long"))
-        .filter(F.col("n_tokens") >= 5)
-        .observe(
-            obs["quality"],
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("n_tokens"),
-        )
-    )
-    deduped = (
-        quality.groupBy(F.md5("text").alias("content_hash"))
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.min("lang").alias("lang"),
-            F.min("n_tokens").alias("n_tokens"),
-        )
-        .observe(
-            obs["dedup"],
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("n_tokens"),
-        )
-    )
-    return deduped, obs
 
 
 # --- deterministic stratified sampling ------------------------------------

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..tables import load
 from . import register
 
@@ -69,9 +70,7 @@ WHERE n_docs >= 2
 def training_preference_pairs(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
     score = F.size(
-        F.array_distinct(
-            F.filter(F.split(F.col("text"), r"\s+"), lambda x: F.length(x) > 0)
-        )
+        F.array_distinct(tokens("text", r"\s+"))
     ).cast("long")
     key = score * _PACK + F.col("doc_id")
     packed = (
@@ -136,9 +135,7 @@ def training_best_of_n(spark, sf_dir):
 
     d = load(spark, sf_dir, "documents")
     score = F.size(
-        F.array_distinct(
-            F.filter(F.split(F.col("text"), r"\s+"), lambda x: F.length(x) > 0)
-        )
+        F.array_distinct(tokens("text", r"\s+"))
     ).cast("long")
     draw = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10

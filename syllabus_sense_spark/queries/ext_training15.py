@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.text import token_count
 from ..tables import load
 from . import register
 
@@ -110,9 +111,7 @@ FROM r2
 @register("training_token_budget_epochs", _BUDGET_ORACLE)
 def training_token_budget_epochs(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
-    toks = F.size(
-        F.filter(F.split(F.col("text"), r"\s+"), lambda x: F.length(x) > 0)
-    ).cast("long")
+    toks = token_count("text").cast("long")
     tier = F.expr(
         "CASE (conv(substring(md5(source), 1, 2), 16, 10) % 3)"
         " WHEN 0 THEN 1 WHEN 1 THEN 2 ELSE 4 END"

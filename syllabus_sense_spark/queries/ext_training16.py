@@ -37,10 +37,10 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.text import token_count
 from ..tables import load
 from . import register
 
-_STAGES = 4
 _K = 25
 
 _DIFF_DUCK = (
@@ -80,9 +80,7 @@ FROM scored s CROSS JOIN bounds b
 @register("training_curriculum_stages", _CURRICULUM_ORACLE)
 def training_curriculum_stages(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
-    n_toks = F.size(
-        F.filter(F.split(F.col("text"), r"\s+"), lambda x: F.length(x) > 0)
-    ).cast("long")
+    n_toks = token_count("text").cast("long")
     scored = d.select(
         "doc_id",
         n_toks.alias("n_toks"),

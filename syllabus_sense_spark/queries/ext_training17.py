@@ -41,6 +41,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..tables import load
 from . import register
 
@@ -101,9 +102,7 @@ def _importance_vocab(spark, sf_dir):
         docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "text")
         occ = docs.select(
             "lang",
-            F.explode(
-                F.filter(F.split("text", " "), lambda x: F.length(x) > 0)
-            ).alias("tok"),
+            F.explode(tokens("text")).alias("tok"),
         )
         return ser_checkpoint(
             occ.groupBy("tok").agg(
@@ -132,9 +131,7 @@ def training_importance_selection(spark, sf_dir):
     occ = docs.select(
         "doc_id",
         "lang",
-        F.explode(
-            F.filter(F.split("text", " "), lambda x: F.length(x) > 0)
-        ).alias("tok"),
+        F.explode(tokens("text")).alias("tok"),
     )
     # ONE vocab table from ONE occurrence pass (r14): raw and target
     # counts were separate groupBys, each re-running the full

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..tables import load
 from . import register
 
@@ -61,7 +62,7 @@ def batch_by_length_buckets(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
     docs = d.select(
         "doc_id",
-        F.size(F.filter(F.split("text", " "), lambda x: F.length(x) > 0))
+        F.size(tokens("text"))
         .cast("bigint")
         .alias("n_tokens"),
     )
@@ -117,7 +118,7 @@ def bpe_first_merge_pairs(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
     toks = d.select(
         F.explode(
-            F.filter(F.split("text", " "), lambda x: F.length(x) > 1)
+            F.filter(tokens("text"), lambda x: F.length(x) > 1)
         ).alias("tok")
     )
     pairs = toks.select(

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..tables import load
 from . import register
 
@@ -53,9 +54,7 @@ def ml_feature_hashing_vectors(spark, sf_dir):
         .filter(F.col("doc_id") < 100)
         .select(
             "doc_id",
-            F.explode(
-                F.filter(F.split("text", " "), lambda x: F.length(x) > 0)
-            ).alias("tok"),
+            F.explode(tokens("text")).alias("tok"),
         )
     )
     bucket = F.expr(

@@ -14,7 +14,7 @@ so any parallelism-dependent result drops rows and fails the driver's
 row-count/hash check against the once-computed DuckDB oracle.
 
 This is the house exactness rule (floats only from exact decimal
-aggregation + one final double op — ``_util.dsum/davg``) made
+aggregation + one final double op — ``_util.xsum/xavg``) made
 falsifiable by the driver: on a 1000-executor cluster the partial
 tree is whatever the scheduler makes it, and this row says the answer
 doesn't care.

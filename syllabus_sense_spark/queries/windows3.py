@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..tables import load
 from . import register
 
@@ -98,7 +99,7 @@ FROM t LEFT JOIN (SELECT doc_id, unnest(long_toks) AS tok FROM t) u
 @register("array_explode_outer_keepempty", _EXPLODE_OUTER_ORACLE)
 def array_explode_outer_keepempty(spark, sf_dir):
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 20 == 0)
-    long_toks = F.filter(F.split("text", " "), lambda x: F.length(x) > 7)
+    long_toks = F.filter(tokens("text"), lambda x: F.length(x) > 7)
     return d.select("doc_id", long_toks.alias("long_toks")).select(
         "doc_id", F.explode_outer("long_toks").alias("long_token")
     )

@@ -42,27 +42,6 @@ def write_questions_json(questions: DataFrame, path: str) -> None:
     questions.write.partitionBy("topic").mode("append").json(path)
 
 
-def write_questions_orc(questions: DataFrame, path: str) -> None:
-    """ORC export sink — the other columnar container Spark ships a
-    vectorized reader/writer for natively. Full nested-type support
-    (arrays/structs/maps travel as-is, unlike CSV) and the same
-    predicate-pushdown + column-pruning story as parquet on read, so
-    it is a drop-in for consumers standardized on ORC (Hive/Trino
-    warehouses). Topic-partitioned append, same layout convention as
-    the parquet sink."""
-    _validate_sink_dir(path)
-    questions.write.partitionBy("topic").mode("append").orc(path)
-
-
-def read_questions_orc(spark: SparkSession, path: str) -> DataFrame:
-    """Read the ORC sink back with the declared schema (explicit, not
-    inferred — same posture as every reader here)."""
-    from pyspark.sql import types as T
-
-    schema_no_topic = [f for f in QUESTION_SCHEMA.fields if f.name != "topic"]
-    return spark.read.schema(T.StructType(schema_no_topic)).orc(path)
-
-
 def write_table_csv(df: DataFrame, path: str) -> None:
     """CSV export sink for downstream flat consumers (spreadsheets,
     loaders that don't speak parquet). CSV carries no nested types,

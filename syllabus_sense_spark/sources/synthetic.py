@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from ..tables import load
 
-N_DOCS = 8
 MARKER = "Core element"
 
 # DuckDB CTE body re-deriving the identical stream (keep in lockstep

@@ -176,54 +176,6 @@ def stream_session_windows(
     )
 
 
-def stream_view_purchase_join(
-    spark: SparkSession, sf_dir: str, query_name: str = "view_purchase"
-):
-    """Stream-stream interval join: each purchase matched to the same
-    user's views in the preceding hour. Both sides carry watermarks so
-    the join state is bounded (views kept ≤ 1h + watermark); append
-    mode because matches finalize once the watermark passes.
-
-    At scale this is the attribution-join shape: state is
-    per-user-per-hour, sharded by the equi-key (user_id), and the
-    range predicate bounds retention — no unbounded buffering.
-    """
-    events = _with_event_time(_event_stream(spark, sf_dir))
-    views = (
-        events.filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("v_ts"),
-            F.col("event_id").alias("view_id"),
-        )
-        .withWatermark("v_ts", "2 hours")
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    joined = purchases.join(
-        views,
-        (F.col("p_user") == F.col("v_user"))
-        & (F.col("v_ts") <= F.col("p_ts"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR")),
-        "inner",
-    ).select("p_user", "purchase_id", "view_id", "p_ts", "v_ts", "purchase_value")
-    return (
-        joined.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def stream_enrich_static_dim(
     spark: SparkSession,
     sf_dir: str,

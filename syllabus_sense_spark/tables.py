@@ -34,8 +34,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Below this on-disk size we additionally ``persist()`` the table:
 # at verification scale (sf0.01, whole dir < 2 MB) one in-memory copy
 # amortizes the scan across every query; at bench/production scale the

@@ -349,16 +349,85 @@ def test_cli_call_is_one_execution_and_caches_nothing(
     assert sc._jsc.getPersistentRDDs().size() == persisted
 
 
-def test_space_token_count_equals_lambda_form(spark):
-    """``space_token_count`` equals the filter-lambda token count,
-    including on empty, all-space, irregularly spaced and NULL text."""
-    from syllabus_sense_spark.functions.text import space_token_count
+def _hand_rolled_tokenizers() -> list[str]:
+    """``module.function`` of every ``F.filter(F.split(...), lambda ...)``
+    in the package, by AST: the split-then-drop-empties copies that
+    ``functions.text.tokens`` replaces."""
+    import ast
+    from pathlib import Path
 
-    texts = ["", "   ", " lead", "trail  ", "a  b   c", " a b ", "one", "a\tb c", None]
+    pkg = Path(__file__).resolve().parents[1] / "syllabus_sense_spark"
+
+    def is_call(node, name):
+        f = getattr(node, "func", None)
+        return isinstance(node, ast.Call) and getattr(f, "attr", None) == name
+
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if (
+                    is_call(node, "filter")
+                    and len(node.args) == 2
+                    and is_call(node.args[0], "split")
+                    and isinstance(node.args[1], ast.Lambda)
+                ):
+                    found.append(f"{path.stem}.{fn.name}")
+    return found
+
+
+def test_space_token_count_equals_lambda_form(spark):
+    """``tokens`` — the one tokenizer — equals the filter-lambda form for
+    each separator in use, and so ``space_token_count`` (the CLI's
+    expression), ``token_count`` and ``quality_score`` equal their
+    lambda-form originals, on empty, all-space, irregularly spaced,
+    sentence-split and NULL text. The lambda form survives in the
+    package only where a query exists to show ``filter`` with a lambda."""
+    from syllabus_sense_spark.functions.text import (
+        quality_score,
+        space_token_count,
+        token_count,
+        tokens,
+    )
+
+    assert _hand_rolled_tokenizers() == ["windows2.array_higher_order_fns"]
+
+    texts = [
+        "", "   ", " lead", "trail  ", "a  b   c", " a b ", "one", "a\tb c",
+        "a. b.  c", ". lead", "\t x \n", None,
+    ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    lam = F.size(F.filter(F.split("text", " "), lambda x: F.length(x) > 0))
+
+    def lam(sep):
+        return F.filter(F.split("text", sep), lambda x: F.length(x) > 0)
+
+    for sep in (" ", r"\s+", r"\. "):
+        got = df.select(tokens("text", sep).alias("new"), lam(sep).alias("old")).collect()
+        assert [r.new for r in got] == [r.old for r in got], sep
+
+    # quality_score as it was written on the lambda form
+    toks = lam(r"\s+")
+    n = F.size(toks).cast("double")
+    avg_tok = F.length(F.regexp_replace("text", r"\s+", "")).cast("double") / F.greatest(
+        n, F.lit(1.0)
+    )
+    old_quality = (
+        F.size(F.array_distinct(toks)).cast("double") / F.greatest(n, F.lit(1.0)) * 0.4
+        + F.least(n / F.lit(50.0), F.lit(1.0)) * 0.4
+        + F.when((avg_tok >= 2) & (avg_tok <= 12), F.lit(1.0)).otherwise(F.lit(0.5)) * 0.2
+    )
     got = df.select(
-        "text", space_token_count(F.col("text")).alias("new"), lam.alias("old")
+        "text",
+        space_token_count(F.col("text")).alias("space"),
+        F.size(lam(" ")).alias("space_old"),
+        token_count(F.col("text")).alias("ws"),
+        F.size(lam(r"\s+")).alias("ws_old"),
+        quality_score(F.col("text")).alias("q"),
+        old_quality.alias("q_old"),
     ).collect()
-    assert [r.new for r in got] == [r.old for r in got]
-    assert {r.text: r.new for r in got}["a  b   c"] == 3
+    for r in got:
+        assert (r.space, r.ws, r.q) == (r.space_old, r.ws_old, r.q_old), r.text
+    assert {r.text: r.space for r in got}["a  b   c"] == 3

@@ -3,8 +3,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from syllabus_sense_spark.operators.expectations import (
     expect_accepted_values,
     expect_in_range,
@@ -12,7 +10,6 @@ from syllabus_sense_spark.operators.expectations import (
     expect_not_null,
     expect_unique,
     run_expectations,
-    violation_examples,
 )
 
 
@@ -67,8 +64,3 @@ def test_expectations_single_pass_plan(spark):
     assert "Union" not in plan
     assert "Join" not in plan
 
-
-def test_violation_examples(spark):
-    df = _dirty(spark)
-    rows = violation_examples(df, ~F.col("value").between(0, 1000), limit=5).collect()
-    assert {r["id"] for r in rows} == {1, 3}

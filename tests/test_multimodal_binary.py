@@ -14,8 +14,9 @@ import zlib
 
 from syllabus_sense_spark.queries.ext_multimodal import (
     FEATURE_SCHEMA,
+    MEDIA_HEADER_SCHEMA,
     byte_histogram_features,
-    media_header_table,
+    decode_media_headers,
     parse_media_header,
 )
 
@@ -91,7 +92,10 @@ def test_media_header_decode_distributed(spark):
         (3, bytearray(b"not a container")),
     ]
     media = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = {r.media_id: r for r in media_header_table(media).collect()}
+    out = {
+        r.media_id: r
+        for r in media.mapInPandas(decode_media_headers, MEDIA_HEADER_SCHEMA).collect()
+    }
     assert (out[1].codec, out[1].width, out[1].height) == ("png", 64, 48)
     assert (out[2].codec, out[2].sample_rate, out[2].n_samples) == (
         "wav", 16000, 500,

@@ -9,10 +9,8 @@ from syllabus_sense_spark.pipeline.flagship import run_flagship
 from syllabus_sense_spark.schemas import QUESTION_SCHEMA
 from syllabus_sense_spark.sinks import (
     read_questions_json,
-    read_questions_orc,
     read_table_csv,
     write_questions_json,
-    write_questions_orc,
     write_table_csv,
 )
 
@@ -25,21 +23,6 @@ def test_json_sink_roundtrip(spark, sf_dir, tmp_path):
     back = read_questions_json(spark, path)
     assert back.count() == n
     # Nested structures survive the JSON round-trip.
-    row = back.filter(F.size("choices") == 4).first()
-    assert row is not None
-    assert sum(c.is_correct for c in row.choices) == 1
-    assert row.solution.explanation
-    questions.unpersist()
-
-
-def test_orc_sink_roundtrip(spark, sf_dir, tmp_path):
-    path = str(tmp_path / "qorc")
-    questions = run_flagship(spark, sf_dir).limit(40).cache()
-    n = questions.count()
-    write_questions_orc(questions, path)
-    back = read_questions_orc(spark, path)
-    assert back.count() == n
-    # Nested structures travel natively in ORC (no bridge needed).
     row = back.filter(F.size("choices") == 4).first()
     assert row is not None
     assert sum(c.is_correct for c in row.choices) == 1

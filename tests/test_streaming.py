@@ -54,16 +54,18 @@ def test_stream_sessions_match_batch_native(spark, sf_dir):
 
 
 def test_stream_stream_join_matches_batch(spark, sf_dir):
-    """Stream-stream interval join (purchase ← views within 1h, same
-    user) equals the identical batch join."""
-    from syllabus_sense_spark.streaming.events import stream_view_purchase_join
+    """The registered stream-stream interval join (each view matched to
+    the same user's purchases in the following hour) equals the batch
+    join with the query's own bounds: ``view_ts < purchase_ts <=
+    view_ts + 1h``, so a purchase at the view's own timestamp does not
+    match."""
+    from syllabus_sense_spark.queries import QUERIES, load_all_queries
     from syllabus_sense_spark.tables import load
 
-    q = stream_view_purchase_join(spark, sf_dir, query_name="vp_join")
-    q.awaitTermination(300)
+    load_all_queries()
     streamed = {
         (r.purchase_id, r.view_id)
-        for r in spark.sql("SELECT * FROM vp_join").collect()
+        for r in QUERIES["streaming_interval_join_drain"](spark, sf_dir).collect()
     }
 
     e = load(spark, sf_dir, "events")
@@ -80,8 +82,8 @@ def test_stream_stream_join_matches_batch(spark, sf_dir):
         for r in p.join(
             v,
             (F.col("p_user") == F.col("v_user"))
-            & (F.col("v_ts") <= F.col("p_ts"))
-            & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR")),
+            & (F.col("p_ts") > F.col("v_ts"))
+            & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 1 HOUR")),
         ).collect()
     }
     assert streamed == batch

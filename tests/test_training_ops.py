@@ -26,19 +26,3 @@ def test_contamination_excludes_benchmark_side(spark, sf_dir):
         assert r.doc_id % 50 != 0
         assert r.n_shared_shingles >= 2
 
-
-def test_curation_audit_metrics_single_pass(spark, sf_dir):
-    """Observation metrics account for every stage in ONE execution:
-    ingest >= quality-pass >= dedup-survivor counts, all consistent
-    with the returned data."""
-    from syllabus_sense_spark.queries.ext_training import curation_pipeline_audited
-
-    result, obs = curation_pipeline_audited(spark, sf_dir)
-    n_out = result.count()
-
-    ingest = obs["ingest"].get
-    quality = obs["quality"].get
-    dedup = obs["dedup"].get
-    assert ingest["n_docs"] >= quality["n_docs"] >= dedup["n_docs"]
-    assert dedup["n_docs"] == n_out
-    assert quality["n_tokens"] >= dedup["n_tokens"] > 0
