@@ -26,6 +26,7 @@ __version__ = "0.2.0"
 from .errors import (  # noqa: E402,F401  (public error surface, A20)
     InvalidDocumentSourceError,
     InvalidOutputDirectoryError,
+    StreamDrainTimeoutError,
     StreamStalledError,
     SyllabusSenseSparkError,
     TableNotFoundError,

@@ -7,7 +7,8 @@ engine-originated failures distinctly from arbitrary Python errors.
 This module is the Spark engine's equivalent public layer. Policy
 (SURVEY.md §4): *data-level* faults degrade to empty/quarantine inside
 tasks and never raise; *caller-level* misuse (bad paths, unknown
-tables, a stalled stream the caller asked us to watch) raises one of
+tables, a stalled stream the caller asked us to watch, an availableNow
+drain that outlives ``streaming.drain.DRAIN_TIMEOUT_S``) raises one of
 these types at the driver, before or after — never inside — a job.
 """
 
@@ -78,4 +79,21 @@ class StreamStalledError(SyllabusSenseSparkError):
         super().__init__(
             f"streaming query {query_name!r} made no progress for "
             f"{idle_batches} consecutive polls; stopping (stuck-cursor guard)"
+        )
+
+
+class StreamDrainTimeoutError(SyllabusSenseSparkError, TimeoutError):
+    """An availableNow drain did not finish within its timeout.
+
+    Raised by ``streaming.drain.drain`` after it has stopped the query,
+    so the sink name is free for the next call and no query is left
+    running.
+    """
+
+    def __init__(self, query_name: str, timeout_s: float):
+        self.query_name = query_name
+        self.timeout_s = timeout_s
+        super().__init__(
+            f"availableNow drain {query_name!r} did not finish within "
+            f"{timeout_s} s; stopped"
         )

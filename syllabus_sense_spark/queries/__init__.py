@@ -97,6 +97,20 @@ _FORCE_RECHECK: list[str] = [
     "streaming_static_enrich_drain",
     "streaming_session_windows_drain",
     "streaming_dsv2_replay_drain",
+    # Every availableNow drain starts, waits and stops through
+    # ``streaming.drain``: one view⋈purchase builder, fixed memory-sink
+    # names, and the state reader drains into a noop sink.
+    "streaming_interval_join_drain",
+    "streaming_outer_join_drain",
+    "streaming_full_outer_join_drain",
+    "streaming_dedup_drain",
+    "streaming_foreachbatch_sink_drain",
+    "streaming_pyds_jsonl_sink_drain",
+    "streaming_stateful_counts_drain",
+    "streaming_sliding_hourly_drain",
+    "streaming_upsert_latest_drain",
+    "streaming_dynamic_gap_drain",
+    "streaming_state_reader",
     # Text is tokenized through ``functions.text.tokens`` (array_remove
     # of "" in place of a length-filter lambda): every query that split
     # words by hand, and those behind ``shingle_docs_raw`` and

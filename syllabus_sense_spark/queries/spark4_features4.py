@@ -97,7 +97,7 @@ GROUP BY event_type
 
 @register("streaming_state_reader", _STATE_ORACLE)
 def streaming_state_reader(spark, sf_dir):
-
+    from ..streaming.drain import drain
     from ..streaming.events import _event_stream, _with_event_time
 
     ckpt = scratch_dir("state_reader_ckpt_")
@@ -107,15 +107,7 @@ def streaming_state_reader(spark, sf_dir):
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("harness_state_reader_drain")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    assert q.awaitTermination(600), "availableNow stream drain timed out"
+    drain(agg.writeStream.format("noop").outputMode("update"), ckpt)
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.event_type").alias("event_type"),

@@ -1,7 +1,7 @@
 """Driver-verifiable Structured Streaming queries: each entry RUNS a
-real streaming query (file source → availableNow drain → memory sink)
-and returns the sink contents, paired with the equivalent BATCH SQL as
-the DuckDB oracle — so streaming correctness carries a full
+real streaming query (file source → ``streaming.drain`` → memory
+sink) and returns the sink contents, paired with the equivalent BATCH
+SQL as the DuckDB oracle — so streaming correctness carries a full
 rows+schema+hash CORRECTNESS row, not just a pytest assertion.
 
 Sound because ``trigger(availableNow=True)`` over a static directory
@@ -31,19 +31,9 @@ GROUP BY 1, 2
 
 @register("streaming_tumbling_hourly_drain", _HOURLY_ORACLE)
 def streaming_tumbling_hourly_drain(spark, sf_dir):
-    from ..streaming import stream_hourly_counts
-    from ..streaming.events import state_partitions
+    from ..streaming import stream_window_counts
 
-    # state-store partition count sized to the input (r14 — the
-    # stream-stream joins already did this; at 32 stores the
-    # per-partition commit cost, not row work, dominated the drain:
-    # 3.9 → 1.3 s at sf0.1)
-    with state_partitions(spark, sf_dir):
-        q = stream_hourly_counts(
-            spark, sf_dir, query_name="harness_hourly_drain"
-        )
-        assert q.awaitTermination(600), "availableNow stream drain timed out"
-    return spark.sql("SELECT * FROM harness_hourly_drain")
+    return stream_window_counts(spark, sf_dir, "harness_hourly_drain", "1 hour")
 
 
 _ENRICH_ORACLE = """
@@ -72,14 +62,7 @@ def streaming_static_enrich_drain(spark, sf_dir):
     bounding, not immediate deletion, is the contract."""
     from ..streaming import stream_enrich_static_dim
 
-    out = scratch_dir("enrich_drain_")
-    q = stream_enrich_static_dim(
-        spark, sf_dir, query_name="harness_enrich_drain", output_dir=out
-    )
-    assert q.awaitTermination(600), "availableNow stream drain timed out"
-    return spark.read.parquet(out).select(
-        "event_id", "user_id", "event_type", "ts", "customer_name", "nation_key"
-    )
+    return stream_enrich_static_dim(spark, sf_dir, scratch_dir("enrich_drain_"))
 
 
 _SESSION_ORACLE = """
@@ -111,17 +94,8 @@ GROUP BY user_id, session_id
 @register("streaming_session_windows_drain", _SESSION_ORACLE)
 def streaming_session_windows_drain(spark, sf_dir):
     from ..streaming import stream_session_windows
-    from ..streaming.events import state_partitions
 
-    # sized state stores (see streaming_tumbling_hourly_drain):
-    # 2.7 → 1.2 s at sf0.1
-    with state_partitions(spark, sf_dir):
-        q = stream_session_windows(
-            spark, sf_dir, query_name="harness_session_drain"
-        )
-        assert q.awaitTermination(600), "availableNow stream drain timed out"
-    return spark.sql("SELECT * FROM harness_session_drain")
-
+    return stream_session_windows(spark, sf_dir, "harness_session_drain")
 
 
 _DSV2_REPLAY_ORACLE = """
@@ -141,10 +115,13 @@ def streaming_dsv2_replay_drain(spark, sf_dir):
     5000-row offset-tracked micro-batches, each planned into row-range
     partitions read executor-side via pyarrow; the running aggregate
     must equal the batch table exactly — proving the offset model loses
-    and duplicates nothing across micro-batch boundaries. Not
-    availableNow (the Python API plans offsets per micro-batch), so
-    the drain loops processAllAvailable until the source stops
-    advancing.
+    and duplicates nothing across micro-batch boundaries.
+
+    The one drain outside ``streaming.drain``: a PySpark 4.1 Python
+    DataSource stream has no availableNow support (the Python API plans
+    offsets per micro-batch), so the query runs on the default trigger
+    and ``processAllAvailable`` waits until the source stops advancing;
+    the ``finally`` stops it either way.
     """
 
     from ..sources.events_stream_datasource import register_events_replay

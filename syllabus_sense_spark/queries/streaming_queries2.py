@@ -19,8 +19,6 @@ emission), so the drain equals the batch join exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from . import register
 from ._util import scratch_dir
 
@@ -38,59 +36,11 @@ WHERE v.event_type = 'view' AND p.event_type = 'purchase'
 
 @register("streaming_interval_join_drain", _SS_JOIN_ORACLE)
 def streaming_interval_join_drain(spark, sf_dir):
+    from ..streaming.events import stream_view_purchase_join
 
-    from ..streaming.events import (
-        _event_stream,
-        _with_event_time,
-        state_partitions,
+    return stream_view_purchase_join(
+        spark, sf_dir, "inner", "harness_interval_join_drain"
     )
-
-    views = (
-        _with_event_time(_event_stream(spark, sf_dir))
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "2 hours")
-    )
-    purchases = (
-        _with_event_time(_event_stream(spark, sf_dir))
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    joined = views.join(
-        purchases,
-        F.expr(
-            """
-            user_id = p_user_id
-            AND purchase_ts > view_ts
-            AND purchase_ts <= view_ts + INTERVAL 1 HOUR
-            """
-        ),
-    ).select("view_id", "purchase_id", "user_id", "view_ts", "purchase_ts")
-    name = "harness_interval_join_drain"
-    # state-store partition count sized to the input (see
-    # streaming/events.state_partitions)
-    with state_partitions(spark, sf_dir):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation", scratch_dir("ss_join_ckpt_")
-            )
-            .start()
-        )
-        assert q.awaitTermination(600), "availableNow stream drain timed out"
-    return spark.sql(f"SELECT * FROM {name}")
 
 
 _DEDUP_ORACLE = """
@@ -114,17 +64,9 @@ def streaming_dedup_drain(spark, sf_dir):
     the table itself: every row exactly once, zero duplicates
     surviving, zero rows lost.
     """
-    from ..streaming.events import state_partitions, stream_dedupe_within_watermark
+    from ..streaming.events import stream_dedupe_within_watermark
 
-    # sized state stores (see streaming_tumbling_hourly_drain, r14)
-    with state_partitions(spark, sf_dir):
-        q = stream_dedupe_within_watermark(
-            spark, sf_dir, query_name="harness_dedup_drain"
-        )
-        assert q.awaitTermination(600), "availableNow stream drain timed out"
-    return spark.sql(
-        "SELECT event_id, user_id, event_type, ts FROM harness_dedup_drain"
-    )
+    return stream_dedupe_within_watermark(spark, sf_dir, "harness_dedup_drain")
 
 
 _FB_SINK_ORACLE = """
@@ -146,6 +88,7 @@ def streaming_foreachbatch_sink_drain(spark, sf_dir):
     hash-checked against the batch table).
     """
 
+    from ..streaming.drain import drain
     from ..streaming.events import _event_stream, _with_event_time
     from ..streaming.exactly_once import (
         idempotent_batch_writer,
@@ -157,13 +100,7 @@ def streaming_foreachbatch_sink_drain(spark, sf_dir):
     ev = _with_event_time(_event_stream(spark, sf_dir)).select(
         "event_id", "user_id", "event_type", "ts"
     )
-    q = (
-        ev.writeStream.foreachBatch(idempotent_batch_writer(out, ledger))
-        .trigger(availableNow=True)
-        .option("checkpointLocation", scratch_dir("fb_sink_ckpt_"))
-        .start()
-    )
-    assert q.awaitTermination(600), "availableNow stream drain timed out"
+    drain(ev.writeStream.foreachBatch(idempotent_batch_writer(out, ledger)))
     return read_exactly_once_output(spark, out).select(
         "event_id", "user_id", "event_type", "ts"
     )

@@ -27,6 +27,7 @@ SELECT event_id, user_id, event_type FROM events
 @register("streaming_pyds_jsonl_sink_drain", _PYDS_STREAM_ORACLE)
 def streaming_pyds_jsonl_sink_drain(spark, sf_dir):
     from ..sources.jsonl_datasource import register_jsonl_sink
+    from ..streaming.drain import drain
     from ..streaming.events import _event_stream
 
     register_jsonl_sink(spark)
@@ -34,16 +35,7 @@ def streaming_pyds_jsonl_sink_drain(spark, sf_dir):
     ev = _event_stream(spark, sf_dir).select(
         "event_id", "user_id", "event_type"
     )
-    q = (
-        ev.writeStream.format("jsonl_sink")
-        .option("path", out)
-        .option(
-            "checkpointLocation", scratch_dir("pyds_stream_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(600), "availableNow stream drain timed out"
+    drain(ev.writeStream.format("jsonl_sink").option("path", out))
     shards = os.path.join(out, "batch-*.jsonl")
     return (
         spark.read.schema("event_id long, user_id long, event_type string")
@@ -71,20 +63,10 @@ def streaming_stateful_counts_drain(spark, sf_dir):
     streaming query hash-checkable against a plain batch GROUP BY.
     First driver-visible evidence for the applyInPandasWithState
     surface (previously pytest-only via stream_first_seen_dedupe)."""
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
-    from ..streaming.events import state_partitions
     from ..streaming.stateful import stream_running_counts
 
-    name = f"running_counts_{_uuid.uuid4().hex[:8]}"
-    # sized state stores (see streaming_tumbling_hourly_drain, r14)
-    with state_partitions(spark, sf_dir):
-        q = stream_running_counts(spark, sf_dir, query_name=name)
-        assert q.awaitTermination(600), "availableNow stream drain timed out"
     return (
-        spark.table(name)
+        stream_running_counts(spark, sf_dir, "harness_running_counts_drain")
         .groupBy("user_id")
         .agg(
             F.max("cum_events").cast("bigint").alias("n_events"),
@@ -109,18 +91,13 @@ FROM doubled GROUP BY 1, 2
 @register("streaming_sliding_hourly_drain", _SLIDING_ORACLE)
 def streaming_sliding_hourly_drain(spark, sf_dir):
     """Sliding 2h/1h windowed counts drained via availableNow
-    (streaming/events.py:stream_sliding_counts). The batch oracle
+    (streaming/events.py:stream_window_counts). The batch oracle
     replays the overlap explicitly: every event contributes to the
     window starting at its truncated hour AND the one an hour before
     — the UNNEST([0,1]) double-count is exactly Spark's sliding
     window expansion."""
-    import uuid as _uuid
+    from ..streaming import stream_window_counts
 
-    from ..streaming.events import state_partitions, stream_sliding_counts
-
-    name = f"sliding_drain_{_uuid.uuid4().hex[:8]}"
-    # sized state stores (see streaming_tumbling_hourly_drain, r14)
-    with state_partitions(spark, sf_dir):
-        q = stream_sliding_counts(spark, sf_dir, query_name=name)
-        assert q.awaitTermination(600), "availableNow stream drain timed out"
-    return spark.table(name)
+    return stream_window_counts(
+        spark, sf_dir, "harness_sliding_drain", "2 hours", "1 hour"
+    )

@@ -41,6 +41,7 @@ FROM ranked WHERE rn = 1
 @register("streaming_upsert_latest_drain", _UPSERT_LATEST_ORACLE)
 def streaming_upsert_latest_drain(spark, sf_dir):
     from ..sinks.upsert import upsert_versioned
+    from ..streaming.drain import drain
     from ..streaming.events import _event_stream
 
     table = os.path.join(scratch_dir("upsert_lww_"), "latest")
@@ -63,16 +64,7 @@ def streaming_upsert_latest_drain(spark, sf_dir):
             partition_col="event_type",
         )
 
-    q = (
-        _event_stream(spark, sf_dir)
-        .writeStream.foreachBatch(apply_batch)
-        .option(
-            "checkpointLocation", scratch_dir("upsert_lww_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(600), "availableNow stream drain timed out"
+    drain(_event_stream(spark, sf_dir).writeStream.foreachBatch(apply_batch))
     return spark.read.parquet(table).select(
         F.col("user_id").cast("bigint").alias("user_id"),
         "event_type",

@@ -32,10 +32,7 @@ horizon), independent of total stream length — production-safe at
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from . import register
-from ._util import scratch_dir
 
 _OUTER_JOIN_ORACLE = """
 WITH v AS (
@@ -72,61 +69,11 @@ WHERE NOT EXISTS (
 
 @register("streaming_outer_join_drain", _OUTER_JOIN_ORACLE)
 def streaming_outer_join_drain(spark, sf_dir):
+    from ..streaming.events import stream_view_purchase_join
 
-    from ..streaming.events import (
-        _event_stream,
-        _with_event_time,
-        state_partitions,
+    return stream_view_purchase_join(
+        spark, sf_dir, "left_outer", "harness_outer_join_drain"
     )
-
-    views = (
-        _with_event_time(_event_stream(spark, sf_dir))
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "2 hours")
-    )
-    purchases = (
-        _with_event_time(_event_stream(spark, sf_dir))
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    joined = views.join(
-        purchases,
-        F.expr(
-            """
-            user_id = p_user_id
-            AND purchase_ts > view_ts
-            AND purchase_ts <= view_ts + INTERVAL 1 HOUR
-            """
-        ),
-        "left_outer",
-    ).select("view_id", "purchase_id", "user_id", "view_ts", "purchase_ts")
-    name = "harness_outer_join_drain"
-    # state-store partition count sized to the input (see
-    # streaming/events.state_partitions): per-partition store commits,
-    # not row work, dominated this drain at 32 partitions
-    with state_partitions(spark, sf_dir):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation", scratch_dir("ss_ojoin_ckpt_")
-            )
-            .start()
-        )
-        assert q.awaitTermination(600), "availableNow stream drain timed out"
-    return spark.sql(f"SELECT * FROM {name}")
 
 
 _FULL_OUTER_JOIN_ORACLE = """
@@ -184,64 +131,11 @@ def streaming_full_outer_join_drain(spark, sf_dir):
     the matched pairs, so the hash certifies the engine's two-sided
     emission timing. State stays range-bounded on both sides —
     production-safe at any stream length."""
+    from ..streaming.events import stream_view_purchase_join
 
-    from ..streaming.events import (
-        _event_stream,
-        _with_event_time,
-        state_partitions,
+    return stream_view_purchase_join(
+        spark, sf_dir, "full_outer", "harness_full_outer_join_drain"
     )
-
-    views = (
-        _with_event_time(_event_stream(spark, sf_dir))
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "2 hours")
-    )
-    purchases = (
-        _with_event_time(_event_stream(spark, sf_dir))
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    joined = views.join(
-        purchases,
-        F.expr(
-            """
-            user_id = p_user_id
-            AND purchase_ts > view_ts
-            AND purchase_ts <= view_ts + INTERVAL 1 HOUR
-            """
-        ),
-        "full_outer",
-    ).select(
-        "view_id",
-        "purchase_id",
-        F.coalesce(F.col("user_id"), F.col("p_user_id")).alias("user_id"),
-        "view_ts",
-        "purchase_ts",
-    )
-    name = "harness_full_outer_join_drain"
-    with state_partitions(spark, sf_dir):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation", scratch_dir("ss_fojoin_ckpt_")
-            )
-            .start()
-        )
-        assert q.awaitTermination(600), "availableNow stream drain timed out"
-    return spark.sql(f"SELECT * FROM {name}")
 
 
 _DYN_GAP_US = (
@@ -290,18 +184,6 @@ def streaming_dynamic_gap_drain(spark, sf_dir):
     drained memory-sink table must hash-match the batch interval-merge
     oracle exactly — no session split or merged across micro-batch
     boundaries. Batch twin: events24.events_sessionize_dynamic_gap."""
-    from ..streaming.events import (
-        state_partitions,
-        stream_session_windows_dynamic,
-    )
+    from ..streaming.events import stream_session_windows_dynamic
 
-    # sized state stores (see streaming_tumbling_hourly_drain, r14)
-    with state_partitions(spark, sf_dir):
-        q = stream_session_windows_dynamic(
-            spark, sf_dir, query_name="harness_dynamic_gap_drain"
-        )
-        assert q.awaitTermination(600), "availableNow stream drain timed out"
-    return spark.sql(
-        "SELECT session_start, session_end, user_id, n_events, n_purchases"
-        " FROM harness_dynamic_gap_drain"
-    )
+    return stream_session_windows_dynamic(spark, sf_dir, "harness_dynamic_gap_drain")

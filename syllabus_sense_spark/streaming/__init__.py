@@ -2,6 +2,6 @@
 
 from .events import (  # noqa: F401
     stream_enrich_static_dim,
-    stream_hourly_counts,
     stream_session_windows,
+    stream_window_counts,
 )

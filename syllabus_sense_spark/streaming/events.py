@@ -8,19 +8,19 @@ maps to a file-source ``readStream`` drained with
 stop — with watermarks bounding state exactly where the reference's
 stuck-position safeguard bounded its loop.
 
-These return running StreamingQuery handles writing to an in-memory
-sink (tests + demos); production would swap the sink for a
-partitioned parquet/Delta ``writeStream``.
+Each ``stream_*`` builder drains through ``streaming.drain`` and
+returns the drained table: a fixed-name memory table for the
+aggregating streams, the written files for the pass-through
+enrichment (its output is O(events)).
 """
 
 from __future__ import annotations
-
-import contextlib
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..session import tune
+from .drain import drain, drain_table
 
 EVENTS_SCHEMA_NANOS = (
     "event_id long, ts long, user_id long, event_type string, "
@@ -77,36 +77,6 @@ def event_rows(sf_dir: str) -> int:
         return 0
 
 
-@contextlib.contextmanager
-def state_partitions(spark: SparkSession, sf_dir: str):
-    """Context manager sizing ``spark.sql.shuffle.partitions`` — which
-    pins a NEW stream's state-store partition count at checkpoint
-    creation — to the input volume, then restoring the session value.
-
-    The stateful drains inherited the batch default (32), but a
-    stream-stream join runs 4 state stores per partition and every
-    micro-batch commits each one: at the sf1 probe the 128 store
-    commits per batch, not row work, dominated (full-outer drain:
-    6.2 s at 32 partitions, 3.4 s at 16, 2.6 s at 8 — same output).
-    Sizing by rows keeps both regimes honest: small drains stop
-    paying fixed commit cost for empty partitions, and a 100 TB
-    stream gets MORE partitions, not fewer (the cap is generous; at
-    ~250k state rows per partition each store stays comfortably in
-    executor memory). Only the streaming query planned inside the
-    ``with`` block is affected — batch queries read the conf at their
-    own execution time, and the session value is restored on exit.
-    """
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    total = event_rows(sf_dir)  # 0, unknown size: keep session value
-    if total:
-        spark.conf.set(key, str(max(8, min(256, total // 250_000))))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
 def _with_event_time(df, col: str = "ts"):
     """Project the NTZ event-time column to TIMESTAMP (LTZ) at the
     watermark boundary: Spark's event-time machinery (withWatermark,
@@ -118,15 +88,21 @@ def _with_event_time(df, col: str = "ts"):
     return df.withColumn(col, F.col(col).cast("timestamp"))
 
 
-def stream_hourly_counts(
-    spark: SparkSession, sf_dir: str, query_name: str = "hourly_counts"
+def stream_window_counts(
+    spark: SparkSession,
+    sf_dir: str,
+    query_name: str,
+    duration: str,
+    slide: str | None = None,
 ):
-    """Tumbling 1h window counts with a 2h watermark, drained with
-    availableNow into a memory sink. Returns the StreamingQuery."""
+    """Event counts and exact value sums per ``F.window(ts, duration,
+    slide)`` and event type, 2h watermark: tumbling windows when
+    ``slide`` is None, overlapping ones (every event in
+    duration/slide windows) otherwise."""
     events = _with_event_time(_event_stream(spark, sf_dir))
     agg = (
         events.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
+        .groupBy(F.window("ts", duration, slide), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias(
@@ -140,13 +116,7 @@ def stream_hourly_counts(
             "total_value",
         )
     )
-    return (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_table(agg, query_name, sf_dir, "complete")
 
 
 def stream_session_windows(
@@ -167,21 +137,10 @@ def stream_session_windows(
             "n_events",
         )
     )
-    return (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_table(agg, query_name, sf_dir, "complete")
 
 
-def stream_enrich_static_dim(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "enrich_dim",
-    output_dir: str | None = None,
-):
+def stream_enrich_static_dim(spark: SparkSession, sf_dir: str, output_dir: str):
     """Stream-static broadcast enrichment: the event stream joins the
     static customer dimension per micro-batch — the canonical streaming
     lookup-join (the reference's A12 broadcast join, streaming form).
@@ -191,6 +150,14 @@ def stream_enrich_static_dim(
     broadcast keeps the join shuffle-free — stream state is ZERO
     because stream-static joins are stateless. Miss-drop (inner)
     mirrors the reference's behavior of skipping unmatched rows.
+
+    The sink is parquet under ``output_dir``, read back: this stream
+    emits O(|events|) rows (a pass-through enrichment, not an
+    aggregate), so a memory sink would serialize the whole corpus
+    through the driver — at the sf1 probe that single-threaded collect
+    was 10 of the 11 s, and at 10x it is a driver OOM. Aggregating
+    drains keep the memory sink (small state); every O(N)-output drain
+    writes files executor-side.
     """
     from ..tables import load
 
@@ -202,32 +169,14 @@ def stream_enrich_static_dim(
             F.col("c_nationkey").alias("nation_key"),
         )
     )
-    enriched = events.join(dim, "user_id", "inner").select(
-        "event_id", "user_id", "event_type", "ts", "customer_name", "nation_key"
-    )
-    if output_dir is not None:
-        # Production sink shape: this stream emits O(|events|) rows
-        # (a pass-through enrichment, not an aggregate), so a memory
-        # sink serializes the whole corpus through the driver — at the
-        # sf1 probe that single-threaded collect was 10 of the 11 s,
-        # and at 10x it is a driver OOM. Aggregating drains keep the
-        # memory sink (small state); every O(N)-output drain writes
-        # files executor-side.
-        return (
-            enriched.writeStream.format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", output_dir + "/_checkpoint")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    return (
-        enriched.writeStream.format("memory")
-        .queryName(query_name)
+    cols = ["event_id", "user_id", "event_type", "ts", "customer_name", "nation_key"]
+    enriched = events.join(dim, "user_id", "inner").select(cols)
+    drain(
+        enriched.writeStream.format("parquet")
+        .option("path", output_dir)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
+    return spark.read.parquet(output_dir).select(cols)
 
 
 def stream_dedupe_within_watermark(
@@ -252,46 +201,47 @@ def stream_dedupe_within_watermark(
     deduped = at_least_once.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    return (
-        deduped.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_table(deduped, query_name, sf_dir)
 
 
-def stream_sliding_counts(
-    spark: SparkSession, sf_dir: str, query_name: str = "sliding_counts"
+def stream_view_purchase_join(
+    spark: SparkSession, sf_dir: str, how: str, query_name: str
 ):
-    """SLIDING 2h windows advancing 1h (every event lands in exactly
-    two windows), 2h watermark, availableNow drain into a memory
-    sink. The overlapping-window shape `stream_hourly_counts` can't
-    express. Returns the StreamingQuery."""
-    events = _with_event_time(_event_stream(spark, sf_dir))
-    agg = (
-        events.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "2 hours", "1 hour"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias(
-                "total_value"
-            ),
+    """Stream-stream interval join of each view to the same user's
+    purchases in ``(view_ts, view_ts + 1h]``, both sides watermarked
+    2h, as join type ``how`` ("inner", "left_outer", "full_outer").
+    In a full outer join an unmatched purchase has no view, so
+    ``user_id`` comes from whichever side is present."""
+
+    def side(event_type: str, id_col: str, user_col: str, ts_col: str):
+        return (
+            _with_event_time(_event_stream(spark, sf_dir))
+            .filter(F.col("event_type") == event_type)
+            .select(
+                F.col("event_id").alias(id_col),
+                F.col("user_id").alias(user_col),
+                F.col("ts").alias(ts_col),
+            )
+            .withWatermark(ts_col, "2 hours")
         )
-        .select(
-            F.col("window.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-    return (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
+
+    views = side("view", "view_id", "user_id", "view_ts")
+    purchases = side("purchase", "purchase_id", "p_user_id", "purchase_ts")
+    user = F.col("user_id")
+    if how == "full_outer":
+        user = F.coalesce(user, F.col("p_user_id")).alias("user_id")
+    joined = views.join(
+        purchases,
+        F.expr(
+            """
+            user_id = p_user_id
+            AND purchase_ts > view_ts
+            AND purchase_ts <= view_ts + INTERVAL 1 HOUR
+            """
+        ),
+        how,
+    ).select("view_id", "purchase_id", user, "view_ts", "purchase_ts")
+    return drain_table(joined, query_name, sf_dir)
 
 
 def stream_session_windows_dynamic(
@@ -325,10 +275,4 @@ def stream_session_windows_dynamic(
             "n_purchases",
         )
     )
-    return (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_table(agg, query_name, sf_dir, "complete")

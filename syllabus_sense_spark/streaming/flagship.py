@@ -50,14 +50,15 @@ def stream_flagship_drain(
     spark: SparkSession, elements_dir: str, out_dir: str, checkpoint_dir: str
 ):
     """Drain all pending element files through the flagship chain into
-    a partitioned parquet sink; returns the StreamingQuery (call
-    ``awaitTermination()``; ``availableNow`` stops it when drained).
+    a partitioned parquet sink (``streaming.drain``; a second call on
+    the same checkpoint processes only files added since).
 
     The sink is the exactly-once writer: batch-id-keyed dynamic
     partition overwrite + commit ledger, so a micro-batch replayed
     after a crash between data write and checkpoint commit overwrites
     its own partition instead of appending a duplicate (the failure
     mode the reference's read-modify-write sink had, SURVEY.md §3)."""
+    from .drain import drain
     from .exactly_once import idempotent_batch_writer
 
     write_batch = idempotent_batch_writer(
@@ -69,12 +70,9 @@ def stream_flagship_drain(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         write_batch(flagship_from_elements(batch_df), batch_id)
 
-    return (
-        element_stream(spark, elements_dir)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        element_stream(spark, elements_dir).writeStream.foreachBatch(process_batch),
+        checkpoint_dir,
     )
 
 

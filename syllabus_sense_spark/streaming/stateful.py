@@ -19,6 +19,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .drain import drain, drain_table
 from .events import _event_stream
 
 OUTPUT_SCHEMA = T.StructType(
@@ -70,7 +71,7 @@ def stream_first_seen_dedupe(
     spark: SparkSession, sf_dir: str, query_name: str = "first_seen"
 ):
     """Drain the event stream, emitting each user's first event of
-    each type. Returns the StreamingQuery (memory sink)."""
+    each type. Returns the drained memory table."""
     events = _event_stream(spark, sf_dir).select("user_id", "event_type", "event_id")
     deduped = events.groupBy("user_id").applyInPandasWithState(
         _dedupe,
@@ -79,13 +80,7 @@ def stream_first_seen_dedupe(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return (
-        deduped.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_table(deduped, query_name, sf_dir)
 
 
 def stream_first_seen_dedupe_dir(
@@ -96,8 +91,8 @@ def stream_first_seen_dedupe_dir(
     SURVIVE a stop/restart via the checkpoint, so re-delivered or
     late-arriving events never re-emit a (user, type) pair — the
     exactly-once contract of the reference's State threading, held
-    across process restarts. One row per file-batch drain:
-    ``trigger(availableNow=True)`` then restart later for new files."""
+    across process restarts. Each call drains the files present and
+    returns the sink; call again later for new files."""
     from pyspark.sql import functions as F
 
     raw = (
@@ -116,14 +111,13 @@ def stream_first_seen_dedupe_dir(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return (
+    drain(
         deduped.writeStream.format("parquet")
         .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        checkpoint_dir,
     )
+    return spark.read.parquet(out_dir)
 
 
 # --- running per-key counters (batch-invariant final state) ---------------
@@ -174,7 +168,7 @@ def stream_running_counts(
     spark: SparkSession, sf_dir: str, query_name: str = "running_counts"
 ):
     """Drain the event stream through the running-counter operator
-    into a memory sink. Returns the StreamingQuery."""
+    into a memory sink. Returns the drained table."""
     events = _event_stream(spark, sf_dir).select("user_id", "event_type")
     counts = events.groupBy("user_id").applyInPandasWithState(
         _running_counts,
@@ -183,10 +177,4 @@ def stream_running_counts(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return (
-        counts.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_table(counts, query_name, sf_dir, "update")

@@ -84,9 +84,10 @@ class RunningUserStats(StatefulProcessor):
 def stream_running_user_stats(
     spark: SparkSession, sf_dir: str, query_name: str = "running_user_stats"
 ):
-    """Drain the event stream through the processor (memory sink,
-    availableNow). The last emitted row per user equals the batch
-    groupBy count/sum — asserted in tests."""
+    """Drain the event stream through the processor into a memory
+    table and return it. The last emitted row per user equals the
+    batch groupBy count/sum — asserted in tests."""
+    from .drain import drain_table
     from .events import _event_stream
 
     if not protobuf_available():
@@ -103,8 +104,9 @@ def stream_running_user_stats(
         timeMode="None",
     )
     # transformWithState requires the RocksDB state store; the conf is
-    # pinned into the query at start, so scope the override to it and
-    # restore the session default for the HDFS-backed operators.
+    # pinned into the query at start, so scope the override to the
+    # drain and restore the session default for the HDFS-backed
+    # operators.
     key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(key, None)
     spark.conf.set(
@@ -112,13 +114,7 @@ def stream_running_user_stats(
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        return (
-            stats.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
+        return drain_table(stats, query_name, sf_dir, "update")
     finally:
         if prev is None:
             spark.conf.unset(key)

@@ -24,6 +24,7 @@ def test_stream_drain_publishes_epoch_shards(spark):
     from syllabus_sense_spark.sources.jsonl_datasource import (
         register_jsonl_sink,
     )
+    from syllabus_sense_spark.streaming.drain import drain
 
     register_jsonl_sink(spark)
     out = tempfile.mkdtemp(prefix="jsonl_stream_sink_")
@@ -34,16 +35,13 @@ def test_stream_drain_publishes_epoch_shards(spark):
         "overwrite"
     ).parquet(src)
 
-    q = (
+    drain(
         spark.readStream.schema("id long, trip long")
         .parquet(src)
         .writeStream.format("jsonl_sink")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("path", out),
+        ckpt,
     )
-    assert q.awaitTermination(120), "stream drain timed out"
 
     rows = _read_rows(out)
     assert sorted(r["id"] for r in rows) == list(range(50))

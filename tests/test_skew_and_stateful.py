@@ -32,11 +32,9 @@ def test_salted_join_matches_plain_join(spark, sf_dir):
 
 
 def test_stateful_first_seen_dedupe(spark, sf_dir):
-    q = stream_first_seen_dedupe(spark, sf_dir, query_name="t_firstseen")
-    q.awaitTermination(180)
     streamed = {
         (r.user_id, r.event_type): r.first_event_id
-        for r in spark.sql("SELECT * FROM t_firstseen").collect()
+        for r in stream_first_seen_dedupe(spark, sf_dir, "t_firstseen").collect()
     }
     e = load(spark, sf_dir, "events")
     batch = {
@@ -73,9 +71,7 @@ def test_stateful_dedupe_state_survives_restart(spark, sf_dir, tmp_path):
             "event_type", "value", "props",
         ).coalesce(1).write.mode("overwrite").parquet(events_dir)
     )
-    q1 = stream_first_seen_dedupe_dir(spark, events_dir, out_dir, ckpt)
-    q1.awaitTermination(300)
-    run1 = spark.read.parquet(out_dir)
+    run1 = stream_first_seen_dedupe_dir(spark, events_dir, out_dir, ckpt)
     pairs1 = {(r.user_id, r.event_type) for r in run1.collect()}
     assert len(pairs1) == run1.count()  # no dup pairs within run 1
 
@@ -86,8 +82,7 @@ def test_stateful_dedupe_state_survives_restart(spark, sf_dir, tmp_path):
             "event_type", "value", "props",
         ).coalesce(1).write.mode("append").parquet(events_dir)
     )
-    q2 = stream_first_seen_dedupe_dir(spark, events_dir, out_dir, ckpt)
-    q2.awaitTermination(300)
+    stream_first_seen_dedupe_dir(spark, events_dir, out_dir, ckpt)
 
     spark.catalog.clearCache()
     final = spark.read.parquet(out_dir)
@@ -112,10 +107,8 @@ def test_transform_with_state_running_stats(spark, sf_dir):
     if not protobuf_available():
         pytest.skip("google.protobuf not available in this runtime")
 
-    q = stream_running_user_stats(spark, sf_dir, query_name="t_runstats")
-    q.awaitTermination(180)
     # Update mode may emit a row per batch; keep each user's last.
-    rows = spark.sql("SELECT * FROM t_runstats").collect()
+    rows = stream_running_user_stats(spark, sf_dir, "t_runstats").collect()
     streamed = {}
     for r in rows:
         streamed[r.user_id] = (r.n_events, r.total_value)
@@ -137,7 +130,7 @@ def test_state_partitions_sizes_by_input_and_restores(spark, sf_dir):
     """state_partitions pins the stream's state-store partition count
     to clamp(rows/250k, 8, 256) inside the block and restores the
     session value on exit — including on error."""
-    from syllabus_sense_spark.streaming.events import state_partitions
+    from syllabus_sense_spark.streaming.drain import state_partitions
 
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)

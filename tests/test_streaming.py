@@ -6,18 +6,16 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from syllabus_sense_spark.streaming import (
-    stream_hourly_counts,
     stream_session_windows,
+    stream_window_counts,
 )
 from syllabus_sense_spark.tables import load
 
 
 def test_stream_hourly_matches_batch(spark, sf_dir):
-    q = stream_hourly_counts(spark, sf_dir, query_name="t_hourly")
-    q.awaitTermination(120)
     streamed = {
         (r.window_start, r.event_type): (r.n_events, r.total_value)
-        for r in spark.sql("SELECT * FROM t_hourly").collect()
+        for r in stream_window_counts(spark, sf_dir, "t_hourly", "1 hour").collect()
     }
     e = load(spark, sf_dir, "events")
     batch = {
@@ -37,11 +35,9 @@ def test_stream_hourly_matches_batch(spark, sf_dir):
 
 
 def test_stream_sessions_match_batch_native(spark, sf_dir):
-    q = stream_session_windows(spark, sf_dir, query_name="t_sessions")
-    q.awaitTermination(120)
     streamed = {
         (r.user_id, r.session_start, r.session_end): r.n_events
-        for r in spark.sql("SELECT * FROM t_sessions").collect()
+        for r in stream_session_windows(spark, sf_dir, "t_sessions").collect()
     }
     e = load(spark, sf_dir, "events")
     batch = {
@@ -96,23 +92,25 @@ def test_dedupe_within_watermark_exactly_distinct(spark, sf_dir):
     from syllabus_sense_spark.streaming.events import stream_dedupe_within_watermark
     from syllabus_sense_spark.tables import load
 
-    q = stream_dedupe_within_watermark(spark, sf_dir, query_name="dedup_wm_t")
-    q.awaitTermination(300)
-    got = spark.sql("SELECT COUNT(*) AS n, COUNT(DISTINCT event_id) AS d FROM dedup_wm_t").collect()[0]
+    got = (
+        stream_dedupe_within_watermark(spark, sf_dir, "dedup_wm_t")
+        .selectExpr("COUNT(*) AS n", "COUNT(DISTINCT event_id) AS d")
+        .collect()[0]
+    )
     want = load(spark, sf_dir, "events").select("event_id").distinct().count()
     assert got.n == got.d == want
 
 
-def test_stream_static_enrich_matches_batch(spark, sf_dir):
+def test_stream_static_enrich_matches_batch(spark, sf_dir, tmp_path):
     """Stream-static broadcast dimension join equals the batch join
     (stateless per micro-batch, inner/miss-drop semantics)."""
     from syllabus_sense_spark.streaming import stream_enrich_static_dim
 
-    q = stream_enrich_static_dim(spark, sf_dir, query_name="t_enrich")
-    q.awaitTermination(120)
     streamed = {
         (r.event_id, r.customer_name, r.nation_key)
-        for r in spark.sql("SELECT * FROM t_enrich").collect()
+        for r in stream_enrich_static_dim(
+            spark, sf_dir, str(tmp_path / "enrich")
+        ).collect()
     }
     e = load(spark, sf_dir, "events")
     c = load(spark, sf_dir, "customer").select(

@@ -36,13 +36,7 @@ def test_stream_drain_matches_batch(spark, sf_dir, tmp_path):
     )
 
     out_dir = str(tmp_path / "questions")
-    q = stream_flagship_drain(
-        spark,
-        elements_dir,
-        out_dir,
-        str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(300)
+    stream_flagship_drain(spark, elements_dir, out_dir, str(tmp_path / "ckpt"))
 
     # Partition-pruned read back; topic is a partition column.
     streamed = spark.read.parquet(out_dir)
@@ -72,12 +66,10 @@ def test_stream_drain_restart_is_exactly_once(spark, sf_dir, tmp_path):
     out_dir = str(tmp_path / "questions")
     ckpt = str(tmp_path / "ckpt")
 
-    q1 = stream_flagship_drain(spark, elements_dir, out_dir, ckpt)
-    q1.awaitTermination(300)
+    stream_flagship_drain(spark, elements_dir, out_dir, ckpt)
     n_first = spark.read.parquet(out_dir).count()
 
-    q2 = stream_flagship_drain(spark, elements_dir, out_dir, ckpt)
-    q2.awaitTermination(300)
+    stream_flagship_drain(spark, elements_dir, out_dir, ckpt)
     n_second = spark.read.parquet(out_dir).count()
 
     assert n_first > 0
